@@ -1,0 +1,1 @@
+"""Fileflow benchmark: workloads, tracing and output checks (see README.md)."""
