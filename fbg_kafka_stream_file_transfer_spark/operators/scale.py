@@ -21,6 +21,8 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from .publish import _best_effort_delete, _hadoop_fs, recover_all, replace_dir
+
 
 def salted_agg(
     df: DataFrame,
@@ -820,13 +822,15 @@ def merge_into_partitioned(
       untouched. The publish RENAMES each staged partition directory
       into place (one data write per merge, r17; the old path
       re-read staging and dynamic-overwrote, writing every merged
-      byte twice). A crash DURING the publish is torn at partition
-      granularity — the same guarantee class dynamic overwrite gave;
-      recovery = re-run, the merge is idempotent. Renames and
-      partition-directory deletion go through the Hadoop FileSystem
-      API, so they work on any Spark-supported store (local, HDFS,
-      S3A — where rename is a copy, the per-partition window equals
-      the old overwrite's), not just the local FS.
+      byte twice). Each partition flips via ``publish.replace_dir``
+      (an emptied one is moved aside, then deleted), so a crash DURING
+      the publish is torn at partition granularity, each partition
+      old-or-new. A failed publish keeps the staging and aside dirs;
+      the next merge recovers under the table lock, and re-running the
+      failed one converges for upsert/delete merges (not for a
+      ``when_matched_update`` computed from the target row). All of it
+      goes through the Hadoop FileSystem API (local, HDFS, S3A — where
+      rename is a copy, the window equals the old overwrite's).
     - MANIFEST table (created via ``table.ManifestTable.create``;
       detected by ``_manifests/``): the publish is an atomic
       manifest/pointer swap — a reader sees the whole previous version
@@ -924,11 +928,8 @@ def merge_into_partitioned(
             " schema) — use the locked path (optimistic=False) to"
             " evolve"
         )
-    from .table import (
-        engine_sql_semantics,
-        is_manifest_table,
-        table_write_lock,
-    )
+    from ..session import ENGINE_SQL_CONF, scoped_conf
+    from .table import is_manifest_table, table_write_lock
 
     if optimistic:
         # OPTIMISTIC mode (manifest tables only): stage the whole
@@ -946,7 +947,7 @@ def merge_into_partitioned(
                 f"optimistic merge needs a manifest-committed table: "
                 f"{path} (create it via ManifestTable.create)"
             )
-        with engine_sql_semantics(spark):
+        with scoped_conf(spark, ENGINE_SQL_CONF):
             return _merge_into_manifest_optimistic(
                 spark, path, updates, key_cols, partition_cols,
                 op_col, delete_op, ts_col, tiebreak_cols,
@@ -960,7 +961,7 @@ def merge_into_partitioned(
     fs, jroot = _hadoop_fs(spark, path)
     root_existed = bool(fs.exists(jroot))
     try:
-        with engine_sql_semantics(spark), table_write_lock(
+        with scoped_conf(spark, ENGINE_SQL_CONF), table_write_lock(
             spark,
             path,
             holder="merge",
@@ -1055,6 +1056,16 @@ def _merge_into_plain(
     Caller holds the table write lock."""
     import functools
     import operator
+
+    staging = f"{path}/_merge_staging"
+    _, jstaging = _hadoop_fs(spark, staging)
+    if fs.exists(jstaging):
+        # a previous publish failed or died: put back what it left
+        # moved aside BEFORE anything reads the table (a missing
+        # partition would re-merge without its survivors). Only such
+        # publishes leave staging behind, so clean tables skip the walk.
+        recover_all(spark, path, depth=len(partition_cols))
+        _best_effort_delete(spark, staging)
 
     # --- snapshot the delta FIRST: write the raw updates to a staging
     # dir so the delta plan is evaluated EXACTLY ONCE. Without the
@@ -1189,22 +1200,12 @@ def _merge_into_plain(
             tiebreak_cols, clauses=clauses,
         )
 
-        staging = f"{path}/_merge_staging"
         # ONE data write (r17): the merged rows are staged already
         # PARTITIONED (hive layout mirrored under _merge_staging), and
         # the publish MOVES each staged partition directory into place
-        # instead of re-reading staging and dynamic-overwriting — the
-        # old staged-write-then-overwrite path wrote every merged byte
-        # twice. The crash contract is unchanged in class: a crash
-        # before the first rename leaves the table untouched (readers
-        # skip underscore dirs); a crash mid-publish is torn at
-        # PARTITION granularity, exactly the dynamic-overwrite
-        # guarantee this path always documented — each partition flips
-        # atomically on rename-capable stores (local/HDFS), and on
-        # rename-as-copy stores (S3A) the window equals the old
-        # per-partition overwrite window. Recovery = re-run (the merge
-        # is idempotent). The written partition set rides the staging
-        # write as an observed metric.
+        # (crash contract: merge_into_partitioned's docstring). The
+        # written partition set rides the staging write as an observed
+        # metric.
         _stage_obs = Observation()
         merged.observe(
             _stage_obs,
@@ -1212,54 +1213,56 @@ def _merge_into_plain(
         ).write.mode("overwrite").partitionBy(*partition_cols).parquet(
             staging
         )
-        try:
-            written = {
-                tuple(p[c] for c in partition_cols)
-                for p in _stage_obs.get["_parts"]
-            }
-            n_moved = _publish_staged_partitions(
-                spark, staging, path, len(partition_cols)
+        written = {
+            tuple(p[c] for c in partition_cols)
+            for p in _stage_obs.get["_parts"]
+        }
+        leaves = _staged_leaves(spark, staging, len(partition_cols))
+        if len(leaves) != len(written):
+            raise RuntimeError(
+                f"merge staging {staging} holds {len(leaves)} partition"
+                f" dirs but the staging write observed {len(written)}"
+                " written partitions; nothing was published — re-run"
+                " the merge"
             )
-            if n_moved != len(written):
-                raise RuntimeError(
-                    f"merge publish moved {n_moved} staged partition"
-                    f" dirs but the staging write observed"
-                    f" {len(written)} written partitions — staging is"
-                    f" inconsistent; re-run the merge (idempotent)"
-                )
-            # the publish never touches a partition with no staged
-            # rows — an EMPTIED partition must be deleted explicitly
-            # or its old files silently survive. Failures here raise
-            # WITH the partition list: the batch must fail loudly
-            # (re-running the merge is idempotent; swallowing would
-            # silently resurrect deleted rows).
-            failed = []
-            for t in touched:
-                if t in written:
-                    continue
-                try:
-                    _delete_partition_dir(spark, path, partition_cols, t)
-                except Exception as exc:  # noqa: BLE001 — re-raised below
-                    failed.append((t, str(exc)))
-            if failed:
-                raise RuntimeError(
-                    "merge committed but could not delete emptied "
-                    f"partition dirs {failed}; their old rows are still "
-                    "readable — fix store delete permissions and re-run "
-                    "the merge (idempotent)"
-                )
-            if not written and _table_has_no_partitions(spark, path):
-                # the merge deleted the LAST partition: a root holding
-                # only _SUCCESS/_merge markers is unreadable
-                # (UNABLE_TO_INFER_SCHEMA) and would wedge every later
-                # read — clear it so "empty table" is uniformly "table
-                # absent" (the sink's bootstrap recreates it). The HELD
-                # LOCK file is preserved (r9 review); the now-empty
-                # root is removed after release by the caller's final
-                # empty-dir sweep.
-                _clear_root_keep_lock(fs, jroot)
-        finally:
-            _best_effort_delete(spark, staging)
+        # the publish never touches a partition with no staged rows —
+        # an EMPTIED partition is removed explicitly (moved aside, then
+        # deleted) or its old files silently survive
+        emptied = [t for t in touched if t not in written]
+        done: list[str] = []
+        try:
+            for rel in leaves:
+                replace_dir(spark, f"{staging}/{rel}", f"{path}/{rel}")
+                done.append(rel)
+            for t in emptied:
+                _delete_partition_dir(spark, path, partition_cols, t)
+                done.append(f"emptied {t}")
+        except Exception as exc:
+            raise RuntimeError(
+                f"merge publish into {path} failed after {len(done)} of"
+                f" {len(leaves) + len(emptied)} partition swaps ({exc})."
+                f" Published: {done}. Every other touched partition"
+                " keeps its pre-merge rows; one caught mid-swap is"
+                " parked beside itself as a hidden '.<dir>.stale' copy"
+                " that the next merge into this table puts back (it"
+                " recovers under the table lock first). The unpublished"
+                f" merged partitions stay in {staging} until then."
+                " Re-running this merge converges for upsert/delete"
+                " merges only: a when_matched_update computed from the"
+                " target row (e.g. n = t.n + 1) would apply twice to the"
+                " published partitions."
+            ) from exc
+        if not written and _table_has_no_partitions(spark, path):
+            # the merge deleted the LAST partition: a root holding
+            # only _SUCCESS/_merge markers is unreadable
+            # (UNABLE_TO_INFER_SCHEMA) and would wedge every later
+            # read — clear it so "empty table" is uniformly "table
+            # absent" (the sink's bootstrap recreates it). The HELD
+            # LOCK file is preserved (r9 review); the now-empty
+            # root is removed after release by the caller's final
+            # empty-dir sweep.
+            _clear_root_keep_lock(fs, jroot)
+        _best_effort_delete(spark, staging)
         return len(touched)
     finally:
         # staging dirs are non-semantic; a cleanup failure must not
@@ -2071,29 +2074,12 @@ def _reject_empty_string_partitions(
                 )
 
 
-def _best_effort_delete(spark: SparkSession, path: str) -> None:
-    try:
-        fs, jpath = _hadoop_fs(spark, path)
-        fs.delete(jpath, True)
-    except Exception:  # noqa: BLE001 — best-effort by contract
-        pass
-
-
 def _dir_is_empty(spark: SparkSession, path: str) -> bool:
     try:
         fs, jpath = _hadoop_fs(spark, path)
         return bool(fs.exists(jpath)) and len(fs.listStatus(jpath)) == 0
     except Exception:  # noqa: BLE001
         return False
-
-
-def _hadoop_fs(spark: SparkSession, path: str):
-    """(FileSystem, Path) for ``path`` via the Hadoop API — the same
-    resolution Spark's own writers use, so this works on any
-    Spark-supported store (file://, HDFS, S3A), not just the local
-    FS. Shared by the merge helpers and streaming/merge_sink.py."""
-    jpath = spark._jvm.org.apache.hadoop.fs.Path(path)
-    return jpath.getFileSystem(spark._jsc.hadoopConfiguration()), jpath
 
 
 def _partition_value_matches(val, raw: str) -> bool:
@@ -2147,81 +2133,54 @@ def _table_has_no_partitions(spark: SparkSession, path: str) -> bool:
     if not fs.exists(jpath):
         return False
     for status in fs.listStatus(jpath):
-        if "=" in status.getPath().getName():
+        name = status.getPath().getName()
+        if "=" in name and not name.startswith("."):
             return False
     return True
 
 
-def _publish_staged_partitions(
-    spark: SparkSession, staging: str, dest: str, depth: int
-) -> int:
-    """Move every staged leaf partition directory (``col=value``
-    nesting, ``depth`` levels) from ``staging`` into the matching
-    relative path under ``dest``, replacing any existing directory.
-    Returns the number of leaf directories moved.
-
-    Directory names are mirrored VERBATIM (no unescape/re-escape round
-    trip — the staged names came out of the same Spark writer that
-    produced the table's, so `%XX` escapes and
-    ``__HIVE_DEFAULT_PARTITION__`` match byte-for-byte). Renames go
-    through the Hadoop FileSystem API, so the publish works on any
-    Spark-supported store; each leaf flips atomically where the store's
-    rename is atomic (local/HDFS)."""
+def _staged_leaves(spark: SparkSession, staging: str, depth: int) -> list[str]:
+    """Relative paths of the leaf partition directories (``col=value``
+    nesting, ``depth`` levels) under ``staging``. Names are kept
+    VERBATIM (no unescape/re-escape round trip — the staged names came
+    out of the same Spark writer that produced the table's, so ``%XX``
+    escapes and ``__HIVE_DEFAULT_PARTITION__`` match byte-for-byte)."""
     fs, jstag = _hadoop_fs(spark, staging)
-    _, jdest = _hadoop_fs(spark, dest)
-    jpath_cls = spark._jvm.org.apache.hadoop.fs.Path
 
-    def _leaves(jdir, level: int, rel: str) -> list[tuple]:
+    def _walk(jdir, level: int, rel: str) -> list[str]:
         out = []
         for status in fs.listStatus(jdir):
             name = status.getPath().getName()
             if not status.isDirectory() or "=" not in name:
                 continue  # _SUCCESS and committer leftovers
             r = f"{rel}/{name}" if rel else name
-            if level == 1:
-                out.append((status.getPath(), r))
-            else:
-                out.extend(_leaves(status.getPath(), level - 1, r))
+            out.extend(
+                [r] if level == 1 else _walk(status.getPath(), level - 1, r)
+            )
         return out
 
-    moved = 0
-    for src, rel in _leaves(jstag, depth, ""):
-        dst = jpath_cls(jdest, rel)
-        if fs.exists(dst):
-            fs.delete(dst, True)
-        parent = dst.getParent()
-        if not fs.exists(parent):
-            fs.mkdirs(parent)
-        if not fs.rename(src, dst):
-            raise RuntimeError(
-                f"merge publish could not rename staged partition"
-                f" {src} into {dst}; the table is torn at partition"
-                " granularity — fix store permissions and re-run the"
-                " merge (idempotent)"
-            )
-        moved += 1
-    return moved
+    return _walk(jstag, depth, "")
 
 
 def _delete_partition_dir(
     spark: SparkSession, path: str, partition_cols: list[str], values: tuple
 ) -> None:
-    """Locate and recursively delete ``path/col1=v1/col2=v2/...``
-    through the Hadoop FileSystem API. Directory names are matched
-    UNESCAPED (Spark percent-escapes special characters in partition
-    values); a missing level means the partition never existed and
-    nothing is deleted."""
+    """Locate ``path/col1=v1/col2=v2/...`` and remove it through
+    ``publish.replace_dir`` (moved aside, then deleted). Directory
+    names are matched UNESCAPED (Spark percent-escapes special
+    characters in partition values); a missing level means the
+    partition never existed and nothing is removed."""
     import urllib.parse
 
-    fs, jpath = _hadoop_fs(spark, path)
-    cur = jpath
+    fs, cur = _hadoop_fs(spark, path)
+    dest = path
     for col, val in zip(partition_cols, values):
         if not fs.isDirectory(cur):
             return
         hit = None
         for status in fs.listStatus(cur):
             name = status.getPath().getName()
-            if "=" not in name:
+            if "=" not in name or name.startswith("."):
                 continue
             c, _, raw = name.partition("=")
             if c == col and _partition_value_matches(
@@ -2231,5 +2190,5 @@ def _delete_partition_dir(
                 break
         if hit is None:
             return
-        cur = hit
-    fs.delete(cur, True)
+        cur, dest = hit, f"{dest}/{hit.getName()}"
+    replace_dir(spark, None, dest)

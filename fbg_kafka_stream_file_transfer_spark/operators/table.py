@@ -25,13 +25,15 @@ what a plain-parquet store needs:
   Readers therefore see old-or-new, never mixed — the property
   dynamic partition overwrite cannot give.
 
-The same swap discipline as streaming/pipeline.py's
-``ParquetSwapBufferStore`` (write-new-then-swap with crash adoption),
-generalized: the buffer store swaps a whole directory because the
-buffer is small; a 100 TB table cannot be re-written per commit, so
-the swap moves to the METADATA (pointer) and the data is shared
-across versions via the manifest — commit cost is O(touched
-partitions), identical to the dynamic-overwrite path.
+The same write-new-then-swap discipline as the directories the
+engine replaces whole (operators/publish.py: the retry and deferred
+buffers, plain-layout partitions), moved to the METADATA: a 100 TB
+table cannot be re-written per commit, so the swap is the pointer's
+and the data is shared across versions via the manifest — commit
+cost is O(touched partitions), identical to the dynamic-overwrite
+path. Manifests, shards and the pointer land via
+``publish.publish_file``; a staged generation via
+``publish.replace_dir``.
 
 Single-writer lease: ``table_write_lock`` takes ``<path>/_lock`` via
 Hadoop ``FileSystem.create(path, overwrite=false)`` (atomic on HDFS;
@@ -62,7 +64,10 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from .scale import _hadoop_fs, _partition_value_matches
+from ..session import ENGINE_SQL_CONF, scoped_conf
+from .publish import _best_effort_delete, _hadoop_fs, discard, publish_file
+from .publish import _write_small_file, replace_dir  # noqa: F401 (re-export)
+from .scale import _partition_value_matches
 
 _MANIFEST_DIR = "_manifests"
 _POINTER = "_latest"
@@ -82,15 +87,6 @@ class CheckConstraintViolation(ValueError):
     partition guard)."""
 
 
-def _write_small_file(spark: SparkSession, path: str, text: str) -> None:
-    fs, jpath = _hadoop_fs(spark, path)
-    out = fs.create(jpath, True)
-    try:
-        out.write(bytearray(text.encode("utf-8")))
-    finally:
-        out.close()
-
-
 def _read_small_file(spark: SparkSession, path: str) -> str | None:
     fs, jpath = _hadoop_fs(spark, path)
     if not fs.exists(jpath):
@@ -102,40 +98,6 @@ def _read_small_file(spark: SparkSession, path: str) -> str | None:
         )
     finally:
         stream.close()
-
-
-_ANSI_KEY = "spark.sql.ansi.enabled"
-
-
-@contextmanager
-def engine_sql_semantics(spark: SparkSession):
-    """Scope the engine's DOCUMENTED expression semantics (ANSI off:
-    NULL-on-error arithmetic, wrap-on-overflow explicit casts —
-    session.py) around DML/merge expression evaluation, independent of
-    the CALLER's session conf. Queries run on whatever SparkSession the
-    caller passes; on Spark 4 that defaults to ANSI ON, under which the
-    documented lossy-cast opt-in (``cast(bigint as int)`` wrap) raises
-    CAST_OVERFLOW at the commit write instead (r16 verdict,
-    dml_cast_guard). Cast/arithmetic eval modes are baked into
-    expressions when the DataFrame is analyzed, so the scope must cover
-    expression construction as well as the commit action; the caller's
-    value is restored on exit. Re-entrant and a no-op when the session
-    is already ANSI-off."""
-    try:
-        old = spark.conf.get(_ANSI_KEY)
-    except Exception:
-        old = None
-    if old is not None and str(old).lower() == "false":
-        yield
-        return
-    spark.conf.set(_ANSI_KEY, "false")
-    try:
-        yield
-    finally:
-        if old is None:
-            spark.conf.unset(_ANSI_KEY)
-        else:
-            spark.conf.set(_ANSI_KEY, old)
 
 
 @contextmanager
@@ -3934,8 +3896,7 @@ class ManifestTable:
                 set(carry_files) - {_partition_key(t) for t in touched}
             )
             if stray:
-                fs, jstage = _hadoop_fs(self.spark, f"{self.path}/{rel}")
-                fs.delete(jstage, True)
+                _best_effort_delete(self.spark, f"{self.path}/{rel}")
                 raise ValueError(
                     f"carry_files key(s) {stray} are not in the"
                     " touched partition set — every carrying"
@@ -3958,8 +3919,7 @@ class ManifestTable:
                     f"staged commit for {self.path}",
                 )
             except CheckConstraintViolation:
-                fs, jstage = _hadoop_fs(self.spark, f"{self.path}/{rel}")
-                fs.delete(jstage, True)
+                _best_effort_delete(self.spark, f"{self.path}/{rel}")
                 raise
         # stats run here, against the STAGING dir, outside the lease
         # (values are keyed by partition VALUE, so the later rename
@@ -4085,16 +4045,12 @@ class ManifestTable:
                 else self._keep_current_retain(version)
             )
             gen_rel = f"{_DATA_DIR}/g{version:08d}"
-            fs, jgen = _hadoop_fs(self.spark, f"{self.path}/{gen_rel}")
-            _, jstage = _hadoop_fs(
-                self.spark, f"{self.path}/{staged['rel']}"
+            # replaces the husk of a crashed prior commit, if any
+            replace_dir(
+                self.spark,
+                f"{self.path}/{staged['rel']}",
+                f"{self.path}/{gen_rel}",
             )
-            fs.delete(jgen, True)  # husk of a crashed prior commit
-            if not fs.rename(jstage, jgen):
-                raise IOError(
-                    f"could not promote staging {staged['rel']} to "
-                    f"{gen_rel}"
-                )
             self._finalize_generation(
                 gen_rel,
                 staged["staged_schema"],
@@ -4129,8 +4085,7 @@ class ManifestTable:
     def abort_staged(self, staged: dict) -> None:
         """Drop an un-committed staging generation (the loser's
         cleanup after a conflict)."""
-        fs, jstage = _hadoop_fs(self.spark, f"{self.path}/{staged['rel']}")
-        fs.delete(jstage, True)
+        discard(self.spark, f"{self.path}/{staged['rel']}")
 
     def _assert_rebase_safe(
         self, base: int, cur: int, our_keys: set[str]
@@ -5480,9 +5435,9 @@ class ManifestTable:
             # optimistic: the whole evaluation runs lock-free; only
             # commit_staged's publish contends (and may itself be
             # called assume_locked by a caller holding the lease)
-            with engine_sql_semantics(self.spark):
+            with scoped_conf(self.spark, ENGINE_SQL_CONF):
                 return _do(self.current_version())
-        with engine_sql_semantics(self.spark), table_write_lock(
+        with scoped_conf(self.spark, ENGINE_SQL_CONF), table_write_lock(
             self.spark,
             self.path,
             holder="dml",
@@ -6804,11 +6759,11 @@ class ManifestTable:
             # length check: trusting bare fs.exists would let a
             # truncated husk from a crashed writer satisfy the
             # content-address and publish a permanently unreadable
-            # version (external review r11). The write itself is
+            # version (external review r11). publish_file writes
             # tmp + rename so a crash can never leave a partial
             # file AT the content-addressed name; the rename
-            # replaces a corrupt husk atomically (same content —
-            # safe under a concurrent reader).
+            # replaces a corrupt husk (same content — safe under a
+            # concurrent reader).
             b, rel, body, raw = item
             jdst = jvm_path(f"{self.path}/{rel}")
             intact = (
@@ -6816,12 +6771,7 @@ class ManifestTable:
                 and fs.getFileStatus(jdst).getLen() == len(raw)
             )
             if not intact:
-                tmp = f"{self.path}/{_MANIFEST_DIR}/.{rel.split('/')[-1]}.tmp"
-                _write_small_file(self.spark, tmp, body)
-                _, jtmp = _hadoop_fs(self.spark, tmp)
-                fs.delete(jdst, False)  # truncated husk, if any
-                if not fs.rename(jtmp, jdst):
-                    raise IOError(f"could not publish entry shard {rel}")
+                publish_file(self.spark, f"{self.path}/{rel}", body)
 
         if len(work) <= 2:
             for item in work:
@@ -6943,25 +6893,18 @@ class ManifestTable:
         return out
 
     def _publish(self, version: int, man: dict) -> None:
-        """Manifest lands via tmp-write + rename; the pointer swaps
-        last. Crash anywhere → old version; crash inside the pointer
-        swap → highest-manifest fallback (``current_version``)."""
-        fs, _ = _hadoop_fs(self.spark, self.path)
-        man_rel = f"{_MANIFEST_DIR}/v{version:08d}.json"
-        tmp_rel = f"{_MANIFEST_DIR}/.v{version:08d}.json.tmp"
-        _write_small_file(self.spark, f"{self.path}/{tmp_rel}", json.dumps(man))
-        _, jtmp = _hadoop_fs(self.spark, f"{self.path}/{tmp_rel}")
-        _, jman = _hadoop_fs(self.spark, f"{self.path}/{man_rel}")
-        fs.delete(jman, False)  # idempotent re-publish after a crash
-        if not fs.rename(jtmp, jman):
-            raise IOError(f"could not publish manifest {man_rel}")
-        ptr_tmp = f"{self.path}/{_POINTER}.tmp"
-        _write_small_file(self.spark, ptr_tmp, f"v{version:08d}")
-        _, jptr_tmp = _hadoop_fs(self.spark, ptr_tmp)
-        _, jptr = _hadoop_fs(self.spark, f"{self.path}/{_POINTER}")
-        fs.delete(jptr, False)
-        if not fs.rename(jptr_tmp, jptr):
-            raise IOError(f"could not swap pointer for {self.path}")
+        """Manifest, then pointer, each via ``publish_file``. Crash
+        anywhere → old version; on a store whose rename cannot
+        overwrite, a crash inside the pointer swap → highest-manifest
+        fallback (``current_version``)."""
+        publish_file(
+            self.spark,
+            f"{self.path}/{_MANIFEST_DIR}/v{version:08d}.json",
+            json.dumps(man),
+        )
+        publish_file(
+            self.spark, f"{self.path}/{_POINTER}", f"v{version:08d}"
+        )
 
     def _gc_plan(self, version: int, retain_versions: int) -> dict | None:
         """What :meth:`_gc` WOULD delete for this retain window — THE

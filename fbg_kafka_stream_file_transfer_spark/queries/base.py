@@ -41,31 +41,22 @@ from ..sources.tables import load_table
 
 
 import os as _os
-from contextlib import contextmanager
 
-#: shuffle/state partition count for the streaming e2e fixtures. A
-#: stateful micro-batch query pins its state-store partitioning to
-#: spark.sql.shuffle.partitions at FIRST start; the e2e fixtures push a
-#: few thousand rows per batch, so 32 state partitions is pure per-batch
-#: task/commit overhead (measured: dedup 7.6→5.4 s, zscore 7.1→5.4 s,
-#: debounce 5.0→3.9 s at 8). Parameterized because the right production
-#: value follows STATE VOLUME (keys × state bytes; size like any
-#: shuffle, 2-3× executor cores), never the local core count.
-STREAM_SHUFFLE_PARTITIONS = _os.environ.get("SPARK_GRAFT_STREAM_SHUFFLE", "8")
-
-
-@contextmanager
-def stream_shuffle(spark: SparkSession):
-    """Scope ``spark.sql.shuffle.partitions`` to the streaming-fixture
-    value around a streaming query's start→drain window (the conf is
-    captured at ``.start()``); restores the caller's value after."""
-    key = "spark.sql.shuffle.partitions"
-    old = spark.conf.get(key)
-    spark.conf.set(key, STREAM_SHUFFLE_PARTITIONS)
-    try:
-        yield
-    finally:
-        spark.conf.set(key, old)
+#: shuffle/state partitions for the streaming e2e fixtures, scoped with
+#: ``session.scoped_conf`` around a streaming query's start→drain window
+#: (the conf is captured at ``.start()``). A stateful micro-batch query
+#: pins its state-store partitioning to spark.sql.shuffle.partitions at
+#: FIRST start; the e2e fixtures push a few thousand rows per batch, so
+#: 32 state partitions is pure per-batch task/commit overhead
+#: (measured: dedup 7.6→5.4 s, zscore 7.1→5.4 s, debounce 5.0→3.9 s at
+#: 8). Parameterized because the right production value follows STATE
+#: VOLUME (keys × state bytes; size like any shuffle, 2-3× executor
+#: cores), never the local core count.
+STREAM_SHUFFLE = {
+    "spark.sql.shuffle.partitions": _os.environ.get(
+        "SPARK_GRAFT_STREAM_SHUFFLE", "8"
+    )
+}
 
 
 def local_df(spark: SparkSession, rows, schema) -> DataFrame:

@@ -19,7 +19,8 @@ from ..operators import multimodal, retry
 from ..operators.extract import extract_documents, stub_extractor
 from ..operators.validate import with_validation
 from ..sources.tables import load_table
-from .base import Q, local_df, stream_shuffle
+from ..session import scoped_conf
+from .base import STREAM_SHUFFLE, Q, local_df
 from .envelope_q import ENV_CTE, REJECT_CASE
 
 
@@ -354,7 +355,7 @@ def _q_stream_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
         ext = "pdf" if r.doc_id % 4 else "exe"  # every 4th file hits the reject leg
         with open(f"{src}/doc-{r.doc_id}.{ext}", "w") as f:
             f.write(r.text)
-    with stream_shuffle(spark):
+    with scoped_conf(spark, STREAM_SHUFFLE):
         q = start_file_pipeline(spark, src, out, ckpt)
         try:
             q.processAllAvailable()
@@ -530,7 +531,7 @@ def _drain_stream(out: DataFrame, prefix: str, output_mode: str = "append"):
     sink = f"{prefix}_{uuid.uuid4().hex[:8]}"
     # state partitioning is pinned at .start() — scope it to the
     # fixture-sized value for every drained e2e stream (base.py)
-    with stream_shuffle(spark):
+    with scoped_conf(spark, STREAM_SHUFFLE):
         q = (
             out.writeStream.format("memory").queryName(sink)
             .outputMode(output_mode).start()
@@ -1392,7 +1393,7 @@ def _stream_cdc_merge(
         stream = _time_ordered_stream(
             spark, ev, epoch_seconds(F.col("ts")), work
         )
-        with stream_shuffle(spark):
+        with scoped_conf(spark, STREAM_SHUFFLE):
             q = start_changelog_merge_sink(
                 spark,
                 stream,
@@ -1504,7 +1505,7 @@ def _q_stream_table_changes_tail(
     feed = f"{work}/feed"
     try:
         ManifestTable(spark, path).create(ev, ["event_type"])
-        with stream_shuffle(spark):
+        with scoped_conf(spark, STREAM_SHUFFLE):
             q = start_table_changes_tail(spark, path, feed, f"{work}/ckpt")
         try:
             q.processAllAvailable()  # commit 1: initial snapshot
@@ -1640,7 +1641,7 @@ def _q_stream_feed_prune_tail(spark: SparkSession, sf_dir: str) -> DataFrame:
             spark, path, dele, ["event_id"], ["event_type"], op_col="op",
             retain_versions=10,
         )
-        with stream_shuffle(spark):
+        with scoped_conf(spark, STREAM_SHUFFLE):
             q = start_table_changes_tail(
                 spark, path, feed, f"{work}/ckpt",
                 max_versions_per_trigger=1, feed_retain_versions=1,
@@ -1748,7 +1749,7 @@ def _q_stream_ttl_retention(spark: SparkSession, sf_dir: str) -> DataFrame:
     table = f"{work}/state"
     try:
         stream = _time_ordered_stream(spark, ev, F.col("ets"), work)
-        with stream_shuffle(spark):
+        with scoped_conf(spark, STREAM_SHUFFLE):
             q = start_changelog_merge_sink(
                 spark,
                 stream,
@@ -1877,7 +1878,7 @@ def _q_stream_schema_evolution(
         stream = _time_ordered_stream(
             spark, streamed, F.col("ets"), work
         )
-        with stream_shuffle(spark):
+        with scoped_conf(spark, STREAM_SHUFFLE):
             q = start_changelog_merge_sink(
                 spark,
                 stream,
@@ -2016,7 +2017,7 @@ def _q_stream_type_widening(
         stream = _time_ordered_stream(
             spark, streamed, F.col("ets"), work
         )
-        with stream_shuffle(spark):
+        with scoped_conf(spark, STREAM_SHUFFLE):
             q = start_changelog_merge_sink(
                 spark,
                 stream,

@@ -15,6 +15,7 @@ settings below are chosen for 100 TB-scale behavior:
 from __future__ import annotations
 
 import os
+from contextlib import contextmanager
 
 from pyspark.sql import SparkSession
 
@@ -50,3 +51,32 @@ def get_spark(
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
+
+
+#: The engine's documented expression semantics (ANSI off: NULL-on-error
+#: arithmetic, wrap-on-overflow explicit casts — see ``get_spark``),
+#: scoped around DML/merge so they hold on a caller's ANSI-on session.
+ENGINE_SQL_CONF = {"spark.sql.ansi.enabled": "false"}
+
+
+@contextmanager
+def scoped_conf(spark: SparkSession, conf: dict[str, str]):
+    """Set ``conf`` on ``spark`` for the ``with`` body, then restore
+    each key's previous value (unset if it had none). Re-entrant.
+
+    This mutates the caller's session, so the session must be
+    single-threaded for the duration: a query another thread (or a
+    running stream's ``foreachBatch``) analyzes inside the window gets
+    these values too. Scope plan construction as well as the action —
+    ANSI cast/arithmetic modes are baked in when a DataFrame is built."""
+    old = {k: spark.conf.get(k, None) for k in conf}
+    for k, v in conf.items():
+        spark.conf.set(k, v)
+    try:
+        yield
+    finally:
+        for k, v in old.items():
+            if v is None:
+                spark.conf.unset(k)
+            else:
+                spark.conf.set(k, v)

@@ -185,7 +185,7 @@ def start_changelog_merge_sink(
     UNABLE_TO_INFER_SCHEMA — instead the restart re-bootstraps
     (mode=overwrite absorbs the partial write).
     """
-    from ..operators.scale import _hadoop_fs
+    from ..operators.publish import _hadoop_fs
 
     if layout not in ("hive", "manifest"):
         # validate at start-time: a typo'd layout must fail the stream

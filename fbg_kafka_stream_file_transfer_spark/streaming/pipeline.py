@@ -20,6 +20,7 @@ effectively-once like the reference's deterministic S3 keys.
 
 from __future__ import annotations
 
+import logging
 from dataclasses import dataclass, field
 from typing import Callable
 
@@ -29,8 +30,11 @@ from pyspark.sql import functions as F
 from ..envelope import from_binary_files, with_derived
 from ..functions.derivations import failure_report
 from ..operators.extract import Extractor, extract_documents, stub_extractor
+from ..operators.publish import discard, publish_file, recover, replace_dir
 from ..operators.retry import DEFAULT_POLICY, RetryPolicy, split_retry_dlq
 from ..operators.validate import with_validation
+
+log = logging.getLogger(__name__)
 
 
 @dataclass
@@ -216,8 +220,28 @@ def write_batch_sinks(
     ).parquet(f"{out_dir}/retry")
     try:
         write(result.dlq, "failed")
-    except Exception as exc:  # E5: swallow DLQ-sink errors, keep the batch
-        print(f"WARN: DLQ sink write failed (best-effort, E5): {exc}")
+    except Exception:  # E5: swallow DLQ-sink errors, keep the batch
+        log.warning("DLQ sink write failed (best-effort, E5)", exc_info=True)
+
+
+def _swap_buffer(
+    spark: SparkSession,
+    path: str,
+    rows: DataFrame | None,
+    partition_by: tuple[str, ...] = (),
+) -> None:
+    """Replace the buffer dir ``path`` with ``rows`` (written to
+    ``<path>__rebuild``, then ``publish.replace_dir``-ed in). With no
+    rows the dir is removed — an absent dir IS the empty buffer — after
+    deleting any stale rebuild a died writer left, so no recovery can
+    adopt it and resurrect consumed rows (ADVICE r3 #1)."""
+    tmp = f"{path}__rebuild"
+    if rows is not None:
+        rows.write.mode("overwrite").partitionBy(*partition_by).parquet(tmp)
+        replace_dir(spark, tmp, path)
+        return
+    discard(spark, tmp)
+    replace_dir(spark, None, path)
 
 
 def _stability_gate(
@@ -243,8 +267,10 @@ def _stability_gate(
     and the offset commit: the replay would rewrite this epoch's
     partitions without the already-admitted rows — the corner a
     transactional sink (Delta/Iceberg MERGE) closes on a cluster.
-    Rebuild uses the retry buffer's write-new-then-swap + crash
-    adoption. The cutoff is computed ONCE per batch (a literal, not
+    Rebuild goes through ``_swap_buffer`` and commits at its rename,
+    so recovery rolls a died swap back and drops a leftover rebuild —
+    a replayed epoch sees the old buffer. The cutoff is computed ONCE
+    per batch (a literal, not
     ``current_timestamp()`` which re-evaluates per action and could
     classify a row as both fresh and stable). Deferred rows re-enter
     when the next micro-batch fires; in production pair with a
@@ -254,18 +280,10 @@ def _stability_gate(
     """
     import datetime as _dt
     import os
-    import shutil
 
     path = f"{out_dir}/deferred"
-    tmp = f"{path}__rebuild"
-    if os.path.exists(tmp) and not os.path.exists(path):
-        # adopt a crashed rebuild — only a COMPLETED one (_SUCCESS
-        # marker); a write interrupted mid-flight is discarded, falling
-        # back to the still-intact previous buffer semantics
-        if os.path.exists(os.path.join(tmp, "_SUCCESS")):
-            os.rename(tmp, path)
-        else:
-            shutil.rmtree(tmp)
+    recover(spark, path)
+    discard(spark, f"{path}__rebuild")  # uncommitted: the old buffer wins
     if os.path.exists(path):
         # the buffer is a completed non-partitioned parquet write: a
         # read failure here is real corruption and must surface — a
@@ -281,13 +299,7 @@ def _stability_gate(
     fresh = env.filter(F.col("event_time") > cutoff)
 
     def commit() -> None:
-        still_fresh = bool(fresh.take(1))
-        if still_fresh:
-            fresh.write.mode("overwrite").parquet(tmp)
-        if os.path.exists(path):
-            shutil.rmtree(path)
-        if still_fresh:
-            os.rename(tmp, path)
+        _swap_buffer(spark, path, fresh if fresh.take(1) else None)
 
     return stable, commit
 
@@ -395,98 +407,28 @@ def start_file_pipeline(
     return writer.start()
 
 
-class ParquetSwapBufferStore:
-    """Default retry-buffer store: plain parquet + atomic directory swap
-    (write-new-then-swap with crash adoption). This is the strategy the
-    drain delegates ALL buffer persistence to — a transactional table
-    format collapses ``read → anti-join → rebuild → commit`` into one
-    ``MERGE`` (Delta/Iceberg); implement this same four-method surface
-    over it and pass it as ``buffer_store`` (no drain changes needed).
-    No delta-spark in this container (verified absent), so the swap is
-    the shipped default; see SCALE.md §Streaming.
-
-    Commit semantics here: the rebuild lands in ``<path>__rebuild``,
-    then replaces the live dir. A crash between rmtree and rename is
-    recovered by ``recover()`` on the next drain — only a COMPLETED
-    rebuild (``_SUCCESS`` marker) is adopted, a partial one is
-    discarded. An empty rebuild commits to an ABSENT dir (a zero-row
-    partitioned write leaves nothing readable), which readers treat as
-    the empty buffer."""
-
-    def __init__(self, path: str) -> None:
-        self.path = path
-        self.tmp = f"{path}__rebuild"
-
-    def recover(self) -> None:
-        """Adopt a completed rebuild a died drain left behind; discard a
-        partial one. Handles BOTH live-dir states: a complete tmp
-        (``_SUCCESS`` present) is the newer buffer — the drain that wrote
-        it had already finished its sink writes — so it wins even when
-        the live dir survived (crash landed between the tmp write and
-        the swap); a marker-less tmp is a torn write and is discarded
-        regardless, so a later drained-dry commit can never adopt it."""
-        import os
-        import shutil
-
-        if not os.path.exists(self.tmp):
-            return
-        if os.path.exists(os.path.join(self.tmp, "_SUCCESS")):
-            if os.path.exists(self.path):
-                shutil.rmtree(self.path)
-            os.rename(self.tmp, self.path)
-        else:
-            shutil.rmtree(self.tmp)
-
-    def exists(self) -> bool:
-        import os
-
-        return os.path.exists(self.path)
-
-    def read(self, spark: SparkSession) -> DataFrame:
-        return spark.read.parquet(self.path)
-
-    def commit(self, new_buf: DataFrame, n_rows: int) -> None:
-        """Atomically replace the buffer with ``new_buf`` (already
-        persisted by the drain; ``n_rows`` is its count)."""
-        import os
-        import shutil
-
-        if n_rows > 0:
-            new_buf.write.mode("overwrite").partitionBy("nab", "dt").parquet(self.tmp)
-        elif os.path.exists(self.tmp):
-            # drained dry with a leftover tmp: it's a stale partial from
-            # a crashed drain (recover() discards those up front, but a
-            # concurrent writer or manual copy could still plant one) —
-            # renaming it would resurrect already-consumed retry rows
-            shutil.rmtree(self.tmp)
-        shutil.rmtree(self.path)
-        if n_rows > 0:
-            os.rename(self.tmp, self.path)
-        # else drained dry: an absent dir IS the empty buffer
-
-
 def replay_due_retries(
     spark: SparkSession,
     out_dir: str,
     now,
     extractor: Extractor = stub_extractor,
     policy: RetryPolicy = DEFAULT_POLICY,
-    buffer_store: ParquetSwapBufferStore | None = None,
 ) -> PipelineResult | None:
     """E6 + E2 drain: re-admit retry-buffer rows whose backoff elapsed and
     push them through the route again (the reference's reprocess TODO,
     dlq-handler.yaml:184-188, done properly).
 
     The buffer is REBUILT each drain — not-yet-due rows plus the replay's
-    new retry rows replace the old directory (write-new-then-swap, with
-    crash recovery: a leftover rebuild dir from a died drain is adopted
-    on the next call). An append-only buffer would re-admit
-    already-consumed rows on every subsequent drain and multiply them;
-    this is the broker-ack analogue. Buffer persistence is delegated to
-    ``buffer_store`` (default ``ParquetSwapBufferStore``): a
-    transactional table format (Delta/Iceberg MERGE) slots in by
-    implementing the same recover/exists/read/commit surface — the
-    drain logic itself is backend-agnostic.
+    new retry rows replace the old directory (``_swap_buffer``). An
+    append-only buffer would re-admit already-consumed rows on every
+    subsequent drain and multiply them; this is the broker-ack
+    analogue. Crash recovery runs first (``publish.recover``): a died
+    swap is rolled back, then a COMPLETED rebuild (``_SUCCESS``) is
+    published even over a surviving live dir — the drain that wrote it
+    had already landed its sink writes, so it is the newer buffer —
+    and a partial one is discarded. (A transactional table format
+    would collapse read → anti-join → rebuild → swap into one MERGE;
+    none ships here — see SCALE.md §Streaming.)
 
     Content is RE-FETCHED from ``incoming/`` by correlation_id — the
     reference's planned reprocess semantics (dlq-handler.yaml:185-188):
@@ -514,10 +456,10 @@ def replay_due_retries(
 
     from ..operators.retry import due_for_retry
 
-    store = buffer_store or ParquetSwapBufferStore(f"{out_dir}/retry")
+    buf_path = f"{out_dir}/retry"
     seq_path = f"{out_dir}/retry__drain_seq"
-    store.recover()
-    if not store.exists():
+    recover(spark, buf_path, staged=f"{buf_path}__rebuild")
+    if not os.path.exists(buf_path):
         return None
     now_col = F.lit(now).cast("timestamp")
     # pruned due-probe FIRST: on an idle drain (the common case on a
@@ -525,9 +467,9 @@ def replay_due_retries(
     # due_for_retry's partition filter — instead of the whole buffer.
     # The processed/ anti-join below only REMOVES rows, so "probe
     # empty ⇒ nothing to drain" holds without it.
-    if not due_for_retry(store.read(spark), now_col).take(1):
+    if not due_for_retry(spark.read.parquet(buf_path), now_col).take(1):
         return None
-    buf = store.read(spark)
+    buf = spark.read.parquet(buf_path)
     proc_path = f"{out_dir}/processed"
     if _has_parquet_files(proc_path):
         # a real read failure here must ABORT the drain (it retries
@@ -592,18 +534,17 @@ def replay_due_retries(
         # refuse instead (writes are atomic, so this shouldn't happen)
         raise RuntimeError(f"corrupt drain sequence file {seq_path!r}: {content!r}")
     epoch = -(drain_seq + 1)
-    # atomic claim (write-then-rename): an in-place truncate-write could
-    # be torn by a crash, resetting the counter and letting a later
-    # drain reuse — and dynamic-overwrite — a committed drain's epoch
-    with open(f"{seq_path}__tmp", "w") as fh:
-        fh.write(str(drain_seq + 1))
-    os.replace(f"{seq_path}__tmp", seq_path)
+    # atomic claim (publish_file: tmp + rename): an in-place
+    # truncate-write could be torn by a crash, resetting the counter and
+    # letting a later drain reuse — and dynamic-overwrite — a committed
+    # drain's epoch
+    publish_file(spark, seq_path, str(drain_seq + 1))
     _write_leg(result.incoming, inc_path, epoch)
     _write_leg(result.processed, f"{out_dir}/processed", epoch)
     try:
         _write_leg(result.dlq, f"{out_dir}/failed", epoch)
-    except Exception as exc:  # E5
-        print(f"WARN: DLQ sink write failed (best-effort, E5): {exc}")
+    except Exception:  # E5
+        log.warning("DLQ sink write failed (best-effort, E5)", exc_info=True)
 
     # rebuild the buffer: survivors + this replay's rescheduled rows.
     # Reschedules are re-anchored at DRAIN time (now + backoff) — the
@@ -636,7 +577,9 @@ def replay_due_retries(
         ),
     )
     new_buf = new_buf.persist()
-    store.commit(new_buf, new_buf.count())
+    _swap_buffer(
+        spark, buf_path, new_buf if new_buf.count() else None, ("nab", "dt")
+    )
     result.unpersist()
     buf.unpersist()
     new_buf.unpersist()

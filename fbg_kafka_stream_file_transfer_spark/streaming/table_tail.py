@@ -40,7 +40,7 @@ Built on machinery Spark already hardens, not a custom source:
   orphan commit the tail already consumed is therefore detected on
   the NEXT batch (resumed checkpoint) or on replay (fresh
   checkpoint), and the corrected diff replaces the diverged feed dir
-  via a rename-swap (readers never see the version wholly absent).
+  via ``publish.replace_dir`` (absent only between its two renames).
   HONEST LIMITS of the net: detection needs the manifest still
   retained AND the feed dir still published — a re-publish whose feed
   dir was already pruned is undetectable feed-side, and a
@@ -85,13 +85,14 @@ import re
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..operators.scale import _hadoop_fs
-from ..operators.table import (
-    _MANIFEST_DIR,
-    ManifestTable,
-    _read_small_file,
+from ..operators.publish import (
+    _hadoop_fs,
     _write_small_file,
+    publish_file,
+    recover_all,
+    replace_dir,
 )
+from ..operators.table import _MANIFEST_DIR, ManifestTable, _read_small_file
 
 _FEED_DIR_RE = re.compile(r"^v(\d{8})$")
 _FEED_MARKER = "_FEED_COMMITTED"
@@ -121,22 +122,6 @@ def _pruned_through(spark: SparkSession, feed_dir: str) -> int:
             " repair or remove the marker after verifying consumer"
             " state"
         ) from exc
-
-
-def _write_pruned_through(
-    spark: SparkSession, feed_dir: str, version: int
-) -> None:
-    """Publish the high-water atomically (tmp-write + rename, the same
-    discipline as the table's manifest `_publish`): a crash mid-write
-    must never leave a truncated marker that parses as 'no pruning
-    ever happened'."""
-    tmp = f"{feed_dir}/.{_PRUNED_MARKER}.tmp"
-    _write_small_file(spark, tmp, str(version))
-    fs, jfinal = _hadoop_fs(spark, f"{feed_dir}/{_PRUNED_MARKER}")
-    _, jtmp = _hadoop_fs(spark, tmp)
-    fs.delete(jfinal, False)
-    if not fs.rename(jtmp, jfinal):
-        raise IOError(f"could not publish {_PRUNED_MARKER} in {feed_dir}")
 
 
 def _feed_committed(spark: SparkSession, feed_dir: str, version: int) -> bool:
@@ -230,11 +215,13 @@ def start_table_changes_tail(
             if r.version is not None
         )
         if versions:
-            # a crash between the stale-swap's two renames leaves the
-            # displaced dir as a .stale husk; sweep before this
-            # batch's work so an append-only feed (never pruned)
-            # cannot leak it forever (external review r11)
-            _sweep_stale_husks(spark, feed_dir)
+            # a crash inside a version's swap leaves the displaced dir
+            # as a hidden .stale husk: recover before this batch's work
+            # — a husk whose version dir is gone is put back, one
+            # beside a published dir is deleted — so an append-only
+            # feed (never pruned) cannot leak it forever (external
+            # review r11)
+            recover_all(spark, feed_dir)
         # one manifest-dir listing + one high-water read per BATCH
         # (not per version): both are stable within a batch — a
         # concurrent GC mid-batch still fails loudly downstream
@@ -398,34 +385,13 @@ def start_table_changes_tail(
             _write_small_file(
                 spark, f"{tmp}/{_FEED_MARKER}", man_uuid or f"v{v:08d}"
             )
-            fs, jfinal = _hadoop_fs(spark, final)
-            _, jtmp = _hadoop_fs(spark, tmp)
-            if _feed_committed(spark, feed_dir, v):
-                # stale-replay correction over a COMMITTED dir: a
-                # delete-then-rename would leave the version wholly
-                # absent while the (potentially long) recursive delete
-                # runs. Swap via two renames instead — the old dir
-                # moves to a dot-prefixed name (invisible to readers)
-                # and the corrected dir renames in; the absent-window
-                # shrinks to the instant between the renames
-                # (external review r10, pass 2).
-                trash = f"{feed_dir}/.v{v:08d}.stale"
-                _, jtrash = _hadoop_fs(spark, trash)
-                fs.delete(jtrash, True)  # a husk from a prior crash
-                if not fs.rename(jfinal, jtrash):
-                    raise IOError(
-                        f"could not displace stale feed dir {final}"
-                    )
-                if not fs.rename(jtmp, jfinal):
-                    raise IOError(f"could not publish feed dir {final}")
-                fs.delete(jtrash, True)
-            else:
-                fs.delete(jfinal, True)  # clears a crashed partial
-                # husk (no marker → invisible to readers); committed
-                # dirs take the rename-swap branch above, so a
-                # published version never vanishes
-                if not fs.rename(jtmp, jfinal):
-                    raise IOError(f"could not publish feed dir {final}")
+            # one swap for both cases: a stale-replay correction over a
+            # COMMITTED dir moves the old dir aside (invisible to
+            # readers) before the corrected one renames in, so a
+            # published version is absent only between two renames
+            # (external review r10, pass 2); a crashed partial husk (no
+            # marker → invisible) is displaced the same way
+            replace_dir(spark, tmp, final)
             emitted_prev.add(v)
         if feed_retain_versions is not None:
             prune_changes_feed(spark, feed_dir, feed_retain_versions)
@@ -435,22 +401,6 @@ def start_table_changes_tail(
         .option("checkpointLocation", checkpoint)
         .start()
     )
-
-
-def _sweep_stale_husks(spark: SparkSession, feed_dir: str) -> None:
-    """Delete ``.vNNNNNNNN.stale`` displacement husks left by a crash
-    between the two renames of the tail's stale-replay swap. Husks
-    are dot-prefixed (invisible to every reader) and each holds a
-    full diff's worth of parquet, yet nothing else ever matches them
-    — the swap only clears a husk of its OWN version, and the feed
-    prune skips dot-dirs — so without this sweep a crashed swap
-    leaks the displaced dir indefinitely (external review r11)."""
-    fs, jdir = _hadoop_fs(spark, feed_dir)
-    if not fs.exists(jdir):
-        return
-    for status in fs.listStatus(jdir):
-        if re.match(r"^\.v\d{8}\.stale$", status.getPath().getName()):
-            fs.delete(status.getPath(), True)
 
 
 def prune_changes_feed(
@@ -473,20 +423,21 @@ def prune_changes_feed(
     crashed emit) are never touched regardless of age."""
     if keep_versions < 1:
         raise ValueError("keep_versions must be >= 1")
+    recover_all(spark, feed_dir)  # settle died swaps' husks first
     committed = _committed_feed_versions(spark, feed_dir)
     to_prune = (
         committed[:-keep_versions] if len(committed) > keep_versions else []
     )
     if to_prune:
         hw = max(max(to_prune), _pruned_through(spark, feed_dir))
-        _write_pruned_through(spark, feed_dir, hw)
+        # atomic: a truncated marker would parse as 'never pruned'
+        publish_file(spark, f"{feed_dir}/{_PRUNED_MARKER}", str(hw))
     for v in to_prune:
         d = f"{feed_dir}/v{v:08d}"
         fs, jmark = _hadoop_fs(spark, f"{d}/{_FEED_MARKER}")
         fs.delete(jmark, False)
         _, jdir = _hadoop_fs(spark, d)
         fs.delete(jdir, True)
-    _sweep_stale_husks(spark, feed_dir)
     return to_prune
 
 

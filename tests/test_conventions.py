@@ -215,3 +215,26 @@ def test_length_semantics_parity_non_ascii(spark):
     ).fetchall()[0]
     assert spark_len == duck_len == 7
     assert duck_bytes == 10  # premise: strlen counts bytes, not chars
+
+
+def test_directory_swaps_go_through_publish():
+    """Every rename the engine commits itself goes through the one
+    crash-safe protocol in operators/publish.py (replace_dir /
+    publish_file / recover). A hand-rolled ``.rename(`` or
+    ``os.replace(`` anywhere else in operators/ or streaming/ is a new
+    private swap with its own crash windows — route it through the
+    module instead."""
+    import re
+    from pathlib import Path
+
+    pkg = Path(__file__).resolve().parent.parent / "fbg_kafka_stream_file_transfer_spark"
+    pattern = re.compile(r"\.rename\(|os\.replace\(")
+    offenders = [
+        f"{path.relative_to(pkg)}:{n}"
+        for sub in ("operators", "streaming")
+        for path in sorted((pkg / sub).rglob("*.py"))
+        if path.name != "publish.py" or path.parent.name != "operators"
+        for n, line in enumerate(path.read_text().splitlines(), 1)
+        if pattern.search(line)
+    ]
+    assert not offenders, f"hand-rolled renames outside operators/publish.py: {offenders}"

@@ -17,9 +17,10 @@ from pyspark.sql import functions as F
 from fbg_kafka_stream_file_transfer_spark.operators.scale import (
     merge_into_partitioned,
 )
-from fbg_kafka_stream_file_transfer_spark.operators.table import (
-    ManifestTable,
-    engine_sql_semantics,
+from fbg_kafka_stream_file_transfer_spark.operators.table import ManifestTable
+from fbg_kafka_stream_file_transfer_spark.session import (
+    ENGINE_SQL_CONF,
+    scoped_conf,
 )
 
 WRAP = 2**40 + 7
@@ -104,9 +105,9 @@ class TestDmlAnsiIndependence:
         key = "spark.sql.ansi.enabled"
         base = spark.conf.get(key)
         with ansi_on(spark):
-            with engine_sql_semantics(spark):
+            with scoped_conf(spark, ENGINE_SQL_CONF):
                 assert spark.conf.get(key) == "false"
-                with engine_sql_semantics(spark):
+                with scoped_conf(spark, ENGINE_SQL_CONF):
                     assert spark.conf.get(key) == "false"
                 assert spark.conf.get(key) == "false"
             assert spark.conf.get(key) == "true"

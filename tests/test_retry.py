@@ -5,7 +5,10 @@ policy — 3 attempts, 5 s initial, ×2 backoff, 60 s cap
 from __future__ import annotations
 
 import datetime
+import os
+import shutil
 
+import pytest
 from pyspark.sql import functions as F
 
 from fbg_kafka_stream_file_transfer_spark.operators.retry import (
@@ -152,129 +155,113 @@ def test_full_poison_lifecycle_through_drains(spark, tmp_path):
     assert spark.read.parquet(str(out / "processed")).count() == 1
 
 
-def test_drain_uses_injected_buffer_store(spark, tmp_path):
-    """The drain's buffer persistence is a strategy (VERDICT r2 #9): a
-    transactional backend (Delta/Iceberg MERGE) plugs in through the
-    recover/exists/read/commit surface. A recording fake proves the
-    drain touches the buffer ONLY through the store, and that commit
-    receives the rebuilt buffer (survivor + rescheduled rows)."""
-    from fbg_kafka_stream_file_transfer_spark.streaming.pipeline import (
-        ParquetSwapBufferStore,
-        replay_due_retries,
-        start_file_pipeline,
+class _LocalPath:
+    def __init__(self, path):
+        self.path = path.rstrip("/")
+
+    def getParent(self):
+        return _LocalPath(os.path.dirname(self.path))
+
+
+class _LocalFs:
+    """The slice of the Hadoop FileSystem API the publish protocol
+    calls, over the local disk — so the on-disk recovery cases below
+    run without a JVM."""
+
+    def exists(self, p):
+        return os.path.exists(p.path)
+
+    def delete(self, p, recursive):
+        if not os.path.exists(p.path):
+            return False
+        (shutil.rmtree if os.path.isdir(p.path) else os.remove)(p.path)
+        return True
+
+    def rename(self, src, dst):
+        if os.path.exists(dst.path):
+            return False
+        os.rename(src.path, dst.path)
+        return True
+
+    def mkdirs(self, p):
+        os.makedirs(p.path, exist_ok=True)
+        return True
+
+
+@pytest.fixture()
+def local_fs(monkeypatch):
+    from fbg_kafka_stream_file_transfer_spark.operators import publish
+
+    monkeypatch.setattr(
+        publish, "_hadoop_fs", lambda spark, path: (_LocalFs(), _LocalPath(path))
     )
 
-    class RecordingStore(ParquetSwapBufferStore):
-        def __init__(self, path):
-            super().__init__(path)
-            self.calls: list[str] = []
-            self.committed_rows: int | None = None
 
-        def recover(self):
-            self.calls.append("recover")
-            super().recover()
-
-        def exists(self):
-            self.calls.append("exists")
-            return super().exists()
-
-        def read(self, spark):
-            self.calls.append("read")
-            return super().read(spark)
-
-        def commit(self, new_buf, n_rows):
-            self.calls.append("commit")
-            self.committed_rows = n_rows
-            super().commit(new_buf, n_rows)
-
-    src, out, ckpt = tmp_path / "in", tmp_path / "out", tmp_path / "ckpt"
-    src.mkdir()
-    (src / "poison.exe").write_bytes(b"rejected forever")
-    q = start_file_pipeline(spark, str(src), str(out), str(ckpt))
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-    t0 = spark.read.parquet(str(out / "retry")).collect()[0].event_time
-
-    store = RecordingStore(str(out / "retry"))
-    r = replay_due_retries(
-        spark, str(out), t0 + datetime.timedelta(seconds=6), buffer_store=store
-    )
-    assert r is not None
-    assert store.calls == ["recover", "exists", "read", "read", "commit"]
-    # attempt 2 of 3 → the row is rescheduled, so the rebuild holds it
-    assert store.committed_rows == 1
-    assert spark.read.parquet(str(out / "retry")).collect()[0].delivery_count == 2
-
-
-def test_recover_discards_partial_rebuild_even_when_live_exists(tmp_path):
+def test_recover_discards_partial_rebuild_even_when_live_exists(
+    local_fs, tmp_path
+):
     """A marker-less __rebuild left by a drain that died mid-write must
-    be discarded by recover() EVEN IF the live dir survived — otherwise
+    be discarded by recovery EVEN IF the live dir survived — otherwise
     a later drained-dry commit would rename the torn partial into place
     and resurrect already-consumed retry rows (ADVICE r3 #1)."""
     import os
     from pathlib import Path
 
-    from fbg_kafka_stream_file_transfer_spark.streaming.pipeline import (
-        ParquetSwapBufferStore,
-    )
+    from fbg_kafka_stream_file_transfer_spark.operators.publish import recover
 
-    store = ParquetSwapBufferStore(str(tmp_path / "retry"))
-    os.makedirs(store.path)
-    Path(store.path, "part-live").write_text("live rows")
-    os.makedirs(store.tmp)
-    Path(store.tmp, "part-torn").write_text("partial rebuild")  # no _SUCCESS
+    path, tmp = str(tmp_path / "retry"), str(tmp_path / "retry__rebuild")
+    os.makedirs(path)
+    Path(path, "part-live").write_text("live rows")
+    os.makedirs(tmp)
+    Path(tmp, "part-torn").write_text("partial rebuild")  # no _SUCCESS
 
-    store.recover()
-    assert not os.path.exists(store.tmp)
-    assert Path(store.path, "part-live").read_text() == "live rows"
+    recover(None, path, staged=tmp)
+    assert not os.path.exists(tmp)
+    assert Path(path, "part-live").read_text() == "live rows"
 
 
-def test_recover_adopts_complete_rebuild_over_live_dir(tmp_path):
+def test_recover_adopts_complete_rebuild_over_live_dir(local_fs, tmp_path):
     """A _SUCCESS-marked rebuild is the NEWER buffer (the drain that
     wrote it had already landed its sink writes before the swap was
-    interrupted) — recover() must adopt it even when the live dir is
+    interrupted) — recovery must publish it even when the live dir is
     still present, or the next drain re-admits consumed rows."""
     import os
     from pathlib import Path
 
-    from fbg_kafka_stream_file_transfer_spark.streaming.pipeline import (
-        ParquetSwapBufferStore,
-    )
+    from fbg_kafka_stream_file_transfer_spark.operators.publish import recover
 
-    store = ParquetSwapBufferStore(str(tmp_path / "retry"))
-    os.makedirs(store.path)
-    Path(store.path, "part-old").write_text("pre-drain rows")
-    os.makedirs(store.tmp)
-    Path(store.tmp, "part-new").write_text("rebuilt rows")
-    Path(store.tmp, "_SUCCESS").write_text("")
+    path, tmp = str(tmp_path / "retry"), str(tmp_path / "retry__rebuild")
+    os.makedirs(path)
+    Path(path, "part-old").write_text("pre-drain rows")
+    os.makedirs(tmp)
+    Path(tmp, "part-new").write_text("rebuilt rows")
+    Path(tmp, "_SUCCESS").write_text("")
 
-    store.recover()
-    assert not os.path.exists(store.tmp)
-    assert sorted(os.listdir(store.path)) == ["_SUCCESS", "part-new"]
+    recover(None, path, staged=tmp)
+    assert not os.path.exists(tmp)
+    assert sorted(os.listdir(path)) == ["_SUCCESS", "part-new"]
+    assert not [n for n in os.listdir(tmp_path) if n.endswith(".stale")]
 
 
-def test_drained_dry_commit_never_adopts_stale_tmp(tmp_path):
-    """Belt-and-braces on commit() itself: draining dry with a stale
-    marker-less tmp on disk must delete BOTH dirs (absent dir == empty
-    buffer), not rename the partial into place (ADVICE r3 #1)."""
+def test_drained_dry_commit_never_adopts_stale_tmp(local_fs, tmp_path):
+    """Belt-and-braces on the drained-dry swap itself: draining dry with
+    a stale marker-less tmp on disk must delete BOTH dirs (absent dir ==
+    empty buffer), not rename the partial into place (ADVICE r3 #1)."""
     import os
     from pathlib import Path
 
     from fbg_kafka_stream_file_transfer_spark.streaming.pipeline import (
-        ParquetSwapBufferStore,
+        _swap_buffer,
     )
 
-    store = ParquetSwapBufferStore(str(tmp_path / "retry"))
-    os.makedirs(store.path)
-    Path(store.path, "part-live").write_text("consumed this drain")
-    os.makedirs(store.tmp)
-    Path(store.tmp, "part-torn").write_text("stale partial")  # no _SUCCESS
+    path, tmp = str(tmp_path / "retry"), str(tmp_path / "retry__rebuild")
+    os.makedirs(path)
+    Path(path, "part-live").write_text("consumed this drain")
+    os.makedirs(tmp)
+    Path(tmp, "part-torn").write_text("stale partial")  # no _SUCCESS
 
-    store.commit(None, 0)  # drained dry: new_buf is never touched
-    assert not os.path.exists(store.path)
-    assert not os.path.exists(store.tmp)
+    _swap_buffer(None, path, None)  # drained dry: nothing to keep
+    assert os.listdir(tmp_path) == []
 
 
 def test_legacy_dt_only_buffer_rows_survive_drains(spark, tmp_path):
