@@ -365,9 +365,7 @@ def train_unigram_vocab(df, text_col: str):
     )
 
 
-def unigram_logprob_scores(
-    df, id_col: str, text_col: str, broadcast_vocab: bool = True, vocab=None
-):
+def unigram_logprob_scores(df, id_col: str, text_col: str, vocab=None):
     """CCNet-style LM quality proxy: per-document mean negative log
     probability under the corpus's own unigram model. Boilerplate /
     keyword-stuffed junk scores LOW surprise (it repeats the corpus's
@@ -376,12 +374,11 @@ def unigram_logprob_scores(
     the unigram form is the engine-native, engine-portable variant and
     uses the same normalized tokenization as the dedup family.
 
-    Two shuffles (vocab count groupBy + per-doc agg) plus a token join:
-    ``broadcast_vocab=True`` broadcasts the (token, count) table — right
-    whenever the vocabulary fits an executor (≲ tens of millions of
-    distinct tokens); at open-web 100 TB scale pass ``False`` for a
-    shuffle join on the token key (uniform by construction). The corpus
-    total rides in as a broadcast 1-row aggregate, never a collect.
+    Two shuffles (vocab count groupBy + per-doc agg) plus a token join
+    that broadcasts the (token, count) table — right whenever the
+    vocabulary fits an executor (≲ tens of millions of distinct
+    tokens). The corpus total rides in as a broadcast 1-row aggregate,
+    never a collect.
 
     Pass ``vocab`` (from :func:`train_unigram_vocab`, possibly over a
     DIFFERENT reference corpus — the real CCNet setup) to skip training
@@ -398,8 +395,7 @@ def unigram_logprob_scores(
     tk = df.select(F.col(id_col), F.explode(toks).alias("tok"))
     if vocab is None:
         vocab = train_unigram_vocab(df, text_col).persist()
-    if broadcast_vocab:
-        vocab = F.broadcast(vocab)
+    vocab = F.broadcast(vocab)
     total = F.broadcast(vocab.agg(F.sum("cnt").alias("total")))
     neg_lp = -(F.log(F.col("cnt")) - F.log(F.col("total")))
     return (

@@ -575,7 +575,6 @@ def semantic_near_dup_pairs(
     threshold: float,
     planes: int = 4,
     n_tables: int = 1,
-    use_arrow: bool = True,
 ) -> DataFrame:
     """SemDeDup-shaped semantic dedup: near-dup pairs with the blocking
     key derived FROM THE EMBEDDING ITSELF (random-hyperplane LSH bucket)
@@ -600,24 +599,23 @@ def semantic_near_dup_pairs(
     label across the tables that surfaced it (deterministic, but not
     necessarily the first table's bucket) for per-block observability.
 
-    ``use_arrow`` (default) computes in-bucket pairs with the BLAS twin
-    (:func:`embedding_near_dup_pairs_arrow`) — same round-6 contract,
-    ~100× cheaper per pair (measured in the sf1 stress run, SCALE.md);
-    ``False`` keeps the pure-Catalyst form.
+    In-bucket pairs come from the BLAS twin
+    (:func:`embedding_near_dup_pairs_arrow`) — same round-6 contract as
+    the pure-Catalyst form, ~100× cheaper per pair (measured in the sf1
+    stress run, SCALE.md).
     """
     from .similarity import lsh_bucket
 
     # bucket hashing + in-bucket pair scoring are CPU-bound vector math;
     # spread the scan before fanning out per table
     df = ensure_parallelism(df)
-    pair_fn = embedding_near_dup_pairs_arrow if use_arrow else embedding_near_dup_pairs
     tables = []
     for t in range(n_tables):
         blocked = df.withColumn(
             "_sem_bucket", lsh_bucket(F.col(vec_col), planes, plane_offset=t * planes)
         )
         tables.append(
-            pair_fn(
+            embedding_near_dup_pairs_arrow(
                 blocked, id_col, vec_col, threshold, block_col="_sem_bucket",
                 keep_block=True,
             ).withColumnRenamed("block", "bucket")
@@ -818,7 +816,6 @@ def remove_boilerplate_windows(
     *,
     window_tokens: int = 16,
     min_docs: int = 2,
-    broadcast_frequent: bool = True,
     spare_text: bool = False,
 ) -> DataFrame:
     """Boilerplate REMOVAL (CCNet line-dedup / RefinedWeb-style): unlike
@@ -836,9 +833,7 @@ def remove_boilerplate_windows(
     Scale shape (100 TB): the window explode is map-side; the frequent
     set is the HEAVY-HITTER set (spans repeated across >= min_docs
     docs), orders of magnitude smaller than the corpus, so it is
-    broadcast (``broadcast_frequent=False`` drops the hint and lets
-    AQE decide when min_docs is low enough to make the set large).
-    Two paths, same results (parity unit-tested):
+    broadcast. Two paths, same results (parity unit-tested):
 
     - default (``spare_text=False``): one pass — explode windows,
       broadcast-mark frequent ones, re-assemble per doc. The reassembly
@@ -852,8 +847,7 @@ def remove_boilerplate_windows(
       text is rebuilt map-side by recomputing the deterministic window
       split. The window split is computed twice, but kilobyte text rows
       cross the network zero times — the win whenever shuffle bandwidth,
-      not CPU, is the binding constraint (the cluster case; same trade
-      as ``cap_per_group(spare_payload=True)``).
+      not CPU, is the binding constraint (the cluster case).
 
     Returns ``(id_col, clean_text, n_windows, n_dropped,
     dropped_ratio)``; ``clean_text`` is ``''`` when every window was
@@ -886,10 +880,8 @@ def remove_boilerplate_windows(
             .filter(F.col("_nd") >= min_docs)
             .select("_fp")
         )
-        if broadcast_frequent:
-            freq = F.broadcast(freq)
         drops = (
-            ex.join(freq, "_fp")
+            ex.join(F.broadcast(freq), "_fp")
             .groupBy(F.col("_doc").alias(id_col))
             .agg(F.collect_set("_pos").alias("_drop_pos"))
         )
@@ -929,9 +921,7 @@ def remove_boilerplate_windows(
         .filter(F.col("_nd") >= min_docs)
         .select("_fp", F.lit(1).alias("_dup"))
     )
-    if broadcast_frequent:
-        freq = F.broadcast(freq)
-    marked = ex.join(freq, "_fp", "left")
+    marked = ex.join(F.broadcast(freq), "_fp", "left")
     kept = F.when(F.col("_dup").isNull(), F.struct(F.col("_pos"), F.col("_win")))
     return (
         marked.groupBy(F.col("_doc").alias(id_col))

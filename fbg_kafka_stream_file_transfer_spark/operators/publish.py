@@ -49,6 +49,13 @@ def _best_effort_delete(spark: SparkSession, path: str) -> None:
         log.warning("best-effort delete of %s failed", path, exc_info=True)
 
 
+def exists(spark: SparkSession, path: str) -> bool:
+    """``os.path.exists`` for any store: it answers False for a URI
+    (``file://``, ``hdfs://``, ``s3a://``) even when the path exists."""
+    fs, jpath = _hadoop_fs(spark, path)
+    return bool(fs.exists(jpath))
+
+
 def _write_small_file(spark: SparkSession, path: str, text: str) -> None:
     fs, jpath = _hadoop_fs(spark, path)
     out = fs.create(jpath, True)

@@ -116,7 +116,6 @@ def cap_per_group(
     group_col: str,
     score_col: Column,
     n: int,
-    spare_payload: bool = False,
 ) -> DataFrame:
     """Per-group document cap ("docs per domain" rate limiting): keep
     the top ``n`` rows of each group by ``score_col`` (desc), ties
@@ -130,32 +129,11 @@ def cap_per_group(
     split covers a pathological mega-group's shuffle read, and upstream
     dedup has already collapsed the worst offenders by the time caps
     run.
-
-    ``spare_payload=True`` ranks a SKINNY (id, group, score) projection
-    and joins the ≤ n-per-group survivor ids back (AQE broadcasts
-    them), so the window shuffle never moves the row payload. Use it
-    when rows carry wide text/binary AND the score is cheap or already
-    materialized: the join-back re-evaluates ``df``'s lineage, so an
-    expensive score expression is computed twice — measured 2× slower
-    on the quality-scored corpus (the score dominates), but the win at
-    100 TB is shuffling kilobyte rows never, not computing a ratio
-    twice, whenever the payload outweighs the scoring work.
     """
     if n <= 0:
         raise ValueError(f"cap must be positive, got {n}")
     from pyspark.sql.window import Window
 
-    if spare_payload:
-        skinny = df.select(F.col(id_col), F.col(group_col), score_col.alias("_s"))
-        w = Window.partitionBy(group_col).orderBy(
-            F.col("_s").desc(), F.col(id_col).asc()
-        )
-        kept = (
-            skinny.withColumn("rank_in_group", F.row_number().over(w))
-            .filter(F.col("rank_in_group") <= n)
-            .select(id_col, "rank_in_group")
-        )
-        return df.join(kept, id_col)
     w = Window.partitionBy(group_col).orderBy(
         score_col.desc(), F.col(id_col).asc()
     )

@@ -421,8 +421,8 @@ def _assert_safe_delta_casts(
     partition_cols: list[str],
     op_col: str | None,
     context: str,
-    widenable: bool = False,
-    exempt: set | None = None,
+    widenable: bool,
+    exempt: set,
 ) -> dict:
     """Guard the merge alignment projection: every delta column the
     stored schema shares must cast LOSSLESSLY to the stored type
@@ -437,7 +437,7 @@ def _assert_safe_delta_casts(
     widen_to: dict = {}
     for f in delta_schema.fields:
         c = f.name
-        if c == op_col or c not in cur_types or (exempt and c in exempt):
+        if c == op_col or c not in cur_types or c in exempt:
             continue
         cls = _cast_class(f.dataType, cur_types[c])
         if cls in ("identical", "widen"):
@@ -733,21 +733,23 @@ def merge_into_partitioned(
     TTL (sized far above any legitimate commit — the streaming merge
     sink's choice).
 
-    FILE-GRANULAR current side (r14, manifest tables, locked path;
-    ``file_granular=True`` default): within each touched partition,
-    only the files whose per-file KEY bounds intersect the delta's
-    per-partition key range are read, merged, and rewritten — the
-    other files provably contain no contested key and carry forward
-    byte-identically inside the same entry (the deletion-vector-lite
-    machinery DML uses; see ManifestTable.delete_where). A streaming
-    CDC batch upserting one key into a hot 10 GB key-clustered
-    partition rewrites one file. Disabled automatically when
-    ``when_not_matched_by_source_delete`` is truthy (its candidates
-    are ALL current rows), for non-rangeable key types, and on
-    hive-layout tables. The OPTIMISTIC path carries too (r15):
-    ``stage_commit(carry_files=)`` is rebase-sound because the
-    conflict check compares whole entry identities (dir + files
-    map) — a rebase succeeds only when the carrying entries are
+    FILE-GRANULAR current side (r14, manifest tables;
+    ``file_granular=True`` default): one planner serves both layouts
+    (below), and its planning job also yields each touched
+    partition's delta key range. The manifest side uses it to read,
+    merge and rewrite only the files whose per-file KEY bounds
+    intersect that range; the other files provably contain no
+    contested key and carry forward byte-identically inside the same
+    entry, through the same carry helper DML uses
+    (``table._file_scoped_carry``; see ManifestTable.delete_where). A
+    streaming CDC batch upserting one key into a hot 10 GB
+    key-clustered partition rewrites one file. Disabled automatically
+    when ``when_not_matched_by_source_delete`` is truthy (its
+    candidates are ALL current rows) and for non-rangeable key types;
+    hive-layout tables have no per-file bounds. Both manifest commits
+    carry (r15): ``stage_commit(carry_files=)`` is rebase-sound
+    because the conflict check compares whole entry identities (dir +
+    files map) — a rebase succeeds only when the carrying entries are
     bit-identical between base and winner, exactly when the carried
     references are still valid. ``compact()`` (or the sink's
     ``compact_min_carried``) folds carried references back into a
@@ -813,37 +815,48 @@ def merge_into_partitioned(
     parquet readers would see a column that exists in some files —
     use a manifest table).
 
-    Crash surface — two commit protocols, auto-detected:
+    One planner, a commit per layout (auto-detected). Every merge
+    plans its delta in one place (``_plan_delta``): the delta is
+    snapshotted to ``_merge_delta`` (evaluated exactly once), an empty
+    one returns 0 even against an absent table, the cast check and
+    alignment, the stray-column rule, the one-job planning
+    aggregation (touched partitions + dup-key test) and the ``''``
+    partition refusal run there, so every refusal fires the same way
+    on both layouts and before any table data I/O. The layout only
+    supplies data — its stored column types, the cast-exempt columns,
+    whether types may widen and columns be appended — and keeps its
+    own current-state read and commit:
 
     - PLAIN Hive-layout table (default): the merged rows are staged
       — already partitioned — under ``_merge_staging`` inside the
       table root, an underscore-prefixed directory parquet readers
       ignore, so a crash before the publish leaves the table
       untouched. The publish RENAMES each staged partition directory
-      into place (one data write per merge, r17; the old path
-      re-read staging and dynamic-overwrote, writing every merged
-      byte twice). Each partition flips via ``publish.replace_dir``
-      (an emptied one is moved aside, then deleted), so a crash DURING
-      the publish is torn at partition granularity, each partition
-      old-or-new. A failed publish keeps the staging and aside dirs;
-      the next merge recovers under the table lock, and re-running the
-      failed one converges for upsert/delete merges (not for a
-      ``when_matched_update`` computed from the target row). All of it
-      goes through the Hadoop FileSystem API (local, HDFS, S3A — where
-      rename is a copy, the window equals the old overwrite's).
+      into place (one data write per merge, r17). Each partition flips
+      via ``publish.replace_dir`` (an emptied one is moved aside, then
+      deleted), so a crash DURING the publish is torn at partition
+      granularity, each partition old-or-new. A failed publish keeps
+      the staging and aside dirs; the next merge recovers under the
+      table lock, and re-running the failed one converges for
+      upsert/delete merges (not for a ``when_matched_update`` computed
+      from the target row). All of it goes through the Hadoop
+      FileSystem API (local, HDFS, S3A — where rename is a copy, the
+      window equals the old overwrite's).
     - MANIFEST table (created via ``table.ManifestTable.create``;
       detected by ``_manifests/``): the publish is an atomic
       manifest/pointer swap — a reader sees the whole previous version
       or the whole new one, NEVER a partition-granular mix, and
       emptied partitions drop out of the manifest instead of racing a
-      directory delete. Same delta-sized cost; this is the
-      Delta/Iceberg-grade commit the plain layout cannot give
-      (operators/table.py for the protocol and its crash analysis).
-      ``retain_versions`` (manifest layout only, ignored for hive)
-      sizes the snapshot window each commit keeps: time travel,
-      ``changes()`` diffs, and a ``table_tail`` consumer's maximum
-      tolerated lag all reach exactly the retained versions — size it
-      above the slowest consumer's lag in commits.
+      directory delete. The locked and optimistic merges share one
+      path and differ only in the commit call (``overwrite_partitions``
+      under the lease vs ``stage_commit`` + rebasing publish). Same
+      delta-sized cost; this is the Delta/Iceberg-grade commit the
+      plain layout cannot give (operators/table.py for the protocol and
+      its crash analysis). ``retain_versions`` (manifest layout only,
+      ignored for hive) sizes the snapshot window each commit keeps:
+      time travel, ``changes()`` diffs, and a ``table_tail``
+      consumer's maximum tolerated lag all reach exactly the retained
+      versions — size it above the slowest consumer's lag in commits.
 
     Scale: the delta's partition list is a bounded collect (O(touched
     partitions), small by contract); the current-state scan prunes to
@@ -948,15 +961,12 @@ def merge_into_partitioned(
                 f"{path} (create it via ManifestTable.create)"
             )
         with scoped_conf(spark, ENGINE_SQL_CONF):
-            return _merge_into_manifest_optimistic(
+            return _merge_into_manifest(
                 spark, path, updates, key_cols, partition_cols,
                 op_col, delete_op, ts_col, tiebreak_cols,
-                retain_versions,
-                60.0 if lock_wait_seconds is None else lock_wait_seconds,
-                lock_stale_after_seconds,
-                clauses=clauses,
-                file_granular=file_granular,
-                check_key_moves=check_key_moves,
+                retain_versions, clauses, file_granular,
+                schema_evolution, check_key_moves, optimistic,
+                lock_wait_seconds, lock_stale_after_seconds,
             )
     fs, jroot = _hadoop_fs(spark, path)
     root_existed = bool(fs.exists(jroot))
@@ -972,11 +982,9 @@ def merge_into_partitioned(
                 return _merge_into_manifest(
                     spark, path, updates, key_cols, partition_cols,
                     op_col, delete_op, ts_col, tiebreak_cols,
-                    retain_versions,
-                    clauses=clauses,
-                    file_granular=file_granular,
-                    schema_evolution=schema_evolution,
-                    check_key_moves=check_key_moves,
+                    retain_versions, clauses, file_granular,
+                    schema_evolution, check_key_moves, optimistic,
+                    lock_wait_seconds, lock_stale_after_seconds,
                 )
             if schema_evolution:
                 raise ValueError(
@@ -990,9 +998,7 @@ def merge_into_partitioned(
             return _merge_into_plain(
                 spark, path, updates, key_cols, partition_cols,
                 op_col, delete_op, ts_col, tiebreak_cols,
-                fs, jroot, root_existed,
-                clauses=clauses,
-                check_key_moves=check_key_moves,
+                fs, jroot, root_existed, clauses, check_key_moves,
             )
     finally:
         if _dir_is_empty(spark, path):
@@ -1036,6 +1042,137 @@ class _MergeClauses:
         self.not_matched_by_source_delete = not_matched_by_source_delete
 
 
+def _plan_delta(
+    spark: SparkSession,
+    updates: DataFrame,
+    snapshot: str,
+    stored_types,
+    key_cols: list[str],
+    partition_cols: list[str],
+    op_col: str | None,
+    ts_col: str | None,
+    clauses: _MergeClauses | None,
+    context: str,
+    cast_exempt: set,
+    evolve: bool,
+    part_aggs: list[Column],
+):
+    """The delta side of every merge, whatever the table layout. The
+    layout comes in as data: ``stored_types()`` returns the stored
+    column types (raising when the table cannot take a merge; it is
+    called only once the delta proved non-empty), ``cast_exempt``
+    names columns the cast check skips, and ``evolve`` allows stored
+    types to widen and new columns to be appended. Every refusal here
+    fires before any table data I/O.
+
+    1. Snapshot the delta: the raw updates are written to
+       ``snapshot`` so the delta plan is evaluated EXACTLY ONCE.
+       Without it a NONDETERMINISTIC delta (sampling, F.rand, a
+       recomputed shuffle) could yield different rows at the
+       touched-partitions collect and at the final write — a
+       partition written but absent from ``touched`` would be
+       replaced WITHOUT its survivors, silent row loss (r8 review).
+       Parquet-backed re-reads are stable; the extra write is
+       delta-sized. The row count rides the write as an observed
+       metric, so the empty-delta check (None: a no-op, even against
+       an absent table) costs no extra job. The caller owns the
+       snapshot's cleanup: the merged plan reads from it.
+    2. Align the delta to the stored types. The alignment may only
+       up-cast (r16): a delta column WIDER than the stored one widens
+       the stored type when ``evolve`` (zero rewrite — parquet readers
+       read the old narrow files through the wider schema) and
+       refuses otherwise; a wrap/cross cast always refuses (the
+       r15-verdict corruption class: ANSI-off bigint→int alignment
+       silently wrapped 2^40+7 to 7).
+    3. Delta columns the stored schema lacks (r15): in blind/ordered
+       mode they are appended when ``evolve`` and refused otherwise —
+       never silently discarded. Conditional-clause mode keeps its
+       extras-as-expression-inputs contract (clauses name what they
+       store); ``op_col`` is consumed by the merge, never stored.
+    4. ONE delta-sized job plans the merge: the touched-partition set
+       AND the blind/conditional dup-key test (keyed-row count vs
+       distinct-key count, r16; ordered mode folds multi-row keys by
+       design and is exempt). The loud per-key probe runs only on the
+       failure path. ``part_aggs`` adds per-partition aggregations: the
+       job then runs as GROUPING SETS ((partition_cols), ()), giving
+       one stats row per touched partition plus the global row the
+       dup-key test reads (which also catches a key illegally split
+       across two partitions).
+
+    Returns None for an empty delta, else ``(aligned, touched,
+    part_rows, widen_to, new_cols)``: ``part_rows`` are the
+    per-partition rows in ``touched`` order (None without
+    ``part_aggs``), ``widen_to`` maps columns whose stored type widens
+    to the delta's type."""
+    import functools
+    import operator
+
+    from pyspark.sql import Observation
+
+    obs = Observation()
+    updates.observe(obs, F.count(F.lit(1)).alias("n")).write.mode(
+        "overwrite"
+    ).parquet(snapshot)
+    delta = spark.read.schema(updates.schema).parquet(snapshot)
+    if obs.get["n"] == 0:
+        return None
+    cur_types = stored_types()
+    widen_to = _assert_safe_delta_casts(
+        delta.schema, cur_types, partition_cols, op_col, context,
+        widenable=evolve, exempt=cast_exempt,
+    )
+    target_types = {**cur_types, **widen_to}
+    aligned = delta.select(
+        *[
+            F.col(c).cast(target_types[c]).alias(c)
+            if c in target_types
+            else F.col(c)
+            for c in delta.columns
+        ]
+    )
+    new_cols: list[str] = []
+    if clauses is None:
+        new_cols = [
+            c for c in aligned.columns if c not in cur_types and c != op_col
+        ]
+        if new_cols and not evolve:
+            raise ValueError(
+                f"{context}: delta column(s) {new_cols} are not in the"
+                " stored schema; drop them from the delta, or append"
+                " them (NULL-backfilled for existing rows) with"
+                " schema_evolution=True on a manifest table"
+                " (ManifestTable.create). Silently discarding them was"
+                " never a contract."
+            )
+    nn = functools.reduce(
+        operator.and_, [F.col(k).isNotNull() for k in key_cols]
+    )
+    dup_aggs = [
+        F.count(F.when(nn, 1)).alias("_nk"),
+        F.count_distinct(*key_cols).alias("_nd"),
+    ]
+    part_rows = None
+    if part_aggs:
+        gcols = [F.col(c) for c in partition_cols]
+        rows = (
+            aligned.groupingSets([gcols, []], *gcols)
+            .agg(*part_aggs, *dup_aggs, F.grouping_id().alias("_gid"))
+            .collect()
+        )
+        total = next(r for r in rows if r["_gid"] != 0)
+        part_rows = [r for r in rows if r["_gid"] == 0]
+        touched = [tuple(r[: len(partition_cols)]) for r in part_rows]
+    else:
+        total = aligned.agg(
+            *dup_aggs, F.collect_set(F.struct(*partition_cols)).alias("_p")
+        ).collect()[0]
+        touched = [tuple(p) for p in total["_p"]]
+    if ts_col is None and total["_nk"] != total["_nd"]:
+        _assert_delta_key_unique(aligned, key_cols, context)
+    _reject_empty_string_partitions(touched, partition_cols)
+    return aligned, touched, part_rows, widen_to, new_cols
+
+
 def _merge_into_plain(
     spark: SparkSession,
     path: str,
@@ -1049,13 +1186,16 @@ def _merge_into_plain(
     fs,
     jroot,
     root_existed: bool,
-    clauses: _MergeClauses | None = None,
-    check_key_moves: bool = False,
+    clauses: _MergeClauses | None,
+    check_key_moves: bool,
 ) -> int:
-    """Dynamic-partition-overwrite commit path (plain Hive layout).
+    """Hive-layout commit: read the current state, stage the merged
+    rows already partitioned, publish them partition by partition.
     Caller holds the table write lock."""
     import functools
     import operator
+
+    from pyspark.sql import Observation
 
     staging = f"{path}/_merge_staging"
     _, jstaging = _hadoop_fs(spark, staging)
@@ -1066,113 +1206,41 @@ def _merge_into_plain(
         # publishes leave staging behind, so clean tables skip the walk.
         recover_all(spark, path, depth=len(partition_cols))
         _best_effort_delete(spark, staging)
-
-    # --- snapshot the delta FIRST: write the raw updates to a staging
-    # dir so the delta plan is evaluated EXACTLY ONCE. Without the
-    # snapshot, a NONDETERMINISTIC delta (sampling, F.rand, a
-    # recomputed shuffle) could yield different rows at the
-    # touched-partitions collect vs the final write: a partition staged
-    # but absent from `touched` would be dynamic-overwritten WITHOUT
-    # its survivors — silent row loss (r8 review). Parquet-backed
-    # re-reads are stable by construction; the extra write is
-    # delta-sized. This ordering also puts the empty-delta check
-    # BEFORE the table read, so a no-op delta against an absent table
-    # (a previous merge tombstoned the last partition) returns 0
-    # instead of PATH_NOT_FOUND.
     delta_staging = f"{path}/_merge_delta"
-    # the row count rides the snapshot write as an observed metric —
-    # the empty-delta check costs no extra job (it used to be a
-    # separate isEmpty() pass over the staged parquet)
-    from pyspark.sql import Observation
+    current_all = None
 
-    _snap_obs = Observation()
-    updates.observe(_snap_obs, F.count(F.lit(1)).alias("n")).write.mode(
-        "overwrite"
-    ).parquet(delta_staging)
-    try:
-        delta = spark.read.schema(updates.schema).parquet(delta_staging)
-        if _snap_obs.get["n"] == 0:
-            return 0
+    def stored_types() -> dict:
+        # the TABLE's read-back schema: partition directory names only
+        # type-infer to numeric/date/string, so a BOOLEAN (or other)
+        # partition column comes back as STRING and a raw union with
+        # the typed delta would fail — the delta aligns to these types,
+        # and everything downstream (touched list, partition predicate,
+        # written-set comparison, dir deletion) uses the aligned
+        # representation, so the two sides never disagree about a
+        # partition's identity
+        nonlocal current_all
         if not root_existed:
             raise ValueError(f"merge target table does not exist: {path}")
-
-        # align the delta to the TABLE's read-back schema: partition
-        # directory names only type-infer to numeric/date/string, so a
-        # BOOLEAN (or other) partition column comes back as STRING and
-        # a raw union with the typed delta would fail — cast delta
-        # columns to the current column types. Everything downstream —
-        # touched list, partition predicate, written-set comparison,
-        # dir deletion — uses the ALIGNED representation so the two
-        # sides can never disagree about a partition's identity.
         current_all = spark.read.parquet(path)
-        cur_types = {f.name: f.dataType for f in current_all.schema.fields}
-        # cast safety (r16): DATA columns may only up-cast (same
-        # refusal contract as the manifest path; the plain layout
-        # cannot widen at all — no manifest to carry the evolved
-        # schema, and schema-less readers would coerce per file).
-        # PARTITION columns are exempt: their read-back types come
-        # from directory-name inference (the documented reason this
-        # alignment exists), so delta-vs-inferred mismatches there are
-        # representational, not lossy.
-        _assert_safe_delta_casts(
-            delta.schema,
-            cur_types,
-            partition_cols,
-            op_col,
-            f"merge into {path} (hive layout)",
-            widenable=False,
-            exempt=set(partition_cols),
-        )
-        aligned = delta.select(
-            *[
-                F.col(c).cast(cur_types[c]).alias(c) if c in cur_types else F.col(c)
-                for c in delta.columns
-            ]
-        )
-        if clauses is None:
-            # same loud contract as the manifest path (r15): a delta
-            # column the table lacks is never silently discarded. The
-            # plain layout cannot evolve at all (see
-            # merge_into_partitioned's refusal), so the only recipe
-            # here is dropping the column or migrating the table.
-            extra = [
-                c
-                for c in aligned.columns
-                if c not in cur_types and c != op_col
-            ]
-            if extra:
-                raise ValueError(
-                    f"delta column(s) {extra} are not in the table"
-                    f" schema of {path}; drop them from the delta —"
-                    " schema evolution needs a manifest table"
-                    " (ManifestTable.create) and schema_evolution=True"
-                )
-        # ONE delta-sized job for the whole planning read: the touched
-        # partition set AND the dup-key test (blind/conditional contract
-        # enforcement, r16 — keyed-row count vs distinct-key count; the
-        # loud per-key probe runs only on the failure path). Folding the
-        # two collects (plus the old isEmpty) removes two planning
-        # passes over the delta per merge.
-        import functools as _ft
-        import operator as _op
+        return {f.name: f.dataType for f in current_all.schema.fields}
 
-        _nn = _ft.reduce(
-            _op.and_, [F.col(k).isNotNull() for k in key_cols]
+    try:
+        plan = _plan_delta(
+            spark, updates, delta_staging, stored_types, key_cols,
+            partition_cols, op_col, ts_col, clauses,
+            f"merge into {path} (hive layout)",
+            # partition columns' read-back types come from
+            # directory-name inference (above): a delta-vs-inferred
+            # mismatch there is representational, not lossy. The plain
+            # layout cannot evolve at all — no manifest to carry the
+            # evolved schema, and schema-less readers coerce per file.
+            cast_exempt=set(partition_cols),
+            evolve=False,
+            part_aggs=[],
         )
-        _plan = aligned.agg(
-            F.count(F.when(_nn, 1)).alias("_nk"),
-            F.countDistinct(*key_cols).alias("_nd"),
-            F.collect_set(F.struct(*partition_cols)).alias("_parts"),
-        ).collect()[0]
-        if ts_col is None and _plan["_nk"] != _plan["_nd"]:
-            # ordered mode folds multi-row keys by design and is exempt
-            _assert_delta_key_unique(
-                aligned, key_cols, f"merge into {path}"
-            )
-        touched = [
-            tuple(p[c] for c in partition_cols) for p in _plan["_parts"]
-        ]
-        _reject_empty_string_partitions(touched, partition_cols)
+        if plan is None:
+            return 0
+        aligned, touched = plan[:2]
         pred = functools.reduce(
             operator.or_,
             [
@@ -1469,33 +1537,47 @@ def _merge_into_manifest(
     delete_op: str,
     ts_col: str | None,
     tiebreak_cols: tuple[str, ...],
-    retain_versions: int = 2,
-    clauses: _MergeClauses | None = None,
-    file_granular: bool = True,
-    schema_evolution: bool = False,
-    check_key_moves: bool = False,
+    retain_versions: int,
+    clauses: _MergeClauses | None,
+    file_granular: bool,
+    schema_evolution: bool,
+    check_key_moves: bool,
+    optimistic: bool,
+    lock_wait_seconds: float | None,
+    lock_stale_after_seconds: float | None,
 ) -> int:
-    """Atomic-commit merge path for manifest tables (caller holds the
-    table write lock). Same semantics as the plain path; the publish
-    is a manifest/pointer swap, so a crash at ANY point leaves the
-    previous version fully readable, and an emptied partition drops
-    out of the manifest instead of racing a directory delete. The
-    current-state read is manifest-pruned to the touched partitions —
-    no file listing of untouched data. Schema alignment casts against
-    the MANIFEST's stored schema (partition values never round-trip
-    through directory-name inference here, so the plain layout's
-    ``'01'`` string landmine cannot occur)."""
+    """Atomic-commit merge for manifest tables: the publish is a
+    manifest/pointer swap, so a crash at ANY point leaves the previous
+    version fully readable, and an emptied partition drops out of the
+    manifest instead of racing a directory delete.
+
+    LOCKED (the caller holds the write lease): one
+    ``overwrite_partitions`` commit, refused if the table moved since
+    the plan read it. OPTIMISTIC: the ENTIRE compute — delta snapshot,
+    current-state read, merge shuffle, generation write, stats
+    aggregation — runs WITHOUT the lease (staged into a GC-invisible
+    dot-dir); only the rename + metadata walk + manifest publish
+    serialize under it (``_stage_and_publish``, waiting up to
+    ``lock_wait_seconds``, 60 s by default). Two pipelines merging
+    disjoint partition sets therefore overlap their heavy work, and
+    the rebase check covers every commit since this merge READ the
+    table, so an overlapping winner still fails this writer loudly
+    instead of losing its update."""
+    import uuid
+
     from .table import ManifestTable
 
     mt = ManifestTable(spark, path)
     delta_staging = f"{path}/_merge_delta"
+    if optimistic:
+        # concurrent optimistic merges must not overwrite each other's
+        # snapshot (the lease serializes the locked path's shared name)
+        delta_staging += f"-{uuid.uuid4().hex}"
     try:
         plan = _manifest_merge_plan(
             spark, mt, updates, key_cols, partition_cols, op_col,
-            delete_op, ts_col, tiebreak_cols, delta_staging,
-            clauses=clauses, file_granular=file_granular,
-            schema_evolution=schema_evolution,
-            check_key_moves=check_key_moves,
+            delete_op, ts_col, tiebreak_cols, delta_staging, clauses,
+            file_granular, schema_evolution, check_key_moves,
         )
         if plan is None:
             return 0
@@ -1503,12 +1585,23 @@ def _merge_into_manifest(
         op = {"name": "merge", "n_partitions": len(touched)}
         if carry:
             op["file_scoped"] = len(carry)
-        mt.overwrite_partitions(
-            merged, touched, expected_version=ver, assume_locked=True,
-            retain_versions=retain_versions,
-            op_info=op,
-            carry_files=carry,
-        )
+        if optimistic:
+            op["optimistic"] = True
+            mt._stage_and_publish(
+                merged, touched, ver, op_info=op, carry_files=carry,
+                retain_versions=retain_versions,
+                on_conflict="rebase_disjoint",
+                lock_wait_seconds=(
+                    60.0 if lock_wait_seconds is None else lock_wait_seconds
+                ),
+                lock_stale_after_seconds=lock_stale_after_seconds,
+            )
+        else:
+            mt.overwrite_partitions(
+                merged, touched, expected_version=ver, assume_locked=True,
+                retain_versions=retain_versions, op_info=op,
+                carry_files=carry,
+            )
         return len(touched)
     finally:
         _best_effort_delete(spark, delta_staging)
@@ -1525,20 +1618,18 @@ def _manifest_merge_plan(
     ts_col: str | None,
     tiebreak_cols: tuple[str, ...],
     delta_staging: str,
-    clauses: _MergeClauses | None = None,
-    file_granular: bool = True,
-    schema_evolution: bool = False,
-    check_key_moves: bool = False,
+    clauses: _MergeClauses | None,
+    file_granular: bool,
+    schema_evolution: bool,
+    check_key_moves: bool,
 ):
-    """The compute phase shared by the locked and optimistic manifest
-    merge paths: snapshot the delta (exactly-once evaluation, same
-    rationale as the plain path — a nondeterministic delta must not
-    disagree between the touched-partitions collect and the
-    generation write), align it to the manifest schema, and build the
-    lazy merged plan over the manifest-pruned current state. Returns
-    ``(merged, touched, version_read, carry)`` or None for an empty
-    delta; the caller owns ``delta_staging`` cleanup (the merged plan
-    reads from it, so it must outlive the commit).
+    """The table side of a manifest merge: plan the delta against the
+    MANIFEST's stored schema (``_plan_delta``; partition values never
+    round-trip through directory-name inference here, so the plain
+    layout's ``'01'`` string landmine cannot occur), then build the
+    lazy merged plan over the manifest-pruned current state — no file
+    listing of untouched data. Returns ``(merged, touched,
+    version_read, carry)`` or None for an empty delta.
 
     FILE-GRANULAR current side (r14, ``file_granular``): within each
     touched partition, only the files whose per-file KEY bounds
@@ -1557,116 +1648,29 @@ def _manifest_merge_plan(
     ``when_not_matched_by_source_delete``, whose candidates are ALL
     current rows, so any truthy nmbs disables the file-granular path
     for the statement."""
-    ver = mt.current_version()
-    # the row count rides the snapshot write as an observed metric —
-    # the empty-delta check costs no extra job (it used to be a
-    # separate isEmpty() pass over the staged parquet)
-    from pyspark.sql import Observation
-
-    _snap_obs = Observation()
-    updates.observe(_snap_obs, F.count(F.lit(1)).alias("n")).write.mode(
-        "overwrite"
-    ).parquet(delta_staging)
-    delta = spark.read.schema(updates.schema).parquet(delta_staging)
-    if _snap_obs.get["n"] == 0:
-        return None
-    if ver is None:
-        raise ValueError(f"merge target table does not exist: {mt.path}")
-    man = mt.manifest(ver)
-    if list(man["partition_cols"]) != list(partition_cols):
-        raise ValueError(
-            f"table {mt.path} is partitioned by "
-            f"{man['partition_cols']}; merge called with "
-            f"{partition_cols}"
-        )
     from pyspark.sql import types as T
 
-    # reuse the manifest already in hand — mt.schema(ver) would
-    # re-read the same small file (extra metadata RPC per commit)
-    stored = T.StructType.fromJson(man["schema"])
-    cur_types = {f.name: f.dataType for f in stored.fields}
-    # cast safety (r16): the alignment projection below may only
-    # up-cast. A delta column WIDER than the stored column either
-    # widens the stored type (locked blind/ordered path with
-    # schema_evolution=True — zero rewrite, parquet readers read the
-    # old narrow files through the new schema) or refuses loudly; a
-    # wrap/cross cast always refuses (the r15-verdict corruption
-    # class: ANSI-off bigint→int alignment silently wrapped 2^40+7
-    # to 7).
-    widen_to = _assert_safe_delta_casts(
-        delta.schema,
-        cur_types,
-        partition_cols,
-        op_col,
-        f"merge into {mt.path}",
-        widenable=schema_evolution and clauses is None,
-    )
-    target_types = {**cur_types, **widen_to}
-    aligned = delta.select(
-        *[
-            F.col(c).cast(target_types[c]).alias(c)
-            if c in target_types
-            else F.col(c)
-            for c in delta.columns
-        ]
-    )
-    # MERGE schema evolution (r15) — the defined contract for delta
-    # columns the stored schema lacks. Conditional-clause mode keeps
-    # its documented extras-as-expression-inputs semantics (clauses
-    # name what they store); blind/ordered mode either refuses loudly
-    # or (opt-in) appends the new columns, NULL-backfilled everywhere
-    # the delta didn't write. op_col is consumed by the merge, never
-    # stored, so it is not an extra.
-    new_cols: list[str] = []
-    if clauses is None:
-        new_cols = [
-            c
-            for c in aligned.columns
-            if c not in cur_types and c != op_col
-        ]
-        if new_cols and not schema_evolution:
-            raise ValueError(
-                f"delta column(s) {new_cols} are not in the stored"
-                f" schema of {mt.path} — pass schema_evolution=True"
-                " to append them (NULL-backfilled for existing rows),"
-                " or drop them from the delta. (Silently discarding"
-                " them was never a contract.)"
-            )
-        if new_cols:
-            tomb = sorted(
-                set(new_cols) & set(man.get("dropped_cols") or [])
-            )
-            if tomb:
-                # same resurrection guard _finalize_generation
-                # enforces — refuse BEFORE any data I/O
-                raise ValueError(
-                    f"column name(s) {tomb} were dropped from this"
-                    " table and may not be re-added by schema"
-                    " evolution: retained pre-drop data files still"
-                    " carry values under these names; pick a fresh"
-                    " name"
-                )
-    # blind/conditional contract enforcement (r16): refuse a dup-keyed
-    # delta before any table read — ordered mode folds multi-row keys
-    # by design and is exempt (the streaming merge sink therefore pays
-    # nothing per batch). Since r16-opt the TEST (keyed-row count vs
-    # distinct-key count) is folded into the planning aggregation
-    # below instead of running as its own delta pass; the loud per-key
-    # probe runs only on the failure path. Both branches still refuse
-    # before any table data I/O.
-    import functools as _ft
-    import operator as _op
-
-    _dup_check = ts_col is None
-    _nn_keys = _ft.reduce(
-        _op.and_, [F.col(k).isNotNull() for k in key_cols]
-    )
     from .table import (
         _entry_scan_selection,
-        _is_abs_dir,
+        _file_scoped_carry,
         _partition_key,
-        _resolve_entry_file,
     )
+
+    ver = mt.current_version()
+    man = mt.manifest(ver) if ver is not None else None
+    stored = T.StructType.fromJson(man["schema"]) if man else None
+    cur_types = {f.name: f.dataType for f in stored.fields} if man else {}
+
+    def stored_types() -> dict:
+        if man is None:
+            raise ValueError(f"merge target table does not exist: {mt.path}")
+        if list(man["partition_cols"]) != list(partition_cols):
+            raise ValueError(
+                f"table {mt.path} is partitioned by "
+                f"{man['partition_cols']}; merge called with "
+                f"{partition_cols}"
+            )
+        return cur_types
 
     _RANGEABLE = (
         T.ByteType, T.ShortType, T.IntegerType, T.LongType,
@@ -1679,50 +1683,45 @@ def _manifest_merge_plan(
             clauses is None
             or clauses.not_matched_by_source_delete is False
         )
-        and all(k in aligned.columns for k in key_cols)
+        and all(k in updates.columns for k in key_cols)
         and all(
             k in cur_types and isinstance(cur_types[k], _RANGEABLE)
             for k in key_cols
         )
     )
+    # fg planning rides the delta planner's one job: each partition's
+    # delta key range + distinct-key count (deletes included — a
+    # tombstone contests its key like any write)
+    part_aggs = []
+    if fg_ok:
+        for i, k in enumerate(key_cols):
+            part_aggs.append(F.min(F.col(k)).alias(f"_lo_{i}"))
+            part_aggs.append(F.max(F.col(k)).alias(f"_hi_{i}"))
+            part_aggs.append(F.count_distinct(F.col(k)).alias(f"_cd_{i}"))
+    plan = _plan_delta(
+        spark, updates, delta_staging, stored_types, key_cols,
+        partition_cols, op_col, ts_col, clauses, f"merge into {mt.path}",
+        cast_exempt=set(),
+        evolve=schema_evolution,
+        part_aggs=part_aggs,
+    )
+    if plan is None:
+        return None
+    aligned, touched, rows, widen_to, new_cols = plan
+    tomb = sorted(set(new_cols) & set(man.get("dropped_cols") or []))
+    if tomb:
+        # same resurrection guard _finalize_generation enforces —
+        # refuse BEFORE any table data I/O
+        raise ValueError(
+            f"column name(s) {tomb} were dropped from this"
+            " table and may not be re-added by schema"
+            " evolution: retained pre-drop data files still"
+            " carry values under these names; pick a fresh"
+            " name"
+        )
     carry: dict[str, dict] = {}
     if fg_ok:
-        # ONE job: the touched-partition list, each partition's delta
-        # key range + distinct-key count (deletes included — a
-        # tombstone contests its key like any write), AND the global
-        # dup-key test. GROUPING SETS ((partition_cols), ()) gives the
-        # per-partition stats rows plus one global row whose
-        # keyed-count / distinct-key-count mismatch detects a
-        # dup-keyed delta (including a key illegally split across two
-        # partitions) without the separate delta pass the probe used
-        # to cost.
-        aggs = []
-        for i, k in enumerate(key_cols):
-            aggs.append(F.min(F.col(k)).alias(f"_lo_{i}"))
-            aggs.append(F.max(F.col(k)).alias(f"_hi_{i}"))
-            aggs.append(
-                F.count_distinct(F.col(k)).alias(f"_cd_{i}")
-            )
-        gcols = [F.col(c) for c in partition_cols]
-        all_rows = (
-            aligned.groupingSets([gcols, []], *gcols)
-            .agg(
-                *aggs,
-                F.count(F.when(_nn_keys, 1)).alias("_nkr"),
-                F.count_distinct(*key_cols).alias("_ndk"),
-                F.grouping_id().alias("_gid"),
-            )
-            .collect()
-        )
-        rows = [r for r in all_rows if r["_gid"] == 0]
-        total = next(r for r in all_rows if r["_gid"] != 0)
-        if _dup_check and total["_nkr"] != total["_ndk"]:
-            _assert_delta_key_unique(
-                aligned, key_cols, f"merge into {mt.path}"
-            )
         np_ = len(partition_cols)
-        touched = [tuple(r[:np_]) for r in rows]
-        _reject_empty_string_partitions(touched, partition_cols)
         live = {e["key"]: e for e in man["entries"]}
         pc, sk = mt._pcols_for_pruning(man, stored)
         # EXACT key sets where the delta is key-sparse (r14): a
@@ -1823,28 +1822,10 @@ def _manifest_merge_plan(
             if sel is None or len(sel) >= len(fmap):
                 full_parts.append(t)
                 continue
-            base_dir = e["dir"]
-            resolved = (
-                base_dir
-                if _is_abs_dir(base_dir)
-                else f"{mt.path}/{base_dir}"
+            paths, carry[_partition_key(t)] = _file_scoped_carry(
+                mt.path, e, sel
             )
-            survivors = {
-                (
-                    n
-                    if "/" in n or _is_abs_dir(n)
-                    else f"{base_dir}/{n}"
-                ): stv
-                for n, stv in fmap.items()
-                if n not in sel
-            }
-            fg_paths.extend(
-                _resolve_entry_file(mt.path, resolved, n) for n in sel
-            )
-            carry[_partition_key(t)] = {
-                "files": survivors,
-                "dir": base_dir,
-            }
+            fg_paths.extend(paths)
         parts = []
         if full_parts:
             parts.append(
@@ -1863,21 +1844,6 @@ def _manifest_merge_plan(
         else:
             current = parts[0].unionByName(parts[1])
     else:
-        # same single-job planning read as the fg branch: touched set
-        # + dup-key test in one delta-sized aggregation
-        _plan = aligned.agg(
-            F.count(F.when(_nn_keys, 1)).alias("_nkr"),
-            F.count_distinct(*key_cols).alias("_ndk"),
-            F.collect_set(F.struct(*partition_cols)).alias("_parts"),
-        ).collect()[0]
-        if _dup_check and _plan["_nkr"] != _plan["_ndk"]:
-            _assert_delta_key_unique(
-                aligned, key_cols, f"merge into {mt.path}"
-            )
-        touched = [
-            tuple(p[c] for c in partition_cols) for p in _plan["_parts"]
-        ]
-        _reject_empty_string_partitions(touched, partition_cols)
         current = mt.read(partitions=touched, manifest_dict=man)
     if widen_to:
         # stored-type widening (r16): cast the current side UP to the
@@ -1964,82 +1930,6 @@ def _manifest_merge_plan(
         tiebreak_cols, clauses=clauses,
     )
     return merged, touched, ver, carry or None
-
-
-def _merge_into_manifest_optimistic(
-    spark: SparkSession,
-    path: str,
-    updates: DataFrame,
-    key_cols: list[str],
-    partition_cols: list[str],
-    op_col: str | None,
-    delete_op: str,
-    ts_col: str | None,
-    tiebreak_cols: tuple[str, ...],
-    retain_versions: int,
-    lock_wait_seconds: float,
-    lock_stale_after_seconds: float | None = None,
-    clauses: _MergeClauses | None = None,
-    file_granular: bool = True,
-    check_key_moves: bool = False,
-) -> int:
-    """Optimistic-concurrency merge: the ENTIRE compute — delta
-    snapshot, current-state read, merge shuffle, generation write,
-    stats aggregation — runs WITHOUT the write lease (staged into a
-    GC-invisible dot-dir); only the rename + metadata walk + manifest
-    publish serialize under it. Two pipelines merging disjoint
-    partition sets therefore overlap their heavy work fully, and the
-    rebase check covers every commit since this merge READ the table
-    (``base_version=ver``), so an overlapping winner still fails this
-    writer loudly instead of losing its update. The rebased merge is
-    correct precisely because disjointness means the winner did not
-    change any partition this merge's output depends on."""
-    import uuid as _uuid
-
-    from .table import ManifestTable
-
-    mt = ManifestTable(spark, path)
-    # UNIQUE delta dir: concurrent optimistic merges must not
-    # overwrite each other's snapshot (the locked path can share a
-    # name because the lease serializes it)
-    delta_staging = f"{path}/_merge_delta-{_uuid.uuid4().hex}"
-    try:
-        plan = _manifest_merge_plan(
-            spark, mt, updates, key_cols, partition_cols, op_col,
-            delete_op, ts_col, tiebreak_cols, delta_staging,
-            clauses=clauses,
-            # r15: the staged path carries survivor references too —
-            # stage_commit(carry_files=) is rebase-sound because the
-            # conflict check compares whole entry identities (dir +
-            # files map): a rebase succeeds only when the carrying
-            # entries are bit-identical between base and winner
-            file_granular=file_granular,
-            check_key_moves=check_key_moves,
-        )
-        if plan is None:
-            return 0
-        merged, touched, ver, carry = plan
-        op = {
-            "name": "merge",
-            "n_partitions": len(touched),
-            "optimistic": True,
-        }
-        if carry:
-            op["file_scoped"] = len(carry)
-        mt._stage_and_publish(
-            merged,
-            touched,
-            ver,
-            op_info=op,
-            carry_files=carry,
-            retain_versions=retain_versions,
-            on_conflict="rebase_disjoint",
-            lock_wait_seconds=lock_wait_seconds,
-            lock_stale_after_seconds=lock_stale_after_seconds,
-        )
-        return len(touched)
-    finally:
-        _best_effort_delete(spark, delta_staging)
 
 
 def _clear_root_keep_lock(fs, jroot) -> None:

@@ -630,6 +630,26 @@ def _resolve_entry_file(root: str, base: str, name: str) -> str:
     return f"{base}/{name}"
 
 
+def _file_scoped_carry(root: str, entry: dict, sel) -> tuple[list, dict]:
+    """Split a manifest entry for a FILE-granular rewrite (r14, the
+    merge's and DML's deletion-vector-lite path): the files named in
+    ``sel`` are read and rewritten, every other file carries forward
+    byte-identically inside the same entry. Returns ``(paths,
+    carry)``: the resolved paths of the ``sel`` files, and the entry's
+    ``carry_files`` value ``{"files": survivors, "dir": entry dir}``
+    (survivor keys qualified by the old dir, so the new generation's
+    entry can reference them)."""
+    base_dir = entry["dir"]
+    resolved = base_dir if _is_abs_dir(base_dir) else f"{root}/{base_dir}"
+    survivors = {
+        (n if "/" in n or _is_abs_dir(n) else f"{base_dir}/{n}"): st
+        for n, st in entry["files"].items()
+        if n not in sel
+    }
+    paths = [_resolve_entry_file(root, resolved, n) for n in sel]
+    return paths, {"files": survivors, "dir": base_dir}
+
+
 def _fold_file_stats(files: dict[str, dict]) -> dict:
     """Refold ENTRY-level stats from a merged per-file stats map —
     the driver-side aggregation behind file-granular DML: the new
@@ -3467,7 +3487,6 @@ class ManifestTable:
     def compact(
         self,
         retain_versions: int | None = None,
-        assume_locked: bool = False,
         cluster_by: list[str] | None = None,
         target_records_per_file: int | None = None,
         partitions: list[tuple] | None = None,
@@ -3739,7 +3758,6 @@ class ManifestTable:
                     ver,
                     op_info={**op, "optimistic": True},
                     retain_versions=retain_versions,
-                    assume_locked=assume_locked,
                     lock_stale_after_seconds=lock_stale_after_seconds,
                 )
             return len(touched)
@@ -3753,8 +3771,6 @@ class ManifestTable:
                     op_info=op,
                 )
 
-        if assume_locked:
-            return _run(ver)
         with table_write_lock(
             self.spark,
             self.path,
@@ -3963,7 +3979,6 @@ class ManifestTable:
         retain_versions: int | None = 2,
         on_conflict: str = "rebase_disjoint",
         lock_wait_seconds: float = 60.0,
-        assume_locked: bool = False,
         lock_stale_after_seconds: float | None = None,
         op_info: dict | None = None,
     ) -> int:
@@ -4071,8 +4086,6 @@ class ManifestTable:
             )
             return version
 
-        if assume_locked:
-            return _do()
         with table_write_lock(
             self.spark,
             self.path,
@@ -4161,7 +4174,6 @@ class ManifestTable:
         self,
         version: int,
         retain_versions: int | None = None,
-        assume_locked: bool = False,
     ) -> int:
         """Roll the table back to retained ``version`` as a NEW commit
         (the `RESTORE TABLE ... TO VERSION` analog) — METADATA-ONLY:
@@ -4244,8 +4256,6 @@ class ManifestTable:
             )
             return cur + 1
 
-        if assume_locked:
-            return _do()
         with table_write_lock(self.spark, self.path, holder="restore"):
             return _do()
 
@@ -4253,7 +4263,6 @@ class ManifestTable:
         self,
         cols: list[str],
         retain_versions: int | None = None,
-        assume_locked: bool = False,
     ) -> int:
         """Drop non-partition column(s) as a METADATA-ONLY commit
         (r13) — the `ALTER TABLE DROP COLUMN` analog: the new
@@ -4449,8 +4458,6 @@ class ManifestTable:
             )
             return cur + 1
 
-        if assume_locked:
-            return _do()
         with table_write_lock(self.spark, self.path, holder="drop-columns"):
             return _do()
 
@@ -4458,7 +4465,6 @@ class ManifestTable:
         self,
         cols: dict[str, "str | T.DataType"],
         retain_versions: int | None = None,
-        assume_locked: bool = False,
     ) -> int:
         """``ALTER TABLE ADD COLUMNS`` (r15): append NULLABLE columns
         to the table schema as a ZERO-data-I/O metadata commit — the
@@ -4567,8 +4573,6 @@ class ManifestTable:
             )
             return cur + 1
 
-        if assume_locked:
-            return _do()
         with table_write_lock(self.spark, self.path, holder="add-columns"):
             return _do()
 
@@ -4577,7 +4581,6 @@ class ManifestTable:
         col: str,
         new_type: "str | T.DataType",
         retain_versions: int | None = None,
-        assume_locked: bool = False,
     ) -> int:
         """``ALTER TABLE ALTER COLUMN TYPE`` — WIDENING only (r16): a
         pure metadata commit, zero data I/O. Every entry re-references
@@ -4698,8 +4701,6 @@ class ManifestTable:
             )
             return cur + 1
 
-        if assume_locked:
-            return _do()
         with table_write_lock(
             self.spark, self.path, holder="alter-column"
         ):
@@ -4716,7 +4717,6 @@ class ManifestTable:
         name: str,
         expr_sql: str,
         retain_versions: int | None = None,
-        assume_locked: bool = False,
     ) -> int:
         """`ALTER TABLE ADD CONSTRAINT ... CHECK (...)` (r13): persist
         a row-level invariant the table enforces from now on. Delta
@@ -4781,8 +4781,6 @@ class ManifestTable:
             )
             return cur + 1
 
-        if assume_locked:
-            return _do()
         with table_write_lock(
             self.spark, self.path, holder="add-constraint"
         ):
@@ -4792,7 +4790,6 @@ class ManifestTable:
         self,
         name: str,
         retain_versions: int | None = None,
-        assume_locked: bool = False,
     ) -> int:
         """Remove a CHECK constraint — metadata-only. Returns the new
         version."""
@@ -4833,8 +4830,6 @@ class ManifestTable:
             )
             return cur + 1
 
-        if assume_locked:
-            return _do()
         with table_write_lock(
             self.spark, self.path, holder="drop-constraint"
         ):
@@ -4844,7 +4839,6 @@ class ManifestTable:
         self,
         new_partition_cols: list[str],
         retain_versions: int | None = None,
-        assume_locked: bool = False,
         target_records_per_file: int | None = None,
     ) -> int:
         """Partition evolution (r13) — change the table's partition
@@ -4922,8 +4916,6 @@ class ManifestTable:
                 )
             return cur + 1
 
-        if assume_locked:
-            return _do()
         with table_write_lock(
             self.spark, self.path, holder="repartition"
         ):
@@ -5009,7 +5001,6 @@ class ManifestTable:
         self,
         where: list[tuple] | Column,
         retain_versions: int | None = None,
-        assume_locked: bool = False,
         count_matched: bool = True,
         optimistic: bool = False,
         file_granular: bool = True,
@@ -5079,8 +5070,8 @@ class ManifestTable:
         write under a stale-break lease (the streaming sink's TTL
         sweep)."""
         return self._dml_rewrite(
-            where, None, retain_versions, assume_locked, count_matched,
-            optimistic, file_granular, lock_stale_after_seconds,
+            where, None, retain_versions, count_matched, optimistic,
+            file_granular, lock_stale_after_seconds,
         )
 
     def update_where(
@@ -5088,7 +5079,6 @@ class ManifestTable:
         where: list[tuple] | Column,
         set: dict[str, "Column | str"],
         retain_versions: int | None = None,
-        assume_locked: bool = False,
         count_matched: bool = True,
         optimistic: bool = False,
         file_granular: bool = True,
@@ -5120,9 +5110,8 @@ class ManifestTable:
         if not set:
             raise ValueError("update_where needs a non-empty set=")
         return self._dml_rewrite(
-            where, dict(set), retain_versions, assume_locked,
-            count_matched, optimistic, file_granular,
-            lock_stale_after_seconds,
+            where, dict(set), retain_versions, count_matched,
+            optimistic, file_granular, lock_stale_after_seconds,
         )
 
     def _dml_rewrite(
@@ -5130,7 +5119,6 @@ class ManifestTable:
         where,
         set_cols: dict | None,
         retain_versions: int | None,
-        assume_locked: bool,
         count_matched: bool = True,
         optimistic: bool = False,
         file_granular: bool = True,
@@ -5249,34 +5237,14 @@ class ManifestTable:
                             # untouched, zero I/O
                             untouched += 1
                             continue
-                        base_dir = e["dir"]
-                        survivors = {
-                            (
-                                n
-                                if "/" in n or _is_abs_dir(n)
-                                else f"{base_dir}/{n}"
-                            ): stv
-                            for n, stv in fmap.items()
-                            if n not in sel
-                        }
-                        resolved_base = (
-                            base_dir
-                            if _is_abs_dir(base_dir)
-                            else f"{self.path}/{base_dir}"
+                        paths, carried = _file_scoped_carry(
+                            self.path, e, sel
                         )
-                        fg_paths.extend(
-                            _resolve_entry_file(
-                                self.path, resolved_base, n
-                            )
-                            for n in sel
-                        )
-                        fg_carry[_partition_key(vals)] = {
-                            "files": survivors,
-                            "dir": base_dir,
-                        }
+                        fg_paths.extend(paths)
+                        fg_carry[_partition_key(vals)] = carried
                         fg_touched.append(vals)
                         files_rewritten += len(sel)
-                        files_carried += len(survivors)
+                        files_carried += len(carried["files"])
                         if r is None:
                             rw_rows_known = False
                         else:
@@ -5393,7 +5361,6 @@ class ManifestTable:
                     op_info=op,
                     carry_files=fg_carry or None,
                     retain_versions=retain_versions,
-                    assume_locked=assume_locked,
                     lock_stale_after_seconds=lock_stale_after_seconds,
                 )
             else:
@@ -5431,10 +5398,9 @@ class ManifestTable:
                 counts["rows_updated"] = matched
             return counts
 
-        if optimistic or assume_locked:
-            # optimistic: the whole evaluation runs lock-free; only
-            # commit_staged's publish contends (and may itself be
-            # called assume_locked by a caller holding the lease)
+        if optimistic:
+            # the whole evaluation runs lock-free; only
+            # commit_staged's publish contends
             with scoped_conf(self.spark, ENGINE_SQL_CONF):
                 return _do(self.current_version())
         with scoped_conf(self.spark, ENGINE_SQL_CONF), table_write_lock(
@@ -5808,7 +5774,6 @@ class ManifestTable:
     def vacuum(
         self,
         retain_versions: int | None = None,
-        assume_locked: bool = False,
         staging_ttl_seconds: float | None = 86400.0,
         retain_hours: float | None = None,
         dry_run: bool = False,
@@ -5954,9 +5919,6 @@ class ManifestTable:
                 fs, jp = _hadoop_fs(self.spark, p)
                 fs.delete(jp, True)
 
-        if assume_locked:
-            _do()
-            return None
         with table_write_lock(self.spark, self.path, holder="vacuum"):
             _do()
         return None

@@ -94,15 +94,15 @@ def dedup_against_index(
     (parquet reads are lazy — ordering by action time is not reliable)
     and replayed appends of the same batch can never self-match.
     """
-    import os
-
     from pyspark.sql import functions as F
+
+    from ..operators.publish import exists
 
     spark = new_docs.sparkSession
     sets, buckets, sigs = _shingles_and_buckets(
         new_docs, id_col, text_col, n, num_hashes, bands
     )
-    had_index = os.path.exists(f"{index_dir}/buckets")
+    had_index = exists(spark, f"{index_dir}/buckets")
     if update_index:
         buckets.write.mode("append").parquet(f"{index_dir}/buckets")
         sets.write.mode("append").parquet(f"{index_dir}/sets")

@@ -30,7 +30,14 @@ from pyspark.sql import functions as F
 from ..envelope import from_binary_files, with_derived
 from ..functions.derivations import failure_report
 from ..operators.extract import Extractor, extract_documents, stub_extractor
-from ..operators.publish import discard, publish_file, recover, replace_dir
+from ..operators.publish import (
+    _hadoop_fs,
+    discard,
+    exists,
+    publish_file,
+    recover,
+    replace_dir,
+)
 from ..operators.retry import DEFAULT_POLICY, RetryPolicy, split_retry_dlq
 from ..operators.validate import with_validation
 
@@ -135,15 +142,17 @@ def process_envelope_batch(
     return PipelineResult(incoming, processed, retry_buffer, dlq, cached)
 
 
-def _has_parquet_files(path: str) -> bool:
+def _has_parquet_files(spark: SparkSession, path: str) -> bool:
     """True if ``path`` holds at least one parquet data file — an empty
     leg directory (zero-row dynamic-overwrite leaves metadata only) is
     indistinguishable from 'absent' to a reader, but a populated one
     whose read fails is real corruption the caller must surface."""
-    import os
-
-    for root, _dirs, files in os.walk(path):
-        if any(f.endswith(".parquet") for f in files):
+    fs, jpath = _hadoop_fs(spark, path)
+    if not fs.exists(jpath):
+        return False
+    files = fs.listFiles(jpath, True)
+    while files.hasNext():
+        if files.next().getPath().getName().endswith(".parquet"):
             return True
     return False
 
@@ -279,12 +288,11 @@ def _stability_gate(
     source for deterministic tests.
     """
     import datetime as _dt
-    import os
 
     path = f"{out_dir}/deferred"
     recover(spark, path)
     discard(spark, f"{path}__rebuild")  # uncommitted: the old buffer wins
-    if os.path.exists(path):
+    if exists(spark, path):
         # the buffer is a completed non-partitioned parquet write: a
         # read failure here is real corruption and must surface — a
         # swallowed error followed by the rebuild would destroy rows
@@ -380,11 +388,9 @@ def start_file_pipeline(
 
     def sink(batch_df: DataFrame, epoch_id: int) -> None:
         if heartbeat:
-            import os
-
             batch_df = batch_df.filter(~F.col("_hb")).drop("_hb")
             # idle tick: no new files and nothing parked — skip the route
-            if not os.path.exists(f"{out_dir}/deferred") and not batch_df.take(1):
+            if not exists(spark, f"{out_dir}/deferred") and not batch_df.take(1):
                 return
         commit_deferred = None
         if min_age_seconds:
@@ -452,14 +458,13 @@ def replay_due_retries(
       that row through cannot be reprocessed (on a cluster this is the
       MERGE condition of a transactional retry table; here it's one
       column-pruned scan of processed/ per drain)."""
-    import os
-
     from ..operators.retry import due_for_retry
+    from ..operators.table import _read_small_file
 
     buf_path = f"{out_dir}/retry"
     seq_path = f"{out_dir}/retry__drain_seq"
     recover(spark, buf_path, staged=f"{buf_path}__rebuild")
-    if not os.path.exists(buf_path):
+    if not exists(spark, buf_path):
         return None
     now_col = F.lit(now).cast("timestamp")
     # pruned due-probe FIRST: on an idle drain (the common case on a
@@ -471,7 +476,7 @@ def replay_due_retries(
         return None
     buf = spark.read.parquet(buf_path)
     proc_path = f"{out_dir}/processed"
-    if _has_parquet_files(proc_path):
+    if _has_parquet_files(spark, proc_path):
         # a real read failure here must ABORT the drain (it retries
         # later) — silently skipping the guard would reprocess rows
         # already in processed/ and break effectively-once
@@ -493,7 +498,7 @@ def replay_due_retries(
     # _has_parquet_files, not exists: a batch whose every row was
     # rejected leaves a metadata-only incoming/ dir (zero-row dynamic
     # overwrite) that a parquet read can't infer a schema from
-    if _has_parquet_files(inc_path):
+    if _has_parquet_files(spark, inc_path):
         stored = (
             spark.read.parquet(inc_path)
             .select(F.col("correlation_id").alias("_cid"), F.col("content").alias("_c"))
@@ -522,11 +527,8 @@ def replay_due_retries(
     # partial incoming/failed output survives as duplicates
     # (at-least-once there), while processed/ stays effectively-once —
     # the anti-join above drops already-processed rows.
-    try:
-        with open(seq_path) as fh:
-            content = fh.read().strip()
-    except OSError:  # absent: first drain for this out_dir
-        content = "0"
+    # absent: first drain for this out_dir
+    content = (_read_small_file(spark, seq_path) or "0").strip()
     try:
         drain_seq = int(content or 0)
     except ValueError:  # corrupt content: restarting at 0 would REUSE

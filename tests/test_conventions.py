@@ -238,3 +238,24 @@ def test_directory_swaps_go_through_publish():
         if pattern.search(line)
     ]
     assert not offenders, f"hand-rolled renames outside operators/publish.py: {offenders}"
+
+
+def test_merge_delta_is_planned_once():
+    """Both table layouts plan a merge delta through one planner
+    (scale._plan_delta): the cast check, alignment, stray-column rule
+    and planning aggregation live there once. A second call site of
+    ``_assert_safe_delta_casts(`` under operators/ is a second copy of
+    the delta side, which drifts from the first the way the r15/r16
+    fixes once had to be patched into both."""
+    import re
+    from pathlib import Path
+
+    pkg = Path(__file__).resolve().parent.parent / "fbg_kafka_stream_file_transfer_spark"
+    pattern = re.compile(r"(?<!def )\b_assert_safe_delta_casts\(")
+    sites = [
+        f"{path.relative_to(pkg)}:{n}"
+        for path in sorted((pkg / "operators").rglob("*.py"))
+        for n, line in enumerate(path.read_text().splitlines(), 1)
+        if pattern.search(line)
+    ]
+    assert len(sites) == 1, f"_assert_safe_delta_casts call sites: {sites}"

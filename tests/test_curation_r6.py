@@ -243,19 +243,6 @@ class TestUnigramLogprob:
         # doc is high-surprise
         assert out[0] < out[99]
 
-    def test_shuffle_join_path_matches_broadcast(self, spark):
-        from fbg_kafka_stream_file_transfer_spark.functions.text import (
-            unigram_logprob_scores,
-        )
-
-        df = spark.createDataFrame(
-            [(i, f"tok{i % 7} shared words here {i % 3}") for i in range(40)],
-            "doc_id long, text string",
-        )
-        a = sorted(map(tuple, unigram_logprob_scores(df, "doc_id", "text", True).collect()))
-        b = sorted(map(tuple, unigram_logprob_scores(df, "doc_id", "text", False).collect()))
-        assert a == b
-
 
 class TestBloomGate:
     def test_no_false_negatives(self, spark):

@@ -424,3 +424,55 @@ def test_extraction_retry_recovers_original_content(spark, tmp_path):
     assert len(done) == 1
     # the extracted text is from the ORIGINAL bytes, not fabricated emptiness
     assert '"text":"the real document body"' in done[0].result_json
+
+
+def test_drain_into_a_uri_out_dir_numbers_epochs_and_keeps_rows(spark, tmp_path):
+    """The drain probes its buffer, processed/ and the drain sequence
+    through the Hadoop FileSystem, like its writes: with a ``file://``
+    out_dir a Python ``os.path`` probe answers 'absent', so the drain
+    never ran, and a sequence read that way restarted at 0 on every
+    drain, reusing epoch -1 and overwriting the previous drain's
+    processed/ partitions. Two drains here must each re-admit their
+    due row, under epochs -1 and -2, and both rows must stay in
+    processed/."""
+    from fbg_kafka_stream_file_transfer_spark.envelope import from_binary_files
+    from fbg_kafka_stream_file_transfer_spark.operators.extract import stub_extractor
+    from fbg_kafka_stream_file_transfer_spark.streaming.pipeline import (
+        process_envelope_batch,
+        replay_due_retries,
+        write_batch_sinks,
+    )
+
+    down = {name: tmp_path / f"down_{name}" for name in ("a", "b")}
+    for marker in down.values():
+        marker.touch()
+    down_paths = {f"doc {k}".encode(): str(v) for k, v in down.items()}
+
+    def flaky(content: bytes) -> dict:
+        import os
+
+        if os.path.exists(down_paths[bytes(content)]):
+            raise RuntimeError("docling unavailable")
+        return stub_extractor(content)
+
+    src = tmp_path / "in"
+    src.mkdir()
+    for name in down:
+        (src / f"{name}.pdf").write_bytes(f"doc {name}".encode())
+    out = f"file://{tmp_path / 'out'}"
+    env = from_binary_files(spark, str(src))
+    result = process_envelope_batch(env, extractor=flaky)
+    write_batch_sinks(result, out, epoch_id=0)
+    result.unpersist()
+    t0 = min(r.event_time for r in spark.read.parquet(f"{out}/retry").collect())
+
+    down["a"].unlink()  # a heals: drain 1 processes it, b fails again
+    r1 = replay_due_retries(spark, out, t0 + datetime.timedelta(seconds=6), extractor=flaky)
+    assert r1 is not None
+    down["b"].unlink()  # b heals: its rescheduled row is due 10 s later
+    r2 = replay_due_retries(spark, out, t0 + datetime.timedelta(seconds=20), extractor=flaky)
+    assert r2 is not None
+
+    done = spark.read.parquet(f"{out}/processed").select("file_name", "batch_id").collect()
+    assert sorted((r.file_name, r.batch_id) for r in done) == [("a.pdf", -1), ("b.pdf", -2)]
+    assert (tmp_path / "out" / "retry__drain_seq").read_text() == "2"
