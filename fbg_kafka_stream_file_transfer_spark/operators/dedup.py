@@ -816,7 +816,6 @@ def remove_boilerplate_windows(
     *,
     window_tokens: int = 16,
     min_docs: int = 2,
-    spare_text: bool = False,
 ) -> DataFrame:
     """Boilerplate REMOVAL (CCNet line-dedup / RefinedWeb-style): unlike
     :func:`paragraph_dedup_stats`, which only *reports* a document's
@@ -833,21 +832,9 @@ def remove_boilerplate_windows(
     Scale shape (100 TB): the window explode is map-side; the frequent
     set is the HEAVY-HITTER set (spans repeated across >= min_docs
     docs), orders of magnitude smaller than the corpus, so it is
-    broadcast. Two paths, same results (parity unit-tested):
-
-    - default (``spare_text=False``): one pass — explode windows,
-      broadcast-mark frequent ones, re-assemble per doc. The reassembly
-      shuffle moves the window STRINGS; measured faster up to sf1
-      locally (window construction is the dominant cost and runs once).
-    - ``spare_text=True``: the corpus text NEVER shuffles — the explode
-      ships only ``(doc, pos, md5)`` tuples, the per-doc roll-up
-      collects only DROPPED positions (rows exist only for boilerplate
-      hits), and the skinny drop-list joins back to the original rows
-      (AQE broadcasts it when boilerplate is sparse) where the clean
-      text is rebuilt map-side by recomputing the deterministic window
-      split. The window split is computed twice, but kilobyte text rows
-      cross the network zero times — the win whenever shuffle bandwidth,
-      not CPU, is the binding constraint (the cluster case).
+    broadcast. One pass: explode windows, broadcast-mark frequent
+    ones, re-assemble per doc. The reassembly shuffle moves the window
+    STRINGS; window construction is the dominant cost and runs once.
 
     Returns ``(id_col, clean_text, n_windows, n_dropped,
     dropped_ratio)``; ``clean_text`` is ``''`` when every window was
@@ -869,49 +856,6 @@ def remove_boilerplate_windows(
         F.sequence(F.lit(0), n_win - 1),
         lambda i: F.concat_ws(" ", F.slice(toks, (i * k + 1).cast("int"), k)),
     )
-    if spare_text:
-        # hash-only explode: the window string dies map-side
-        ex = df.select(
-            F.col(id_col).alias("_doc"), F.posexplode(wins).alias("_pos", "_win")
-        ).select("_doc", "_pos", F.md5(F.col("_win")).alias("_fp"))
-        freq = (
-            ex.groupBy("_fp")
-            .agg(F.countDistinct("_doc").alias("_nd"))
-            .filter(F.col("_nd") >= min_docs)
-            .select("_fp")
-        )
-        drops = (
-            ex.join(F.broadcast(freq), "_fp")
-            .groupBy(F.col("_doc").alias(id_col))
-            .agg(F.collect_set("_pos").alias("_drop_pos"))
-        )
-        # the drop-list is bounded by docs WITH boilerplate hits — hint
-        # it broadcast so the join-back can never shuffle the text side
-        # (a static SortMergeJoin here would silently defeat the whole
-        # variant); a corpus where most docs carry boilerplate should
-        # use the default one-pass mode instead
-        joined = df.select(F.col(id_col), F.col(text_col)).join(
-            F.broadcast(drops), id_col, "left"
-        )
-        no_drops = F.col("_drop_pos").isNull()
-        clean = F.concat_ws(
-            " ",
-            F.filter(
-                wins,
-                lambda w, i: no_drops | ~F.array_contains(F.col("_drop_pos"), i),
-            ),
-        )
-        # size(NULL) is -1, not NULL — branch on the join miss explicitly
-        n_dropped = (
-            F.when(no_drops, F.lit(0)).otherwise(F.size("_drop_pos")).cast("long")
-        )
-        return joined.select(
-            id_col,
-            clean.alias("clean_text"),
-            n_win.cast("long").alias("n_windows"),
-            n_dropped.alias("n_dropped"),
-            F.round(n_dropped / n_win, 4).alias("dropped_ratio"),
-        )
     ex = df.select(
         F.col(id_col).alias("_doc"), F.posexplode(wins).alias("_pos", "_win")
     ).withColumn("_fp", F.md5(F.col("_win")))

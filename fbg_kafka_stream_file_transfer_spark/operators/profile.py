@@ -161,6 +161,18 @@ def profile_correlations(df: DataFrame, cols: list[str]) -> DataFrame:
     )
 
 
+def _check_pass_count(seen: int, expected: int) -> None:
+    """Refinement rests on every pass over the input seeing the same
+    rows: an interval's bucket counts must add up to the row count the
+    previous pass gave it."""
+    if seen != expected:
+        raise ValueError(
+            f"exact quantile input changed between passes: an interval"
+            f" of {expected} row(s) now holds {seen}; the input must"
+            " return the same rows on every evaluation"
+        )
+
+
 def _select_order_stats(
     s: DataFrame,
     targets: list[int],
@@ -187,7 +199,8 @@ def _select_order_stats(
     resolved: dict[int, float] = {}
     # (pred | None, lo, hi, rank_offset, row_count, ranks)
     live = [(None, fmin, fmax, 0, n_fin, sorted(set(targets)))]
-    small: list[tuple] = []  # (pred, rank_offset, ranks) → final collect
+    # (pred, rank_offset, row_count, ranks) → final collect
+    small: list[tuple] = []
 
     for _level in range(256):
         nxt = []
@@ -199,7 +212,7 @@ def _select_order_stats(
                 # also catches a range the halved split cannot divide
                 # (adjacent denormals): distinct values there are <= 2,
                 # so the value-counts collect stays bounded
-                small.append((pred, off, ranks))
+                small.append((pred, off, cnt, ranks))
             else:
                 nxt.append((pred, lo, hi, off, cnt, ranks))
         if not nxt:
@@ -241,6 +254,7 @@ def _select_order_stats(
         live = []
         for i, (pred, lo, hi, off, cnt, ranks) in enumerate(nxt):
             buckets = sorted(per.get(i, ()), key=lambda r: r["_b"])
+            _check_pass_count(sum(r["_n"] for r in buckets), cnt)
             # the SAME bucket expression re-derives membership on the
             # next pass, so counts and filters can never disagree
             bexpr = F.greatest(
@@ -286,7 +300,7 @@ def _select_order_stats(
     if small:
         iid = None
         anypred = None
-        for i, (pred, _off, _r) in enumerate(small):
+        for i, (pred, _off, _cnt, _r) in enumerate(small):
             p = pred if pred is not None else F.lit(True)
             iid = F.when(p, F.lit(i)) if iid is None else iid.when(p, F.lit(i))
             anypred = p if anypred is None else (anypred | p)
@@ -299,7 +313,8 @@ def _select_order_stats(
         per = {}
         for row in got:
             per.setdefault(row["_i"], []).append((row["_v"], row["_n"]))
-        for i, (_pred, off, ranks) in enumerate(small):
+        for i, (_pred, off, cnt, ranks) in enumerate(small):
+            _check_pass_count(sum(n for _, n in per.get(i, ())), cnt)
             cum = off
             it = iter(sorted(ranks))
             want = next(it)
@@ -323,6 +338,10 @@ def _exact_quantile_values(
     NaN sorted above +Inf), computed WITHOUT the percentile UDAF's
     O(#distinct) value-counts map at a single reducer: one fixed-state
     stats pass + bounded histogram refinement (``_select_order_stats``).
+    The projected column is snapshotted ONCE, eagerly
+    (``localCheckpoint``), before the stats pass: every later pass
+    reads that snapshot, so a nondeterministic or changing upstream
+    cannot make the passes disagree.
     Casting to double first is sound for selection — numeric→double is
     monotone non-decreasing, so the k-th double IS the double of the
     k-th raw value, which is exactly what percentile interpolates on.
@@ -333,8 +352,10 @@ def _exact_quantile_values(
     """
     import math
 
-    s = src.filter(F.col(col).isNotNull()).select(
-        F.col(col).cast("double").alias("_v")
+    s = (
+        src.filter(F.col(col).isNotNull())
+        .select(F.col(col).cast("double").alias("_v"))
+        .localCheckpoint()
     )
     ninf, pinf = float("-inf"), float("inf")
     fin = (
@@ -402,6 +423,18 @@ def _exact_quantile_values(
     return out
 
 
+def _refuse_streaming(df: DataFrame, fn: str) -> None:
+    """Exact quantile bounds are computed eagerly, as literals, when
+    the plan is built — a streaming DataFrame has no rows to compute
+    them from yet."""
+    if df.isStreaming:
+        raise ValueError(
+            f"{fn} computes its quantile bounds eagerly when the plan is"
+            " built and cannot take a streaming DataFrame; apply it to"
+            " each micro-batch (foreachBatch) instead"
+        )
+
+
 def _quantile_bounds(src: DataFrame, col: str, probs: list[float]) -> DataFrame:
     """1-row frame of exact interior quantile boundaries (_q0.._qN-1) —
     shared by equidepth_histogram and psi_drift so their bucketing
@@ -438,10 +471,13 @@ def equidepth_histogram(df: DataFrame, col: str, buckets: int = 10) -> DataFrame
     """Equi-depth (quantile-bucketed) histogram WITHOUT the
     ntile-over-global-order trap: ``ntile(k) OVER (ORDER BY v)`` drags
     the whole corpus through one WindowExec partition. Here the k-1
-    exact interior quantile boundaries come from ONE percentile
-    aggregation (a 1-row result), get broadcast back, and bucket
-    assignment is a map-side comparison — the same
-    boundaries-then-broadcast shape as the IVF quantizer.
+    exact interior quantile boundaries are computed EAGERLY when the
+    plan is built (bounded-memory selection, Spark jobs at call time)
+    and enter the returned plan as static literals in a 1-row frame,
+    broadcast back; bucket assignment is a map-side comparison — the
+    same boundaries-then-broadcast shape as the IVF quantizer.
+    Re-running the returned plan reuses those bounds, and a streaming
+    DataFrame is refused.
 
     A row lands in bucket = #(boundaries <= value), so duplicates of a
     boundary value all land together (deterministic; with heavy ties
@@ -449,6 +485,7 @@ def equidepth_histogram(df: DataFrame, col: str, buckets: int = 10) -> DataFrame
     dropped. Output per non-empty bucket: (bucket, n, lo, hi), values
     rounded to 6.
     """
+    _refuse_streaming(df, "equidepth_histogram")
     if buckets < 2:
         raise ValueError(f"buckets must be >= 2, got {buckets}")
     probs = [i / buckets for i in range(1, buckets)]
@@ -472,14 +509,16 @@ def clip_outliers(
     """Winsorize a numeric column at exact percentile bounds: values
     below the ``p_lo`` quantile (or above ``p_hi``) are clamped to it —
     the standard tail-taming pass before budget math / z-scores /
-    regression on heavy-tailed columns. Same plan shape as
-    :func:`equidepth_histogram`: ONE percentile aggregation produces a
-    1-row bounds frame, broadcast back; the clip itself is map-side.
-    NULLs pass through unclipped.
+    regression on heavy-tailed columns. As in
+    :func:`equidepth_histogram`, the two bounds are computed EAGERLY
+    when the plan is built and enter it as static literals (re-running
+    the plan reuses them; a streaming DataFrame is refused); the clip
+    itself is map-side. NULLs pass through unclipped.
 
     Adds ``<col>_clipped`` (double) and ``clip_flag``
     (-1 clamped low / 0 untouched / 1 clamped high).
     """
+    _refuse_streaming(df, "clip_outliers")
     if not 0.0 <= p_lo < p_hi <= 1.0:
         raise ValueError(f"need 0 <= p_lo < p_hi <= 1, got {p_lo}/{p_hi}")
     src = df
@@ -511,9 +550,10 @@ def psi_drift(
     against the training baseline?"; rule of thumb: <0.1 stable,
     0.1-0.25 moderate, >0.25 shifted).
 
-    Bin edges are the BASELINE's exact equi-depth quantiles (one
-    percentile agg, broadcast — the :func:`equidepth_histogram`
-    shape); both sides then bucket map-side and reduce to ≤``buckets``
+    Bin edges are the BASELINE's exact equi-depth quantiles, computed
+    EAGERLY when the plan is built and broadcast as static literals
+    (the :func:`equidepth_histogram` shape; a streaming input is
+    refused); both sides then bucket map-side and reduce to ≤``buckets``
     rows each, so the PSI sum runs on a constant-size frame no matter
     the corpus. Zero-count cells are Laplace-smoothed (+1 per cell, the
     standard guard) so ln stays finite and the metric is defined for
@@ -524,6 +564,8 @@ def psi_drift(
     per-bucket terms keeps the report explainable (WHICH region
     drifted).
     """
+    for side in (baseline, current):
+        _refuse_streaming(side, "psi_drift")
     if buckets < 2:
         raise ValueError(f"buckets must be >= 2, got {buckets}")
     probs = [i / buckets for i in range(1, buckets)]

@@ -434,10 +434,10 @@ def _entry_agg_stats(
 ) -> tuple | None:
     """``(rows, {col: cs})`` when EVERY requested aggregate is
     PROVABLY attainable from this entry's recorded stats, else None
-    (the caller demotes the entry to the exact scan). Shared by
-    :meth:`ManifestTable.metadata_agg` (global fold) and
-    :meth:`ManifestTable.partition_profile` (per-entry emission);
-    the demotion rules are documented on metadata_agg."""
+    (the caller demotes the entry to the exact scan). Consulted per
+    entry by :meth:`ManifestTable._metadata_plan`, the one planner
+    behind count / metadata_agg / partition_profile; the demotion
+    rules are documented on metadata_agg."""
     st = e.get("stats") or {}
     rows = st.get("rows")
     if rows is None:
@@ -468,6 +468,45 @@ def _entry_agg_stats(
         if tag == "str" and len(raw) >= _STATS_MAX_STR:
             return None  # possibly truncated: not attained
     return rows, out
+
+
+def _entry_agg_row(
+    pcols: list[str], aggs: list[tuple], vals: tuple, rows: int,
+    cstats: dict,
+) -> dict:
+    """One entry's answer to ``aggs`` from its decoded key ``vals``
+    and the stats :func:`_entry_agg_stats` proved attained —
+    ``{pcol: value, "fn(col)": value}``, the row a scan grouped by
+    the partition columns would give the entry's rows."""
+    byname = dict(zip(pcols, vals))
+    out: dict = dict(byname)
+    for fn, c in aggs:
+        label = f"{fn}({c})"
+        if c == "*":
+            out[label] = rows
+            continue
+        if c in byname:
+            v = byname[c]
+            nulls = rows if v is None else 0
+        else:
+            cs = cstats[c]
+            nulls = cs.get("nulls", 0)
+        nn = rows - nulls
+        if fn == "count":
+            out[label] = nn
+        elif fn == "null_count":
+            out[label] = nulls
+        elif not nn:
+            out[label] = None  # min/max/sum over no values is NULL
+        elif c in byname:
+            # a partition column is constant per entry: min and max
+            # are the key, the sum is key × rows
+            out[label] = v * rows if fn == "sum" else v
+        else:
+            tag = {"min": "mn", "max": "mx", "sum": "sm"}[fn]
+            out[label] = _decode_value(cs[tag])
+    return out
+
 
 #: "auto" stats cover at most this many columns — a 500-column table
 #: must not pay 1500 aggregates per commit unless it asks to
@@ -1915,8 +1954,9 @@ class ManifestTable:
 
     def _keep_current_retain(self, new_version: int) -> int:
         """The ``retain_versions=None`` resolution shared by every
-        maintenance op (compact / commit_staged / restore /
-        drop_columns / repartition_table): the window that keeps
+        maintenance op (compact / commit_staged / repartition_table /
+        delete_where / update_where / vacuum, and every metadata-only
+        commit through `_metadata_commit`): the window that keeps
         every currently retained version PLUS the commit about to
         publish at ``new_version`` — a bare maintenance call must
         never truncate history (the r10 class; single implementation
@@ -2118,34 +2158,11 @@ class ManifestTable:
         time travel — resolved to the newest retained version
         committed at or before it (:meth:`version_at`); mutually
         exclusive with ``version``."""
-        if as_of is not None:
-            if version is not None:
-                raise ValueError("pass version OR as_of, not both")
-            version = self.version_at(as_of)
-        m = manifest_dict if manifest_dict is not None else self.manifest(version)
+        m, entries = self._select_entries(
+            version, as_of, partitions, manifest_dict
+        )
         schema = T.StructType.fromJson(m["schema"])
-        entries = m["entries"]
-        if partitions is not None:
-            wanted = {_partition_key(tuple(t)) for t in partitions}
-            entries = [e for e in entries if e["key"] in wanted]
-        residual = None
-        if isinstance(where, Column):
-            residual = where
-            norm = _normalize_where(_clauses_from_column(where))
-        else:
-            norm = _normalize_where(where) if where else None
-        # hidden partitioning (r13): data-column clauses project onto
-        # derived partition keys for PRUNING only — the residual
-        # filter below stays the caller's exact predicate
-        prune_norm = norm
-        if norm:
-            ext = self._derived_prune_clauses(m, norm)
-            if ext:
-                prune_norm = norm + ext
-        pcols: list[str] | None = None
-        skip: frozenset = frozenset()
-        if prune_norm:
-            pcols, skip = self._pcols_for_pruning(m, schema)
+        norm, prune_norm, pcols, skip = self._where_pruning(m, where)
         # sorted-set: entries map 1:1 to dirs by construction, but a
         # duplicate path must never be scanned twice. Within a
         # surviving entry, per-FILE bounds (r12) select individual
@@ -2187,8 +2204,8 @@ class ManifestTable:
             df = self.spark.createDataFrame([], schema)
         else:
             df = self.spark.read.schema(schema).parquet(*paths)
-        if residual is not None:
-            df = df.filter(residual)
+        if isinstance(where, Column):
+            df = df.filter(where)
         elif norm:
             df = df.filter(_where_to_filter(norm))
         return df
@@ -2240,7 +2257,9 @@ class ManifestTable:
         """EXACT row count, answered from the MANIFEST wherever
         possible — ``COUNT(*)`` over 100 TB must not be a 100 TB scan
         (Delta answers it from the log, Catalyst from parquet
-        footers; this is the manifest-native equivalent, r13):
+        footers; this is the manifest-native equivalent, r13). It is
+        ``metadata_agg([("count", "*")], ...)``, so the same planner
+        decides per entry:
 
         - no predicate / ``partitions=[...]`` → the sum of the row
           counts every stats-bearing commit records per entry: ZERO
@@ -2254,94 +2273,25 @@ class ManifestTable:
           exact scan path — never approximately right;
         - ``where`` touching DATA columns, or a ``Column`` predicate
           (whose clause extraction is best-effort, so the normalized
-          conjunction may under-represent it) → delegates to
-          :meth:`read`'s pruned exact scan and counts that.
+          conjunction may under-represent it) → :meth:`read`'s
+          pruned exact scan of the whole selection counts it.
 
         Entries predating stats (or stats-disabled tables) scan too.
         ``detail=True`` returns ``{"rows", "entries_metadata",
         "entries_scanned", "entries_total"}`` so tests can pin that
         the metadata path stayed metadata (the zero-I/O pin deletes
         the data files outright and counts again)."""
-        if as_of is not None:
-            if version is not None:
-                raise ValueError("pass version OR as_of, not both")
-            version = self.version_at(as_of)
-        m = self.manifest(version)
-        entries = m["entries"]
-        if partitions is not None:
-            wanted = {_partition_key(tuple(t)) for t in partitions}
-            entries = [e for e in entries if e["key"] in wanted]
-        pcols = list(m.get("partition_cols") or [])
-        pset = set(pcols)
-        if any("values" not in e for e in entries):
-            # pre-values manifest shape (the same one
-            # _virtual_pcol_stats defends against): no exact key
-            # decisions possible — the pruned scan answers (r13
-            # review: read() handles these entries, count() must too)
-            n = self.read(
-                where=where, partitions=partitions, version=version
-            ).count()
-            if detail:
-                return {
-                    "rows": n,
-                    "entries_metadata": 0,
-                    "entries_scanned": len(entries),
-                    "entries_total": len(entries),
-                }
-            return n
-        if isinstance(where, Column):
-            norm = None
-            data_clauses = True  # full predicate only known to Spark
-        else:
-            norm = _normalize_where(where) if where else None
-            data_clauses = any(
-                cl[0] not in pset for cl in (norm or [])
-            )
-        meta_rows = 0
-        meta_entries = 0
-        scan_parts: list[tuple] = []
-        if data_clauses:
-            scan_parts = [
-                tuple(_decode_value(p) for p in e["values"])
-                for e in entries
-            ]
-        else:
-            for e in entries:
-                vals = tuple(_decode_value(p) for p in e["values"])
-                byname = dict(zip(pcols, vals))
-                verdicts = [
-                    _pcol_clause_exact(byname[c], op, val)
-                    for (c, op, val) in (norm or [])
-                ]
-                if any(vd is False for vd in verdicts):
-                    continue  # a definite miss prunes the entry
-                rows = (e.get("stats") or {}).get("rows")
-                if rows is not None and all(
-                    vd is True for vd in verdicts
-                ):
-                    meta_rows += rows
-                    meta_entries += 1
-                else:
-                    scan_parts.append(vals)
-        scanned = 0
-        if scan_parts:
-            scanned = self.read(
-                where=where, partitions=scan_parts, version=version
-            ).count()
-        out = meta_rows + scanned
+        out = self.metadata_agg(
+            [("count", "*")], where, partitions, version, as_of, detail
+        )
         if detail:
-            return {
-                "rows": out,
-                "entries_metadata": meta_entries,
-                "entries_scanned": len(scan_parts),
-                "entries_total": len(entries),
-            }
-        return out
+            return {"rows": out["count(*)"], **out["_detail"]}
+        return out["count(*)"]
 
     def metadata_agg(
         self,
         aggs: list[tuple],
-        where: list[tuple] | None = None,
+        where: list[tuple] | Column | None = None,
         partitions: list[tuple] | None = None,
         version: int | None = None,
         as_of=None,
@@ -2366,11 +2316,11 @@ class ManifestTable:
         never approximately right. Per entry, the metadata path is
         taken only when every requested aggregate is PROVABLY
         attained from that entry's stats; otherwise the entry joins
-        the exact-scan pool (the same per-entry demotion count()
-        does). Demotions:
+        the exact-scan pool. Demotions:
 
-        - ``where`` touching a DATA column (or any clause a
-          :func:`_pcol_clause_exact` coercion frame can't decide) —
+        - ``where`` touching a DATA column, or a ``Column`` predicate
+          (the whole selection scans), or any clause a
+          :func:`_pcol_clause_exact` coercion frame can't decide —
           the row filter needs real rows;
         - an entry predating stats, or whose stats lack a requested
           column;
@@ -2399,222 +2349,30 @@ class ManifestTable:
         exact by definition). Entries whose stats predate ``sm``
         demote to the scan. A partition column's sum is
         ``key_value × rows`` — no stats needed."""
-        _FNS = ("count", "null_count", "min", "max", "sum")
-        for fn, col in aggs:
-            if fn not in _FNS:
-                raise ValueError(
-                    f"metadata_agg supports {_FNS}, got {fn!r}"
-                )
-            if fn != "count" and col == "*":
-                raise ValueError(f"{fn}(*) is not an aggregate")
-        if as_of is not None:
-            if version is not None:
-                raise ValueError("pass version OR as_of, not both")
-            version = self.version_at(as_of)
-        m = self.manifest(version)
-        entries = m["entries"]
-        if partitions is not None:
-            wanted = {_partition_key(tuple(t)) for t in partitions}
-            entries = [e for e in entries if e["key"] in wanted]
-        pcols = list(m.get("partition_cols") or [])
-        pset = set(pcols)
-        schema = T.StructType.fromJson(m["schema"])
-        ts_cols = {
-            f.name
-            for f in schema.fields
-            if isinstance(f.dataType, T.TimestampType)
-        }
-        stat_cols = sorted(
-            {c for _, c in aggs if c != "*" and c not in pset}
+        rows, det = self._metadata_plan(
+            "metadata_agg", aggs, where, partitions, version, as_of,
+            grouped=False,
         )
-        # a partition column is CONSTANT per entry: its min/max/nulls
-        # derive from the entry key + row count, no stats needed
-        norm = _normalize_where(where) if where else None
-        pre_values = any("values" not in e for e in entries)
-        # min/max of a TIMESTAMP partition column: the decoded key
-        # crossed the same session-zone frame as data-column ts
-        # bounds — scan instead of folding keys
-        ts_pcol_minmax = any(
-            fn in ("min", "max") and c in ts_cols and c in pset
-            for fn, c in aggs
-        )
-        # sum of a float/other non-exact-sum column: no entry can
-        # ever answer (sm is never recorded) — scan the selection
-        sum_ok = {
-            f.name
-            for f in schema.fields
-            if isinstance(f.dataType, _SUM_EXACT_TYPES)
-        }
-        sum_inexact = any(
-            fn == "sum" and c not in sum_ok for fn, c in aggs
-        )
-        data_clauses = (
-            pre_values
-            or ts_pcol_minmax
-            or sum_inexact
-            or any(cl[0] not in pset for cl in (norm or []))
-        )
-
-        def _entry_stats_ok(e) -> tuple | None:
-            return _entry_agg_stats(e, aggs, stat_cols, pset, ts_cols)
-
-        meta_rows = 0
-        meta_entries = 0
-        mins: dict = {c: [] for c in stat_cols}
-        maxs: dict = {c: [] for c in stat_cols}
-        nonnulls: dict = {c: 0 for c in stat_cols}
-        nulls: dict = {c: 0 for c in stat_cols}
-        sums: dict = {c: None for c in stat_cols}
-        pc_mins: dict = {}
-        pc_maxs: dict = {}
-        pc_nonnull: dict = {}
-        pc_null: dict = {}
-        pc_sums: dict = {}
-        scan_parts: list[tuple] = []
-        if data_clauses:
-            scan_parts = None  # whole selection scans
-        else:
-            for e in entries:
-                vals = tuple(_decode_value(p) for p in e["values"])
-                byname = dict(zip(pcols, vals))
-                verdicts = [
-                    _pcol_clause_exact(byname[c], op, val)
-                    for (c, op, val) in (norm or [])
-                ]
-                if any(vd is False for vd in verdicts):
-                    continue
-                ok = (
-                    _entry_stats_ok(e)
-                    if all(vd is True for vd in verdicts)
-                    else None
-                )
-                if ok is None:
-                    scan_parts.append(vals)
-                    continue
-                rows, cstats = ok
-                meta_rows += rows
-                meta_entries += 1
-                for c in stat_cols:
-                    cs = cstats[c]
-                    n_null = cs.get("nulls", 0)
-                    nulls[c] += n_null
-                    nonnulls[c] += rows - n_null
-                    if rows - n_null:
-                        if "mn" in cs:
-                            mins[c].append(_decode_value(cs["mn"]))
-                        if "mx" in cs:
-                            maxs[c].append(_decode_value(cs["mx"]))
-                        if "sm" in cs:
-                            v = _decode_value(cs["sm"])
-                            sums[c] = (
-                                v if sums[c] is None else sums[c] + v
-                            )
-                for c in pcols:
-                    v = byname[c]
-                    if v is None:
-                        pc_null[c] = pc_null.get(c, 0) + rows
-                        continue
-                    pc_nonnull[c] = pc_nonnull.get(c, 0) + rows
-                    if rows:
-                        pc_mins.setdefault(c, []).append(v)
-                        pc_maxs.setdefault(c, []).append(v)
-                        if c in sum_ok:
-                            # constant per entry: sum = value × rows
-                            pc_sums[c] = (
-                                pc_sums.get(c) or 0
-                            ) + v * rows
-
-        # ---- exact-scan remainder (shape-identical to the metadata
-        # answer; the two fold together below)
-        s_rows = 0
-        s_aggs: dict = {}
-        if scan_parts is None or scan_parts:
-            df = self.read(
-                where=where,
-                # a whole-selection scan (data clauses) must keep the
-                # caller's partitions filter, not widen to the table
-                partitions=(
-                    partitions if scan_parts is None else scan_parts
-                ),
-                version=version,
-            )
-            from pyspark.sql import functions as F
-
-            exprs = [F.count(F.lit(1)).alias("_rows")]
-            for i, (fn, c) in enumerate(aggs):
-                if c == "*":
-                    continue
-                if fn == "count":
-                    exprs.append(F.count(F.col(c)).alias(f"_a{i}"))
-                elif fn == "null_count":
-                    exprs.append(
-                        F.count(F.when(F.col(c).isNull(), 1)).alias(
-                            f"_a{i}"
-                        )
-                    )
-                elif fn == "min":
-                    exprs.append(F.min(F.col(c)).alias(f"_a{i}"))
-                elif fn == "sum":
-                    exprs.append(F.sum(F.col(c)).alias(f"_a{i}"))
-                else:
-                    exprs.append(F.max(F.col(c)).alias(f"_a{i}"))
-            row = df.agg(*exprs).collect()[0]
-            s_rows = row["_rows"]
-            s_aggs = {
-                i: row[f"_a{i}"]
-                for i, (fn, c) in enumerate(aggs)
-                if c != "*"
-            }
-
         out: dict = {}
-        for i, (fn, c) in enumerate(aggs):
+        for fn, c in aggs:
             label = f"{fn}({c})"
-            if c == "*":
-                out[label] = meta_rows + s_rows
-                continue
-            sv = s_aggs.get(i)
-            if c in pset:
-                m_nn = pc_nonnull.get(c, 0)
-                m_nl = pc_null.get(c, 0)
-                m_mins = pc_mins.get(c, [])
-                m_maxs = pc_maxs.get(c, [])
-                m_sum = pc_sums.get(c)
+            got = [r[label] for _, r in rows if r[label] is not None]
+            if fn == "min":
+                out[label] = _fold_spark_min(got)
+            elif fn == "max":
+                out[label] = _fold_spark_max(got)
+            elif fn == "sum" and not got:
+                out[label] = None  # the sum of no values is NULL
             else:
-                m_nn, m_nl = nonnulls[c], nulls[c]
-                m_mins, m_maxs = mins[c], maxs[c]
-                m_sum = sums[c]
-            if fn == "count":
-                out[label] = m_nn + (sv or 0)
-            elif fn == "null_count":
-                out[label] = m_nl + (sv or 0)
-            elif fn == "sum":
-                out[label] = (
-                    None
-                    if m_sum is None and sv is None
-                    else (m_sum or 0) + (sv or 0)
-                )
-            elif fn == "min":
-                pool = list(m_mins) + ([sv] if sv is not None else [])
-                out[label] = _fold_spark_min(pool)
-            else:
-                pool = list(m_maxs) + ([sv] if sv is not None else [])
-                out[label] = _fold_spark_max(pool)
+                out[label] = sum(got)
         if detail:
-            out["_detail"] = {
-                "entries_metadata": meta_entries,
-                "entries_scanned": (
-                    len(entries) - meta_entries
-                    if scan_parts is None
-                    else len(scan_parts)
-                ),
-                "entries_total": len(entries),
-            }
+            out["_detail"] = det
         return out
 
     def partition_profile(
         self,
         aggs: list[tuple] | None = None,
-        where: list[tuple] | None = None,
+        where: list[tuple] | Column | None = None,
         partitions: list[tuple] | None = None,
         version: int | None = None,
         as_of=None,
@@ -2643,184 +2401,161 @@ class ManifestTable:
         Scale shape: metadata partitions cost zero jobs; demoted
         partitions cost ONE grouped scan job over just those
         partitions."""
-        aggs = aggs or [("count", "*")]
-        _FNS = ("count", "null_count", "min", "max", "sum")
-        for fn, col in aggs:
-            if fn not in _FNS:
-                raise ValueError(
-                    f"partition_profile supports {_FNS}, got {fn!r}"
-                )
-            if fn != "count" and col == "*":
-                raise ValueError(f"{fn}(*) is not an aggregate")
+        rows, det = self._metadata_plan(
+            "partition_profile", aggs or [("count", "*")], where,
+            partitions, version, as_of, grouped=True,
+        )
+        rows = [r for _, r in sorted(rows, key=lambda kv: kv[0])]
+        return (rows, det) if detail else rows
+
+    def _select_entries(
+        self,
+        version: int | None,
+        as_of,
+        partitions: list[tuple] | None,
+        manifest_dict: dict | None = None,
+    ) -> tuple[dict, list[dict]]:
+        """``(manifest, selected entries)`` — the front half every
+        read-side method shares: ``as_of`` resolves through
+        :meth:`version_at` (exclusive with ``version``), and
+        ``partitions`` (value tuples) keeps only the named entries."""
         if as_of is not None:
             if version is not None:
                 raise ValueError("pass version OR as_of, not both")
             version = self.version_at(as_of)
-        m = self.manifest(version)
+        m = manifest_dict if manifest_dict is not None else self.manifest(version)
         entries = m["entries"]
         if partitions is not None:
             wanted = {_partition_key(tuple(t)) for t in partitions}
             entries = [e for e in entries if e["key"] in wanted]
-        # every manifest table is partitioned (create() refuses an
-        # empty partition_cols), so pcols is always non-empty here
+        return m, entries
+
+    def _metadata_plan(
+        self,
+        caller: str,
+        aggs: list[tuple],
+        where: list[tuple] | Column | None,
+        partitions: list[tuple] | None,
+        version: int | None,
+        as_of,
+        grouped: bool,
+    ) -> tuple[list[tuple], dict]:
+        """THE planner behind :meth:`count`, :meth:`metadata_agg` and
+        :meth:`partition_profile`: answer ``aggs`` from each selected
+        entry's stats where they are provably attained (the demotion
+        rules are documented on metadata_agg), and run ONE exact scan
+        over the demoted entries — grouped by the partition columns
+        when ``grouped``. Returns ``(rows, detail)``: ``rows`` are
+        ``(partition key, row)`` pairs, one per metadata-answered
+        entry plus the scan's rows, each row keyed ``"fn(col)"``
+        (and by the partition columns for per-partition rows);
+        ``detail`` counts entries_metadata / entries_scanned /
+        entries_total."""
+        fns = ("count", "null_count", "min", "max", "sum")
+        for fn, col in aggs:
+            if fn not in fns:
+                raise ValueError(f"{caller} supports {fns}, got {fn!r}")
+            if fn != "count" and col == "*":
+                raise ValueError(f"{fn}(*) is not an aggregate")
+        m, entries = self._select_entries(version, as_of, partitions)
         pcols = list(m.get("partition_cols") or [])
         pset = set(pcols)
-        schema = T.StructType.fromJson(m["schema"])
+        types = {
+            f.name: f.dataType
+            for f in T.StructType.fromJson(m["schema"]).fields
+        }
         ts_cols = {
-            f.name
-            for f in schema.fields
-            if isinstance(f.dataType, T.TimestampType)
+            c for c, t in types.items() if isinstance(t, T.TimestampType)
         }
         stat_cols = sorted(
             {c for _, c in aggs if c != "*" and c not in pset}
         )
-        sum_ok = {
-            f.name
-            for f in schema.fields
-            if isinstance(f.dataType, _SUM_EXACT_TYPES)
-        }
-        norm = _normalize_where(where) if where else None
-        pre_values = any("values" not in e for e in entries)
-        ts_pcol_minmax = any(
-            fn in ("min", "max") and c in ts_cols and c in pset
-            for fn, c in aggs
+        norm = (
+            _normalize_where(where)
+            if not isinstance(where, Column) and where
+            else None
         )
-        sum_inexact = any(
-            fn == "sum" and c not in sum_ok for fn, c in aggs
+        # no entry can answer, so the whole selection scans: a Column
+        # predicate is known in full only to Spark; a pre-values
+        # manifest has no key to decide clauses on; a TIMESTAMP
+        # partition key crossed the same session-zone frame as
+        # data-column ts bounds; a float sum is order-dependent (no
+        # ``sm`` is ever recorded); a data-column clause needs rows
+        whole = (
+            isinstance(where, Column)
+            or any("values" not in e for e in entries)
+            or any(
+                fn in ("min", "max") and c in pset and c in ts_cols
+                for fn, c in aggs
+            )
+            or any(
+                fn == "sum"
+                and not isinstance(types.get(c), _SUM_EXACT_TYPES)
+                for fn, c in aggs
+            )
+            or any(cl[0] not in pset for cl in norm or [])
         )
-        data_clauses = (
-            pre_values
-            or ts_pcol_minmax
-            or sum_inexact
-            or any(cl[0] not in pset for cl in (norm or []))
-        )
-
-        def _emit(vals: tuple, rows: int, cstats: dict) -> dict:
-            byname = dict(zip(pcols, vals))
-            row: dict = dict(byname)
-            for fn, c in aggs:
-                label = f"{fn}({c})"
-                if c == "*":
-                    row[label] = rows
-                    continue
-                if c in pset:
-                    v = byname[c]
-                    nn = rows if v is not None else 0
-                    if fn == "count":
-                        row[label] = nn
-                    elif fn == "null_count":
-                        row[label] = rows - nn
-                    elif fn == "sum":
-                        row[label] = (
-                            v * rows if v is not None else None
-                        )
-                    else:  # min / max: constant per partition
-                        row[label] = v
-                    continue
-                cs = cstats[c]
-                nn = rows - cs.get("nulls", 0)
-                if fn == "count":
-                    row[label] = nn
-                elif fn == "null_count":
-                    row[label] = cs.get("nulls", 0)
-                elif fn == "sum":
-                    row[label] = (
-                        _decode_value(cs["sm"]) if nn else None
-                    )
-                elif fn == "min":
-                    row[label] = (
-                        _decode_value(cs["mn"]) if nn else None
-                    )
-                else:
-                    row[label] = (
-                        _decode_value(cs["mx"]) if nn else None
-                    )
-            return row
-
-        out_rows: list[tuple] = []  # (sort_key, dict)
-        meta_entries = 0
+        rows: list[tuple] = []
         scan_parts: list[tuple] = []
-        if data_clauses:
-            scan_parts = None
-        else:
-            for e in entries:
-                vals = tuple(_decode_value(p) for p in e["values"])
-                byname = dict(zip(pcols, vals))
-                verdicts = [
-                    _pcol_clause_exact(byname[c], op, val)
-                    for (c, op, val) in (norm or [])
-                ]
-                if any(vd is False for vd in verdicts):
-                    continue
-                ok = (
-                    _entry_agg_stats(e, aggs, stat_cols, pset, ts_cols)
-                    if all(vd is True for vd in verdicts)
-                    else None
+        for e in [] if whole else entries:
+            vals = tuple(_decode_value(p) for p in e["values"])
+            byname = dict(zip(pcols, vals))
+            verdicts = [
+                _pcol_clause_exact(byname[c], op, val)
+                for (c, op, val) in norm or []
+            ]
+            if any(vd is False for vd in verdicts):
+                continue  # a definite miss prunes the entry
+            ok = (
+                _entry_agg_stats(e, aggs, stat_cols, pset, ts_cols)
+                if all(vd is True for vd in verdicts)
+                else None
+            )
+            if ok is None:
+                scan_parts.append(vals)
+            else:
+                rows.append(
+                    (e["key"], _entry_agg_row(pcols, aggs, vals, *ok))
                 )
-                if ok is None:
-                    scan_parts.append(vals)
-                    continue
-                rows, cstats = ok
-                meta_entries += 1
-                out_rows.append(
-                    (e["key"], _emit(vals, rows, cstats))
-                )
-
-        n_scanned = 0
-        if scan_parts is None or scan_parts:
+        detail = {
+            "entries_metadata": len(rows),
+            "entries_scanned": (
+                len(entries) if whole else len(scan_parts)
+            ),
+            "entries_total": len(entries),
+        }
+        if detail["entries_scanned"]:
             df = self.read(
                 where=where,
-                partitions=(
-                    partitions if scan_parts is None else scan_parts
-                ),
-                version=version,
+                # a whole-selection scan must keep the caller's
+                # partitions filter, not widen to the table
+                partitions=partitions if whole else scan_parts,
+                manifest_dict=m,
             )
-            from pyspark.sql import functions as F
-
-            exprs = [F.count(F.lit(1)).alias("_rows")]
-            for i, (fn, c) in enumerate(aggs):
-                if c == "*":
-                    continue
-                if fn == "count":
-                    exprs.append(F.count(F.col(c)).alias(f"_a{i}"))
-                elif fn == "null_count":
-                    exprs.append(
-                        F.count(F.when(F.col(c).isNull(), 1)).alias(
-                            f"_a{i}"
-                        )
-                    )
-                elif fn == "min":
-                    exprs.append(F.min(F.col(c)).alias(f"_a{i}"))
-                elif fn == "sum":
-                    exprs.append(F.sum(F.col(c)).alias(f"_a{i}"))
-                else:
-                    exprs.append(F.max(F.col(c)).alias(f"_a{i}"))
-            got = df.groupBy(*pcols).agg(*exprs).collect()
-            n_scanned = (
-                len(entries) - meta_entries
-                if scan_parts is None
-                else len(scan_parts)
+            scan_fns = {
+                "count": F.count,
+                "null_count": lambda col: F.count(
+                    F.when(col.isNull(), 1)
+                ),
+                "min": F.min,
+                "max": F.max,
+                "sum": F.sum,
+            }
+            exprs = {"count(*)": F.count(F.lit(1))}
+            for fn, c in aggs:
+                if c != "*":
+                    exprs[f"{fn}({c})"] = scan_fns[fn](F.col(c))
+            group = pcols if grouped else []
+            keys = group + [f"{fn}({c})" for fn, c in aggs]
+            got = (
+                df.groupBy(*group)
+                .agg(*[x.alias(k) for k, x in exprs.items()])
+                .collect()
             )
             for r in got:
-                vals = tuple(r[c] for c in pcols)
-                row: dict = dict(zip(pcols, vals))
-                for i, (fn, c) in enumerate(aggs):
-                    label = f"{fn}({c})"
-                    if c == "*":
-                        row[label] = r["_rows"]
-                    else:
-                        row[label] = r[f"_a{i}"]
-                out_rows.append((_partition_key(vals), row))
-
-        out_rows.sort(key=lambda kv: kv[0])
-        rows_out = [r for _, r in out_rows]
-        if detail:
-            return rows_out, {
-                "entries_metadata": meta_entries,
-                "entries_scanned": n_scanned,
-                "entries_total": len(entries),
-            }
-        return rows_out
+                key = _partition_key(tuple(r[c] for c in group))
+                rows.append((key, {k: r[k] for k in keys}))
+        return rows, detail
 
     def _bucket_eval(self, spec: dict, src_type: str, v):
         """Spark-evaluate ``pmod(xxhash64(v::src_type), n)`` for ONE
@@ -2930,30 +2665,40 @@ class ManifestTable:
         )
         return pcols, skip
 
+    def _where_pruning(
+        self, m: dict, where: list[tuple] | Column | None
+    ) -> tuple[list | None, list, list | None, frozenset]:
+        """``where`` (clause list or pyspark Column) prepared for
+        entry selection against manifest ``m`` — the one prologue
+        every pruning path shares: ``(norm, prune, pcols, skip)``.
+        ``norm`` is the normalized conjunction (best-effort clauses
+        extracted from a Column); ``prune`` adds the hidden-
+        partitioning projections (r13: data-column clauses onto
+        derived partition keys — PRUNING hints only, the exact
+        residual stays the caller's predicate); ``pcols``/``skip``
+        come from :meth:`_pcols_for_pruning`."""
+        if isinstance(where, Column):
+            norm = _normalize_where(_clauses_from_column(where))
+        else:
+            norm = _normalize_where(where) if where else None
+        if not norm:
+            return norm, [], None, frozenset()
+        pcols, skip = self._pcols_for_pruning(
+            m, T.StructType.fromJson(m["schema"])
+        )
+        prune = norm + self._derived_prune_clauses(m, norm)
+        return norm, prune, pcols, skip
+
     def prune_stats(
         self, where: list[tuple] | Column, version: int | None = None
     ) -> tuple[int, int]:
         """(entries that would be scanned, total live entries) for a
         ``where`` conjunction (tuple list or pyspark Column) — the
         observability hook for data skipping (and the thing tests pin
-        so pruning can never silently stop working)."""
-        m = self.manifest(version)
-        if isinstance(where, Column):
-            norm = _normalize_where(_clauses_from_column(where))
-        else:
-            norm = _normalize_where(where)
-        ext = self._derived_prune_clauses(m, norm)
-        if ext:
-            norm = norm + ext  # mirrors read()'s pruning exactly
-        pcols, skip = self._pcols_for_pruning(
-            m, T.StructType.fromJson(m["schema"])
-        )
-        kept = sum(
-            1
-            for e in m["entries"]
-            if _entry_may_match(e, norm, pcols, skip)
-        )
-        return kept, len(m["entries"])
+        so pruning can never silently stop working). The entry half
+        of :meth:`prune_file_stats`."""
+        out = self.prune_file_stats(where, version)
+        return out["entries_scanned"], out["entries_total"]
 
     def prune_file_stats(
         self, where: list[tuple] | Column, version: int | None = None
@@ -2968,16 +2713,7 @@ class ManifestTable:
         pre-r12 commits, > file-cap partitions), so a pinning test
         can tell "pruned to 3 files" from "couldn't see files"."""
         m = self.manifest(version)
-        if isinstance(where, Column):
-            norm = _normalize_where(_clauses_from_column(where))
-        else:
-            norm = _normalize_where(where)
-        ext = self._derived_prune_clauses(m, norm)
-        if ext:
-            norm = norm + ext  # mirrors read()'s pruning exactly
-        pcols, skip = self._pcols_for_pruning(
-            m, T.StructType.fromJson(m["schema"])
-        )
+        _, norm, pcols, skip = self._where_pruning(m, where)
         out = {
             "entries_scanned": 0,
             "entries_total": len(m["entries"]),
@@ -4170,6 +3906,64 @@ class ManifestTable:
                 "against the current version"
             )
 
+    def _table_props(self, man: dict) -> dict:
+        """The persisted table properties ``man`` carries, as
+        :meth:`_publish_entries` takes them — create-time
+        configuration (and the tombstones / constraints later ALTERs
+        add) that every commit carries forward. A key missing from an
+        older manifest reads as its default."""
+        return {
+            "shard_target": man.get("shard_target", self.shard_target),
+            "stats_cols": man.get("stats_cols", "auto"),
+            "bloom_cols": man.get("bloom_cols"),
+            "dropped_cols": man.get("dropped_cols"),
+            "check_constraints": man.get("check_constraints"),
+            "derived_partitions": man.get("derived_partitions"),
+        }
+
+    def _metadata_commit(
+        self, holder: str, retain_versions: int | None, edit
+    ) -> int:
+        """THE path of every METADATA-ONLY commit (restore,
+        drop_columns, add_columns, alter_column_type,
+        add/drop_check_constraint): zero data I/O, one new manifest
+        re-referencing entries. Under the table write lock it reads
+        the current version's manifest AS WRITTEN (refusing a missing
+        table) and calls ``edit(raw)``, which raises its refusals
+        before anything is published, or returns ``{"op": op_info}``
+        plus any of ``"schema"``, ``"entries"`` and persisted-property
+        overrides (:meth:`_table_props` keys). Every property the edit
+        does not override carries forward; entries default to the
+        current version's, expanded only then (restore passes its
+        target's, so the current version's shards never expand).
+        ``retain_versions=None`` keeps every retained version.
+        Publishes and returns ``cur + 1``."""
+        with table_write_lock(self.spark, self.path, holder=holder):
+            cur = self.current_version()
+            if cur is None:
+                raise ValueError(
+                    f"manifest table does not exist: {self.path}"
+                )
+            raw = self._manifest_raw(cur)
+            change = edit(raw)
+            op_info = change.pop("op")
+            schema = change.pop("schema", raw["schema"])
+            entries = change.pop("entries", None)
+            if entries is None:
+                entries = self.manifest(cur)["entries"]
+            if retain_versions is None:
+                retain_versions = self._keep_current_retain(cur + 1)
+            self._publish_entries(
+                cur + 1,
+                list(raw["partition_cols"]),
+                schema,
+                entries,
+                retain_versions,
+                {**self._table_props(raw), **change},
+                op_info,
+            )
+            return cur + 1
+
     def restore(
         self,
         version: int,
@@ -4200,15 +3994,10 @@ class ManifestTable:
         the rollback diff and a running tail publishes it like any
         commit. Returns the new version number."""
 
-        def _do() -> int:
-            cur = self.current_version()
-            if cur is None:
-                raise ValueError(
-                    f"manifest table does not exist: {self.path}"
-                )
+        def edit(cur_raw: dict) -> dict:
+            # cur_raw is the current version AS WRITTEN: restore never
+            # expands the current version's entry shards (pass-3 rule)
             target = self.manifest(version)  # raises if not retained
-            cur_raw = self._manifest_raw(cur)  # scalars only: no
-            # shard expansion of the current version (pass-3 rule)
             if target["partition_cols"] != cur_raw["partition_cols"]:
                 raise ValueError(
                     "cannot restore across a partition-column change"
@@ -4235,29 +4024,13 @@ class ManifestTable:
                     " or misread the target's data; the evolution"
                     " contract is add-only with stable types"
                 )
-            retain = (
-                retain_versions
-                if retain_versions is not None
-                else self._keep_current_retain(cur + 1)
-            )
-            self._publish_entries(
-                cur + 1,
-                list(cur_raw["partition_cols"]),
-                cur_raw["schema"],  # current (superset) schema
-                target["entries"],
-                retain,
-                cur_raw.get("shard_target", self.shard_target),
-                cur_raw.get("stats_cols", "auto"),
-                dropped_cols=cur_raw.get("dropped_cols"),
-                check_constraints=cur_raw.get("check_constraints"),
-                derived_partitions=cur_raw.get("derived_partitions"),
-                op_info={"name": "restore", "to_version": version},
-                bloom_cols=cur_raw.get("bloom_cols"),
-            )
-            return cur + 1
+            # the current (superset) schema stays
+            return {
+                "entries": target["entries"],
+                "op": {"name": "restore", "to_version": version},
+            }
 
-        with table_write_lock(self.spark, self.path, holder="restore"):
-            return _do()
+        return self._metadata_commit("restore", retain_versions, edit)
 
     def drop_columns(
         self,
@@ -4301,48 +4074,43 @@ class ManifestTable:
         ``retain_versions=None`` keeps every currently retained
         version (maintenance-op default). Returns the new version."""
 
-        def _do() -> int:
-            cur = self.current_version()
-            if cur is None:
-                raise ValueError(
-                    f"manifest table does not exist: {self.path}"
-                )
+        def edit(raw: dict) -> dict:
             if not cols:
                 raise ValueError("drop_columns needs at least one column")
-            man = self.manifest(cur)
-            pcols = list(man["partition_cols"])
-            in_p = sorted(set(cols) & set(pcols))
+            drop = set(cols)
+            pcols = list(raw["partition_cols"])
+            in_p = sorted(drop & set(pcols))
             if in_p:
                 raise ValueError(
                     f"cannot drop partition column(s) {in_p};"
                     " repartition_table() first"
                 )
-            names = [f["name"] for f in man["schema"]["fields"]]
-            missing = sorted(set(cols) - set(names))
+            names = [f["name"] for f in raw["schema"]["fields"]]
+            missing = sorted(drop - set(names))
             if missing:
                 raise ValueError(
                     f"column(s) {missing} not in table schema {names}"
                 )
             remaining = [
-                n for n in names if n not in set(cols) and n not in pcols
+                n for n in names if n not in drop and n not in pcols
             ]
             if not remaining:
                 raise ValueError(
                     "cannot drop every non-partition column"
                 )
             new_schema = {
-                **man["schema"],
+                **raw["schema"],
                 "fields": [
                     f
-                    for f in man["schema"]["fields"]
-                    if f["name"] not in set(cols)
+                    for f in raw["schema"]["fields"]
+                    if f["name"] not in drop
                 ],
             }
             # a CHECK constraint referencing a dropped column would
             # make every later commit's validation unresolvable —
             # probe each against the post-drop schema and refuse
             # (drop the constraint first)
-            constraints = man.get("check_constraints") or {}
+            constraints = raw.get("check_constraints") or {}
             if constraints:
                 probe = self.spark.createDataFrame(
                     [], T.StructType.fromJson(new_schema)
@@ -4362,9 +4130,9 @@ class ManifestTable:
             # on a contract nothing enforces anymore — refuse
             # (repartition_table off the derived key first)
             for dp, spec in sorted(
-                (man.get("derived_partitions") or {}).items()
+                (raw.get("derived_partitions") or {}).items()
             ):
-                if spec["source"] in set(cols):
+                if spec["source"] in drop:
                     raise ValueError(
                         f"cannot drop column(s) {sorted(cols)}:"
                         f" partition column {dp!r} derives from"
@@ -4373,15 +4141,9 @@ class ManifestTable:
                         " repartition_table() off the derived key"
                         " first"
                     )
-            stats_cfg = man.get("stats_cols", "auto")
+            stats_cfg = raw.get("stats_cols", "auto")
             if isinstance(stats_cfg, list):
-                stats_cfg = [c for c in stats_cfg if c not in set(cols)]
-            retain = (
-                retain_versions
-                if retain_versions is not None
-                else self._keep_current_retain(cur + 1)
-            )
-            drop = set(cols)
+                stats_cfg = [c for c in stats_cfg if c not in drop]
 
             def _strip_entry(e: dict) -> dict:
                 # the manifest is being re-serialized anyway: shed
@@ -4436,30 +4198,21 @@ class ManifestTable:
                     }
                 return e2
 
-            self._publish_entries(
-                cur + 1,
-                pcols,
-                new_schema,
-                [_strip_entry(e) for e in man["entries"]],
-                retain,
-                man.get("shard_target", self.shard_target),
-                stats_cfg,
-                dropped_cols=sorted(
-                    set(man.get("dropped_cols", [])) | set(cols)
+            entries = self.manifest(raw["version"])["entries"]
+            return {
+                "schema": new_schema,
+                "entries": [_strip_entry(e) for e in entries],
+                "stats_cols": stats_cfg,
+                "dropped_cols": sorted(
+                    set(raw.get("dropped_cols", [])) | drop
                 ),
-                check_constraints=constraints,
-                derived_partitions=man.get("derived_partitions"),
-                op_info={"name": "drop_columns", "cols": sorted(cols)},
-                bloom_cols=[
-                    c
-                    for c in man.get("bloom_cols", [])
-                    if c not in cols
+                "bloom_cols": [
+                    c for c in raw.get("bloom_cols", []) if c not in drop
                 ],
-            )
-            return cur + 1
+                "op": {"name": "drop_columns", "cols": sorted(cols)},
+            }
 
-        with table_write_lock(self.spark, self.path, holder="drop-columns"):
-            return _do()
+        return self._metadata_commit("drop-columns", retain_versions, edit)
 
     def add_columns(
         self,
@@ -4493,16 +4246,10 @@ class ManifestTable:
         ``retain_versions=None`` keeps every currently retained
         version (maintenance-op default). Returns the new version."""
 
-        def _do() -> int:
-            cur = self.current_version()
-            if cur is None:
-                raise ValueError(
-                    f"manifest table does not exist: {self.path}"
-                )
+        def edit(raw: dict) -> dict:
             if not cols:
                 raise ValueError("add_columns needs at least one column")
-            man = self.manifest(cur)
-            names = {f["name"] for f in man["schema"]["fields"]}
+            names = {f["name"] for f in raw["schema"]["fields"]}
             dup = sorted(set(cols) & names)
             if dup:
                 raise ValueError(
@@ -4516,7 +4263,7 @@ class ManifestTable:
                     f"column name(s) {reserved} are reserved by the"
                     " manifest layout; rename them"
                 )
-            tomb = sorted(set(cols) & set(man.get("dropped_cols") or []))
+            tomb = sorted(set(cols) & set(raw.get("dropped_cols") or []))
             if tomb:
                 raise ValueError(
                     f"column name(s) {tomb} were dropped from this"
@@ -4545,36 +4292,15 @@ class ManifestTable:
                 new_fields.append(
                     T.StructField(c, dt, True).jsonValue()
                 )
-            new_schema = {
-                **man["schema"],
-                "fields": list(man["schema"]["fields"]) + new_fields,
-            }
-            retain = (
-                retain_versions
-                if retain_versions is not None
-                else self._keep_current_retain(cur + 1)
-            )
-            self._publish_entries(
-                cur + 1,
-                list(man["partition_cols"]),
-                new_schema,
-                list(man["entries"]),
-                retain,
-                man.get("shard_target", self.shard_target),
-                man.get("stats_cols", "auto"),
-                dropped_cols=man.get("dropped_cols"),
-                check_constraints=man.get("check_constraints"),
-                derived_partitions=man.get("derived_partitions"),
-                op_info={
-                    "name": "add_columns",
-                    "cols": sorted(cols),
+            return {
+                "schema": {
+                    **raw["schema"],
+                    "fields": list(raw["schema"]["fields"]) + new_fields,
                 },
-                bloom_cols=man.get("bloom_cols"),
-            )
-            return cur + 1
+                "op": {"name": "add_columns", "cols": sorted(cols)},
+            }
 
-        with table_write_lock(self.spark, self.path, holder="add-columns"):
-            return _do()
+        return self._metadata_commit("add-columns", retain_versions, edit)
 
     def alter_column_type(
         self,
@@ -4605,14 +4331,7 @@ class ManifestTable:
         type (no-op must be loud, not a burned version), and any
         non-widening direction. Returns the new version."""
 
-        def _do() -> int:
-            cur = self.current_version()
-            if cur is None:
-                raise ValueError(
-                    f"manifest table does not exist: {self.path}"
-                )
-            man = self.manifest(cur)
-            raw = self._manifest_raw(cur)
+        def edit(raw: dict) -> dict:
             if isinstance(new_type, T.DataType):
                 dt = new_type
             else:
@@ -4623,13 +4342,13 @@ class ManifestTable:
                         f"alter_column_type: {new_type!r} is not a"
                         " valid DDL type string"
                     ) from exc
-            schema = T.StructType.fromJson(man["schema"])
+            schema = T.StructType.fromJson(raw["schema"])
             names = {f.name for f in schema.fields}
             if col not in names:
                 raise ValueError(
                     f"column {col!r} not in table schema"
                 )
-            if col in man["partition_cols"]:
+            if col in raw["partition_cols"]:
                 raise ValueError(
                     f"cannot alter partition column {col!r} — its"
                     " values are the manifest entry keys; use"
@@ -4637,7 +4356,7 @@ class ManifestTable:
                 )
             srcs = {
                 s["source"]
-                for s in (man.get("derived_partitions") or {}).values()
+                for s in (raw.get("derived_partitions") or {}).values()
             }
             if col in srcs:
                 raise ValueError(
@@ -4675,36 +4394,17 @@ class ManifestTable:
                     for f in raw["schema"]["fields"]
                 ],
             }
-            retain = (
-                retain_versions
-                if retain_versions is not None
-                else self._keep_current_retain(cur + 1)
-            )
-            self._publish_entries(
-                cur + 1,
-                list(raw["partition_cols"]),
-                new_schema,
-                man["entries"],
-                retain,
-                raw.get("shard_target", self.shard_target),
-                raw.get("stats_cols", "auto"),
-                dropped_cols=raw.get("dropped_cols"),
-                check_constraints=raw.get("check_constraints"),
-                derived_partitions=raw.get("derived_partitions"),
-                op_info={
+            return {
+                "schema": new_schema,
+                "op": {
                     "name": "alter_column_type",
                     "col": col,
                     "from": old.simpleString(),
                     "to": dt.simpleString(),
                 },
-                bloom_cols=raw.get("bloom_cols"),
-            )
-            return cur + 1
+            }
 
-        with table_write_lock(
-            self.spark, self.path, holder="alter-column"
-        ):
-            return _do()
+        return self._metadata_commit("alter-column", retain_versions, edit)
 
     def check_constraints(self, version: int | None = None) -> dict:
         """The table's CHECK constraints, ``{name: sql}`` — a
@@ -4731,16 +4431,10 @@ class ManifestTable:
         not re-validated: their rows were validated when first
         written. Returns the new version."""
 
-        def _do() -> int:
-            cur = self.current_version()
-            if cur is None:
-                raise ValueError(
-                    f"manifest table does not exist: {self.path}"
-                )
+        def edit(raw: dict) -> dict:
             if not name or not isinstance(name, str):
                 raise ValueError("constraint name must be a non-empty string")
-            man = self.manifest(cur)
-            constraints = dict(man.get("check_constraints") or {})
+            constraints = dict(raw.get("check_constraints") or {})
             if name in constraints:
                 raise ValueError(
                     f"CHECK constraint {name!r} already exists"
@@ -4748,7 +4442,7 @@ class ManifestTable:
                 )
             # the invariant must hold for the data already here —
             # otherwise every later commit would be born in violation
-            current = self.read(manifest_dict=man)
+            current = self.read(version=raw["version"])
             viol = current.filter(_check_violation_filter(expr_sql))
             n = viol.limit(1).count()
             if n:
@@ -4759,32 +4453,14 @@ class ManifestTable:
                     " it; clean the data first"
                 )
             constraints[name] = expr_sql
-            raw = self._manifest_raw(cur)
-            retain = (
-                retain_versions
-                if retain_versions is not None
-                else self._keep_current_retain(cur + 1)
-            )
-            self._publish_entries(
-                cur + 1,
-                list(raw["partition_cols"]),
-                raw["schema"],
-                man["entries"],
-                retain,
-                raw.get("shard_target", self.shard_target),
-                raw.get("stats_cols", "auto"),
-                dropped_cols=raw.get("dropped_cols"),
-                check_constraints=constraints,
-                derived_partitions=raw.get("derived_partitions"),
-                op_info={"name": "add_check_constraint", "constraint": name},
-                bloom_cols=raw.get("bloom_cols"),
-            )
-            return cur + 1
+            return {
+                "check_constraints": constraints,
+                "op": {"name": "add_check_constraint", "constraint": name},
+            }
 
-        with table_write_lock(
-            self.spark, self.path, holder="add-constraint"
-        ):
-            return _do()
+        return self._metadata_commit(
+            "add-constraint", retain_versions, edit
+        )
 
     def drop_check_constraint(
         self,
@@ -4794,46 +4470,22 @@ class ManifestTable:
         """Remove a CHECK constraint — metadata-only. Returns the new
         version."""
 
-        def _do() -> int:
-            cur = self.current_version()
-            if cur is None:
-                raise ValueError(
-                    f"manifest table does not exist: {self.path}"
-                )
-            man = self.manifest(cur)
-            constraints = dict(man.get("check_constraints") or {})
+        def edit(raw: dict) -> dict:
+            constraints = dict(raw.get("check_constraints") or {})
             if name not in constraints:
                 raise ValueError(
                     f"no CHECK constraint named {name!r}"
                     f" (have: {sorted(constraints)})"
                 )
             constraints.pop(name)
-            raw = self._manifest_raw(cur)
-            retain = (
-                retain_versions
-                if retain_versions is not None
-                else self._keep_current_retain(cur + 1)
-            )
-            self._publish_entries(
-                cur + 1,
-                list(raw["partition_cols"]),
-                raw["schema"],
-                man["entries"],
-                retain,
-                raw.get("shard_target", self.shard_target),
-                raw.get("stats_cols", "auto"),
-                dropped_cols=raw.get("dropped_cols"),
-                check_constraints=constraints,
-                derived_partitions=raw.get("derived_partitions"),
-                op_info={"name": "drop_check_constraint", "constraint": name},
-                bloom_cols=raw.get("bloom_cols"),
-            )
-            return cur + 1
+            return {
+                "check_constraints": constraints,
+                "op": {"name": "drop_check_constraint", "constraint": name},
+            }
 
-        with table_write_lock(
-            self.spark, self.path, holder="drop-constraint"
-        ):
-            return _do()
+        return self._metadata_commit(
+            "drop-constraint", retain_versions, edit
+        )
 
     def repartition_table(
         self,
@@ -5156,20 +4808,15 @@ class ManifestTable:
                         f" column(s) {[srcs[c] for c in hit]} derive"
                         " from them; use merge_into_partitioned"
                     )
+            norm, prune, pc, sk = self._where_pruning(man, where)
             if isinstance(where, Column):
                 residual = where
-                norm = _normalize_where(_clauses_from_column(where))
                 exact_pcol_only = False  # full predicate unknown here
             else:
                 residual = None
-                norm = _normalize_where(where)
                 if not norm:
                     raise ValueError("DML needs a non-empty where")
                 exact_pcol_only = all(cl[0] in pset for cl in norm)
-            prune = (norm or []) + self._derived_prune_clauses(
-                m=man, norm=norm
-            )
-            pc, sk = self._pcols_for_pruning(man, schema)
             untouched = 0
             dropped: list[tuple] = []
             rewrite: list[tuple] = []
@@ -5641,10 +5288,9 @@ class ManifestTable:
         dropped-column tombstones, and CHECK constraints."""
         import copy as _copy
         man = self.manifest(version)
+        props = self._table_props(man)
         dest = ManifestTable(
-            self.spark,
-            dest_path,
-            shard_target=man.get("shard_target", self.shard_target),
+            self.spark, dest_path, shard_target=props["shard_target"]
         )
         if dest.current_version() is not None:
             raise ValueError(
@@ -5754,20 +5400,13 @@ class ManifestTable:
                 man["schema"],
                 entries,
                 retain_versions=2,
-                shard_target=man.get(
-                    "shard_target", self.shard_target
-                ),
-                stats_cols=man.get("stats_cols", "auto"),
-                dropped_cols=man.get("dropped_cols"),
-                check_constraints=man.get("check_constraints"),
-                derived_partitions=man.get("derived_partitions"),
+                props=props,
                 op_info={
                     "name": "clone",
                     "source": self.path,
                     "source_version": man["version"],
                     "deep": deep,
                 },
-                bloom_cols=man.get("bloom_cols"),
             )
         return dest
 
@@ -6377,27 +6016,18 @@ class ManifestTable:
             if prev_man is not None and not full_replace
             else {}
         )
-        # the shard threshold is a PERSISTED table property: later
-        # commits (including merges routed through a default-constructed
-        # ManifestTable) honor what create() configured
-        shard_target = (
-            prev_man.get("shard_target", self.shard_target)
-            if prev_man is not None
-            else self.shard_target
-        )
+        # the table properties PERSIST: later commits (including
+        # merges routed through a default-constructed ManifestTable)
+        # honor what create() configured
+        props = self._table_props(prev_man or {})
         # tombstoned names (r13 drop_columns): data files from before
         # the drop still carry values under these names, so a later
         # commit re-ADDING one would silently resurrect old values in
         # every pre-drop generation the reader NULL-backfills today —
         # the field-ID problem vanilla parquet cannot solve; refuse
-        dropped_cols = (
-            list(prev_man.get("dropped_cols", []))
-            if prev_man is not None
-            else []
-        )
         readd = sorted(
             {f["name"] for f in schema_json.get("fields", [])}
-            & set(dropped_cols)
+            & set(props["dropped_cols"] or [])
         )
         if readd:
             raise ValueError(
@@ -6413,18 +6043,14 @@ class ManifestTable:
         # the optimistic path validates at stage_commit time instead
         # (back is None under the lease by design). A refusal leaves
         # the written generation as an unreferenced, GC-able husk.
-        constraints = (
-            prev_man.get("check_constraints") or {}
-            if prev_man is not None
-            else {}
-        )
+        constraints = props["check_constraints"] or {}
         # derived partitions (r13 hidden partitioning): the spec
         # persists from create like stats_cols; every later commit
         # re-reads the table's own and enforces pcol ==
         # transform(source) on what it wrote — scan-time projection
         # pruning is only sound if no committed row ever disagrees
         if prev_man is not None:
-            derived = prev_man.get("derived_partitions") or {}
+            derived = props["derived_partitions"] or {}
             if (
                 self.derived_partitions
                 and dict(self.derived_partitions) != derived
@@ -6537,13 +6163,13 @@ class ManifestTable:
             schema_json,
             entries,
             retain_versions,
-            shard_target,
-            stats_cfg,
-            dropped_cols=dropped_cols,
-            check_constraints=constraints,
-            derived_partitions=derived,
-            op_info=op_info,
-            bloom_cols=bcols,
+            {
+                **props,
+                "stats_cols": stats_cfg,
+                "bloom_cols": bcols,
+                "derived_partitions": derived,
+            },
+            op_info,
         )
         return len(touched)
 
@@ -6554,17 +6180,15 @@ class ManifestTable:
         schema_json: dict,
         entries: list[dict],
         retain_versions: int,
-        shard_target: int,
-        stats_cols: list | str = "auto",
-        dropped_cols: list | None = None,
-        check_constraints: dict | None = None,
-        derived_partitions: dict | None = None,
+        props: dict,
         op_info: dict | None = None,
-        bloom_cols: list | None = None,
     ) -> None:
         """Build the manifest for ``entries``, publish it, GC — the
-        shared tail of every commit (data commits via `_commit`,
-        metadata-only commits via `restore`/`drop_columns`)."""
+        shared tail of every commit: data commits via
+        `_finalize_generation`, metadata-only commits via
+        `_metadata_commit`, and `clone_to`'s first commit. ``props``
+        holds the persisted table properties (:meth:`_table_props`
+        keys)."""
         import datetime
 
         man = {
@@ -6582,29 +6206,29 @@ class ManifestTable:
             ).isoformat(),
             "partition_cols": pcols,
             "schema": schema_json,
-            "shard_target": shard_target,
-            "stats_cols": stats_cols,
+            "shard_target": props["shard_target"],
+            "stats_cols": props["stats_cols"],
         }
-        if bloom_cols:
+        if props["bloom_cols"]:
             # per-file Bloom membership columns (r16): a persisted
             # table property like stats_cols
-            man["bloom_cols"] = list(bloom_cols)
-        if dropped_cols:
+            man["bloom_cols"] = list(props["bloom_cols"])
+        if props["dropped_cols"]:
             # tombstoned column names (r13): a persisted table
             # property like shard_target — every later commit refuses
             # to re-add one (_finalize_generation)
-            man["dropped_cols"] = sorted(dropped_cols)
-        if check_constraints:
+            man["dropped_cols"] = sorted(props["dropped_cols"])
+        if props["check_constraints"]:
             # CHECK constraints (r13): persisted property; every
             # generation-writing commit validates against them
             man["check_constraints"] = dict(
-                sorted(check_constraints.items())
+                sorted(props["check_constraints"].items())
             )
-        if derived_partitions:
+        if props["derived_partitions"]:
             # hidden-partitioning spec (r13): persisted property;
             # commits enforce it, scans project predicates through it
             man["derived_partitions"] = dict(
-                sorted(derived_partitions.items())
+                sorted(props["derived_partitions"].items())
             )
         if op_info:
             # operation metadata (r13): what produced this version —
@@ -6629,9 +6253,9 @@ class ManifestTable:
                     gens.add(n.split("/")[1])
         man["generations"] = sorted(gens)
         man["entry_count"] = len(entries)
-        if len(entries) > shard_target:
+        if len(entries) > man["shard_target"]:
             man["entry_shards"], man["num_buckets"] = self._shard_entries(
-                version, entries, shard_target
+                version, entries, man["shard_target"]
             )
             # seed the expansion memo: the GC below (and any reader on
             # this instance) must not re-read the shards this commit

@@ -259,3 +259,43 @@ def test_merge_delta_is_planned_once():
         if pattern.search(line)
     ]
     assert len(sites) == 1, f"_assert_safe_delta_casts call sites: {sites}"
+
+
+def _table_call_sites(name: str) -> list[str]:
+    import re
+    from pathlib import Path
+
+    path = (
+        Path(__file__).resolve().parent.parent
+        / "fbg_kafka_stream_file_transfer_spark"
+        / "operators"
+        / "table.py"
+    )
+    pattern = re.compile(rf"(?<!def )\b{name}\(")
+    return [
+        f"table.py:{n}"
+        for n, line in enumerate(path.read_text().splitlines(), 1)
+        if pattern.search(line)
+    ]
+
+
+def test_metadata_commits_publish_through_one_path():
+    """Manifests are built in ``_publish_entries``, called from the
+    data-commit tail (_finalize_generation), the one metadata-only
+    commit path (_metadata_commit) and clone_to. A fourth call site is
+    a metadata-only commit copying the persisted table properties by
+    hand again, the copy that once had to be kept in step in eight
+    places."""
+    sites = _table_call_sites("_publish_entries")
+    assert len(sites) <= 3, f"_publish_entries call sites: {sites}"
+
+
+def test_metadata_answers_are_planned_once():
+    """Partition-key clauses are decided exactly in two places: the
+    aggregate planner behind count / metadata_agg / partition_profile
+    (ManifestTable._metadata_plan) and the whole-partition DELETE in
+    _dml_rewrite. A third call site of ``_pcol_clause_exact(`` is a
+    second copy of the "answer from manifest stats, scan the rest"
+    rule."""
+    sites = _table_call_sites("_pcol_clause_exact")
+    assert len(sites) <= 2, f"_pcol_clause_exact call sites: {sites}"

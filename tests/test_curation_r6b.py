@@ -81,23 +81,6 @@ class TestBoilerplateRemoval:
         )._jdf.queryExecution().executedPlan().toString()
         assert "BroadcastHashJoin" in plan
 
-    def test_spare_text_path_parity(self, spark):
-        """The payload-sparing variant (text never shuffles) must agree
-        with the default one-pass variant row-for-row."""
-        d = self._corpus(spark)
-        a = sorted(
-            map(tuple, remove_boilerplate_windows(
-                d, "doc_id", "text", window_tokens=4, min_docs=2
-            ).collect())
-        )
-        b = sorted(
-            map(tuple, remove_boilerplate_windows(
-                d, "doc_id", "text", window_tokens=4, min_docs=2,
-                spare_text=True,
-            ).collect())
-        )
-        assert a == b
-
 
 class TestStratifiedSampleExact:
     def _groups(self, spark):
@@ -364,23 +347,6 @@ class TestPlanShapesR6b:
         # exactly one hash exchange touches corpus-sized data (the
         # per-group roll-up); everything after runs on the group frame
         assert plan.count("Exchange hashpartitioning") == 1
-
-    def test_boilerplate_spare_text_never_shuffles_text(self, spark):
-        df = spark.createDataFrame(
-            [(i, ("tok%d " % (i % 7)) * 20) for i in range(40)],
-            "doc_id long, text string",
-        )
-        out = remove_boilerplate_windows(
-            df, "doc_id", "text", window_tokens=4, min_docs=2, spare_text=True
-        )
-        plan = self._plan(out)
-        # frequent-fp set AND drop-list both broadcast: the text side
-        # never sort-merge-joins, and every hash exchange carries only
-        # (doc, pos, fp) tuples — the fp partial-distinct, the fp agg,
-        # and the skinny dropped-position roll-up
-        assert "SortMergeJoin" not in plan
-        assert plan.count("BroadcastHashJoin") == 2
-        assert plan.count("Exchange hashpartitioning") == 3
 
     def test_semantic_contamination_partial_agg(self, spark):
         from fbg_kafka_stream_file_transfer_spark.operators.similarity import (

@@ -289,6 +289,78 @@ class TestExactQuantileValues:
         got = profile._exact_quantile_values(df, "v", probs)
         assert got == list(expected)
 
+    def test_input_changing_between_passes(
+        self, spark, tmp_path, monkeypatch
+    ):
+        """An upstream that returns different rows once the stats pass
+        is done: every pass must read the one snapshot taken before
+        it, so the answer is that snapshot's exact quantiles."""
+        from fbg_kafka_stream_file_transfer_spark.operators import profile
+
+        shift = tmp_path / "shift"
+        shift.write_text("0")
+        shift_path = str(shift)
+
+        @F.udf("double")
+        def shifted(x):
+            with open(shift_path) as fh:
+                return x + float(fh.read())
+
+        df = spark.range(3000).select(
+            shifted(F.col("id").cast("double")).alias("v")
+        )
+        select = profile._select_order_stats
+
+        def after_stats_pass(*args, **kwargs):
+            shift.write_text("1000000")  # the upstream changes here
+            return select(*args, **kwargs)
+
+        monkeypatch.setattr(
+            profile, "_select_order_stats", after_stats_pass
+        )
+        got = profile._exact_quantile_values(df, "v", [0.1, 0.5, 0.9])
+        expected = (
+            spark.range(3000)
+            .select(F.col("id").cast("double").alias("v"))
+            .agg(F.expr("percentile(v, array(0.1, 0.5, 0.9))"))
+            .collect()[0][0]
+        )
+        assert got == list(expected)
+
+    def test_disagreeing_pass_counts_raise(self, spark):
+        """Bucket counts that do not add up to the interval's row count
+        (the input changed between passes) fail loudly, on both the
+        value-counts collect and a refinement level."""
+        from fbg_kafka_stream_file_transfer_spark.operators import profile
+
+        s = spark.range(10).select(F.col("id").cast("double").alias("_v"))
+        for claimed in (11, 1 << 18):
+            with pytest.raises(ValueError, match="changed between passes"):
+                profile._select_order_stats(s, [5], claimed, 0.0, 9.0)
+
+    def test_streaming_input_refused(self, spark):
+        from fbg_kafka_stream_file_transfer_spark.operators.profile import (
+            clip_outliers,
+            equidepth_histogram,
+            psi_drift,
+        )
+
+        stream = (
+            spark.readStream.format("rate")
+            .load()
+            .select(F.col("value").cast("double").alias("v"))
+        )
+        batch = spark.range(5).select(F.col("id").cast("double").alias("v"))
+        calls = [
+            lambda: equidepth_histogram(stream, "v"),
+            lambda: clip_outliers(stream, "v"),
+            lambda: psi_drift(stream, batch, "v"),
+            lambda: psi_drift(batch, stream, "v"),
+        ]
+        for call in calls:
+            with pytest.raises(ValueError, match="streaming DataFrame"):
+                call()
+
 
 class TestQueryAnsiIndependence:
     """The registry queries flagged by the r17 ANSI sweep must return
