@@ -1551,18 +1551,20 @@ def _merge_into_manifest(
     version fully readable, and an emptied partition drops out of the
     manifest instead of racing a directory delete.
 
-    LOCKED (the caller holds the write lease): one
-    ``overwrite_partitions`` commit, refused if the table moved since
-    the plan read it. OPTIMISTIC: the ENTIRE compute — delta snapshot,
+    The commit is one call of the table's one data commit
+    (``ManifestTable._data_commit``). LOCKED, the caller holds the
+    write lease for the whole merge and the commit is refused if the
+    table moved since the plan read it. OPTIMISTIC, the ENTIRE
+    compute — delta snapshot,
     current-state read, merge shuffle, generation write, stats
     aggregation — runs WITHOUT the lease (staged into a GC-invisible
     dot-dir); only the rename + metadata walk + manifest publish
-    serialize under it (``_stage_and_publish``, waiting up to
-    ``lock_wait_seconds``, 60 s by default). Two pipelines merging
-    disjoint partition sets therefore overlap their heavy work, and
-    the rebase check covers every commit since this merge READ the
-    table, so an overlapping winner still fails this writer loudly
-    instead of losing its update."""
+    serialize under it, waiting up to ``lock_wait_seconds`` (60 s by
+    default). Two pipelines merging disjoint partition sets therefore
+    overlap their heavy work, and the rebase check covers every
+    commit since this merge READ the table, so an overlapping winner
+    still fails this writer loudly unless the rebase proves the
+    partitions disjoint."""
     import uuid
 
     from .table import ManifestTable
@@ -1585,23 +1587,19 @@ def _merge_into_manifest(
         op = {"name": "merge", "n_partitions": len(touched)}
         if carry:
             op["file_scoped"] = len(carry)
-        if optimistic:
-            op["optimistic"] = True
-            mt._stage_and_publish(
-                merged, touched, ver, op_info=op, carry_files=carry,
-                retain_versions=retain_versions,
-                on_conflict="rebase_disjoint",
-                lock_wait_seconds=(
-                    60.0 if lock_wait_seconds is None else lock_wait_seconds
-                ),
-                lock_stale_after_seconds=lock_stale_after_seconds,
-            )
-        else:
-            mt.overwrite_partitions(
-                merged, touched, expected_version=ver, assume_locked=True,
-                retain_versions=retain_versions, op_info=op,
-                carry_files=carry,
-            )
+        mt._data_commit(
+            merged,
+            touched,
+            ver,
+            op,
+            retain_versions,
+            optimistic=optimistic,
+            carry_files=carry,
+            lock_wait_seconds=(
+                60.0 if lock_wait_seconds is None else lock_wait_seconds
+            ),
+            lock_stale_after_seconds=lock_stale_after_seconds,
+        )
         return len(touched)
     finally:
         _best_effort_delete(spark, delta_staging)

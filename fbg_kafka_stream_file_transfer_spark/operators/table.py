@@ -58,7 +58,7 @@ import json
 import math as _pymath
 import re
 import uuid
-from contextlib import contextmanager
+from contextlib import contextmanager, nullcontext
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -1848,6 +1848,16 @@ def _where_to_filter(where: list[tuple]):
     )
 
 
+def _require_json_op_info(op_info: dict | None) -> None:
+    """Refuse a non-JSON ``op_info`` BEFORE any data I/O: a bad op dict
+    must not surface as a publish failure after the generation was
+    written (r13 review; same loud-up-front rule as _normalize_where)."""
+    try:
+        json.dumps(op_info)
+    except TypeError as exc:
+        raise ValueError("op_info must be JSON-serializable") from exc
+
+
 class ManifestTable:
     """A partitioned parquet table with atomic, versioned commits.
 
@@ -1954,9 +1964,9 @@ class ManifestTable:
 
     def _keep_current_retain(self, new_version: int) -> int:
         """The ``retain_versions=None`` resolution shared by every
-        maintenance op (compact / commit_staged / repartition_table /
-        delete_where / update_where / vacuum, and every metadata-only
-        commit through `_metadata_commit`): the window that keeps
+        maintenance op (every data commit through `_publish_staged`,
+        every metadata-only commit through `_metadata_commit`, and
+        vacuum): the window that keeps
         every currently retained version PLUS the commit about to
         publish at ``new_version`` — a bare maintenance call must
         never truncate history (the r10 class; single implementation
@@ -3025,20 +3035,17 @@ class ManifestTable:
         registration."""
         if not partition_cols:
             raise ValueError("need at least one partition column")
-        missing = [c for c in partition_cols if c not in df.columns]
-        if missing:
-            raise ValueError(f"partition column(s) {missing} not in df")
         if self.current_version() is not None:
             raise ValueError(f"manifest table already exists: {self.path}")
         op = {"name": "create", "partition_cols": list(partition_cols)}
-        if assume_locked:
-            return self._commit(
-                df, None, version=1, pcols=partition_cols, op_info=op
-            )
-        with table_write_lock(self.spark, self.path, holder="create"):
-            return self._commit(
-                df, None, version=1, pcols=partition_cols, op_info=op
-            )
+        with (
+            nullcontext()
+            if assume_locked
+            else table_write_lock(self.spark, self.path, holder="create")
+        ):
+            return self._data_commit(
+                df, None, None, op, 2, pcols=partition_cols
+            )[1]
 
     def overwrite_partitions(
         self,
@@ -3046,20 +3053,18 @@ class ManifestTable:
         touched: list[tuple],
         expected_version: int | None = None,
         retain_versions: int = 2,
-        assume_locked: bool = False,
         op_info: dict | None = None,
         carry_files: dict[str, dict] | None = None,
     ) -> int:
         """Atomically replace the content of the ``touched`` partitions
-        with ``df``'s rows. ``df`` must contain only rows belonging to
-        touched partitions; a touched partition with no rows in ``df``
-        is REMOVED from the table (the atomic form of the emptied-
-        partition delete — entry dropped from the manifest, no
-        directory deletion racing readers). ``expected_version`` is an
-        optimistic lost-update check: commit refuses if the table
-        moved since the caller read it. ``assume_locked`` skips lock
-        acquisition when the caller already holds the table lease
-        (merge does).
+        with ``df``'s rows, as one locked :meth:`_data_commit`.
+        ``df`` must contain only rows belonging to touched partitions;
+        a touched partition with no rows in ``df`` is REMOVED from the
+        table (the atomic form of the emptied-partition delete —
+        entry dropped from the manifest, no directory deletion racing
+        readers). ``expected_version`` is an optimistic lost-update
+        check: commit refuses if the table moved since the caller
+        read it. Returns the number of touched partitions.
 
         ``carry_files`` (r14, the file-granular merge/DML hook):
         ``{partition_key: {"files": {carried_key: stats}, "dir":
@@ -3067,48 +3072,17 @@ class ManifestTable:
         the carried files (never read, never rewritten) ALONGSIDE
         whatever ``df`` landed there, entry bounds refolded from the
         merged per-file stats; a carried partition with no ``df``
-        rows keeps its carried membership instead of being removed."""
-        ver = self.current_version()
-        if ver is None:
-            raise ValueError(f"manifest table does not exist: {self.path}")
-        if carry_files:
-            # same subset rule stage_commit enforces (advisor r16):
-            # _finalize_generation only consults carry for TOUCHED
-            # partitions, so a stray key's survivors would be
-            # silently unpublished — row loss
-            stray = sorted(
-                set(carry_files) - {_partition_key(t) for t in touched}
-            )
-            if stray:
-                raise ValueError(
-                    f"carry_files key(s) {stray} are not in the"
-                    " touched partition set — every carrying"
-                    " partition must be touched; include it in"
-                    " touched or drop the carry entry"
-                )
-        if op_info is not None:
-            try:
-                json.dumps(op_info)
-            except TypeError as exc:
-                # fail BEFORE any data I/O: a bad op dict must not
-                # surface as a husk-leaking publish failure (r13
-                # review; same loud-up-front rule as _normalize_where)
-                raise ValueError(
-                    "op_info must be JSON-serializable"
-                ) from exc
-        op = op_info or {"name": "overwrite_partitions"}
-        if assume_locked:
-            return self._checked_commit(
-                df, touched, ver, expected_version, retain_versions,
-                op_info=op, carry_files=carry_files,
-            )
+        rows keeps its carried membership instead of being removed.
+        Every carrying partition must be in ``touched``."""
         with table_write_lock(self.spark, self.path, holder="overwrite"):
-            # re-read under the lock: the pre-lock read could be stale
-            ver = self.current_version()
-            return self._checked_commit(
-                df, touched, ver, expected_version, retain_versions,
-                op_info=op, carry_files=carry_files,
-            )
+            return self._data_commit(
+                df,
+                touched,
+                expected_version,
+                op_info or {"name": "overwrite_partitions"},
+                retain_versions,
+                carry_files=carry_files,
+            )[1]
 
     def small_file_report(
         self,
@@ -3475,73 +3449,218 @@ class ManifestTable:
         if zorder_by:
             op["zorder_by"] = list(zorder_by)
 
-        def _retain(ver_now: int) -> int:
-            if retain_versions is not None:
-                return retain_versions
-            return self._keep_current_retain(ver_now + 1)
-
-        if optimistic:
-            # stage (read + shuffle + write + stats) outside the
-            # lease; only the publish contends with live writers —
-            # retain_versions=None resolves keep-current at publish
-            # time inside commit_staged, under the lock
-            with _max_records_per_file(
-                self.spark, target_records_per_file
-            ):
-                self._stage_and_publish(
-                    df,
-                    touched,
-                    ver,
-                    op_info={**op, "optimistic": True},
-                    retain_versions=retain_versions,
-                    lock_stale_after_seconds=lock_stale_after_seconds,
-                )
-            return len(touched)
-
-        def _run(ver_now: int) -> int:
-            with _max_records_per_file(
-                self.spark, target_records_per_file
-            ):
-                return self._checked_commit(
-                    df, touched, ver_now, ver, _retain(ver_now),
-                    op_info=op,
-                )
-
-        with table_write_lock(
-            self.spark,
-            self.path,
-            holder="compact",
-            stale_after_seconds=lock_stale_after_seconds,
+        with _max_records_per_file(self.spark, target_records_per_file), (
+            nullcontext()
+            if optimistic
+            else table_write_lock(
+                self.spark,
+                self.path,
+                holder="compact",
+                stale_after_seconds=lock_stale_after_seconds,
+            )
         ):
-            return _run(self.current_version())
+            # optimistic: the stage (read + shuffle + write + stats)
+            # runs outside the lease, only the publish contends with
+            # live writers
+            self._data_commit(
+                df,
+                touched,
+                ver,
+                op,
+                retain_versions,
+                optimistic=optimistic,
+                lock_stale_after_seconds=lock_stale_after_seconds,
+            )
+        return len(touched)
 
-    # ---- optimistic (staged) commits ------------------------------
+    # ---- data commits: stage, then publish --------------------------
 
-    def _stage_and_publish(
+    def _data_commit(
         self,
         df: DataFrame,
-        touched: list[tuple],
-        base_version: int,
-        op_info: dict | None = None,
+        touched: list[tuple] | None,
+        base_version: int | None,
+        op_info: dict,
+        retain_versions: int | None,
+        optimistic: bool = False,
         carry_files: dict[str, dict] | None = None,
-        **publish_kw,
-    ) -> int:
-        """THE single optimistic-commit recipe — stage outside the
-        lease, publish with rebase, and abort the staging on ANY
-        publish failure so a loser never leaks a parquet copy until
-        the TTL vacuum. Merge, compact, and DML all route here (r13
-        review: the try/abort contract lived in three copies)."""
-        staged = self.stage_commit(
-            df, touched=touched, base_version=base_version,
-            carry_files=carry_files,
-        )
+        pcols: list[str] | None = None,
+        **lock_kw,
+    ) -> tuple[int, int]:
+        """THE data commit: :meth:`_stage` the rows, then
+        :meth:`_publish_staged` them under the write lease. Every
+        generation-writing op (create, overwrite_partitions, compact,
+        repartition_table, DML, the manifest merge) makes this one
+        call; ``optimistic`` only decides where the stage writes and
+        when the lease is taken. Returns ``(new version, partitions
+        touched)``.
+
+        - LOCKED (the caller holds the lease): stages straight into
+          ``g{cur+1}`` — that name belongs to the lease holder, so the
+          publish renames nothing, and a crashed commit leaves an
+          unreferenced generation the next commit overwrites.
+          ``base_version`` is the lost-update check, made before the
+          stage writes: the version the caller read (None skips it).
+        - OPTIMISTIC: :meth:`stage_commit` against ``base_version``
+          OUTSIDE the lease, then :meth:`commit_staged` (``lock_kw``)
+          takes it, rebases over disjoint winners and renames the
+          staging in. ANY publish failure aborts the staging, so a
+          loser never leaks a parquet copy until the TTL vacuum.
+
+        ``pcols`` names the partition columns when they do not come
+        from the current manifest (``create``, and ``repartition_table``
+        whose new keyspace replaces every old entry)."""
+        _require_json_op_info(op_info)
+        if not optimistic:
+            cur = self.current_version()
+            if base_version is not None and cur != base_version:
+                # the lost-update check, before the stage writes
+                raise ConcurrentWriterError(
+                    f"table {self.path} moved from v{base_version} to "
+                    f"v{cur} since the caller read it; recompute the "
+                    "merge against the current version"
+                )
+            staged = self._stage(df, touched, cur, False, carry_files, pcols)
+            version = self._publish_staged(staged, retain_versions, op_info)
+        else:
+            staged = self.stage_commit(
+                df,
+                touched=touched,
+                base_version=base_version,
+                carry_files=carry_files,
+            )
+            try:
+                version = self.commit_staged(
+                    staged,
+                    retain_versions=retain_versions,
+                    op_info={**op_info, "optimistic": True},
+                    **lock_kw,
+                )
+            except BaseException:
+                self.abort_staged(staged)
+                raise
+        return version, len(staged["touched"])
+
+    def _stage(
+        self,
+        df: DataFrame,
+        touched: list[tuple] | None,
+        base: int | None,
+        optimistic: bool,
+        carry_files: dict[str, dict] | None = None,
+        pcols: list[str] | None = None,
+    ) -> dict:
+        """Stage a data commit on top of version ``base`` — the one
+        place a commit's rows are checked and written: partition
+        columns and the reserved ``_p_*`` names, ``''`` partition
+        values, the generation write, ``touched`` derived from what
+        actually LANDED when it is None (never from a second
+        evaluation of ``df``: a nondeterministic df evaluated once
+        for distinct() and again for the write could land directories
+        absent from touched — rows with no manifest entry; external
+        review r10), stray ``carry_files`` keys, the CHECK and
+        derived-partition contracts, and the per-entry / per-file
+        stats and blooms. All of it is O(written data) and none of it
+        needs the lease, so the publish stays metadata-sized.
+
+        An optimistic stage writes a dot-prefixed ``.stage-<uuid>``
+        dir — invisible to readers (they follow manifest-named dirs
+        only) and to the GC (it sweeps ``gNNNNNNNN`` names only); a
+        locked one writes ``g{base+1}``. A refusal or failure after
+        the write starts deletes what it wrote. Returns the staging
+        token :meth:`_publish_staged` takes."""
+        man = self.manifest(base) if base is not None else None
+        if man is None and pcols is None:
+            raise ValueError(f"manifest table does not exist: {self.path}")
+        pcols = list(man["partition_cols"] if pcols is None else pcols)
+        missing = [c for c in pcols if c not in df.columns]
+        if missing:
+            raise ValueError(f"partition column(s) {missing} not in df")
+        dup = [f"_p_{c}" for c in pcols]
+        clash = set(dup) & set(df.columns)
+        if clash:
+            raise ValueError(
+                f"column name(s) {sorted(clash)} are reserved by the "
+                "manifest layout; rename them"
+            )
+        schema_json = json.loads(df.schema.json())
+        constraints = (man or {}).get("check_constraints") or {}
+        derived = self._derived_spec(man, pcols, schema_json)
+        from .scale import _reject_empty_string_partitions
+
+        def check_touched(touched: list[tuple]) -> None:
+            _reject_empty_string_partitions(touched, pcols)
+            # every carrying partition must be touched: the publish
+            # consults carry for TOUCHED partitions only, so a stray
+            # key's survivors would be silently unpublished — row
+            # loss (advisor r16)
+            stray = sorted(
+                set(carry_files or ())
+                - {_partition_key(t) for t in touched}
+            )
+            if stray:
+                raise ValueError(
+                    f"carry_files key(s) {stray} are not in the"
+                    " touched partition set — every carrying"
+                    " partition must be touched (its entry is"
+                    " rebuilt from carry + written files); include"
+                    " it in touched or drop the carry entry"
+                )
+
+        if touched is not None:
+            check_touched(touched)
+        if optimistic:
+            rel = f"{_DATA_DIR}/.stage-{uuid.uuid4().hex}"
+            context = f"staged commit for {self.path}"
+        else:
+            rel = f"{_DATA_DIR}/g{(base or 0) + 1:08d}"
+            context = f"commit v{(base or 0) + 1} of {self.path}"
+        staged = df
+        for c, d in zip(pcols, dup):
+            staged = staged.withColumn(d, F.col(c))
         try:
-            return self.commit_staged(
-                staged, op_info=op_info, **publish_kw
+            staged.write.partitionBy(*dup).parquet(
+                f"{self.path}/{rel}", mode="overwrite"
+            )
+            # the original pcols stay PHYSICAL in the data files, so
+            # this is a column-pruned parquet read of what landed — no
+            # directory name is parsed back to a value
+            back = self.spark.read.schema(staged.schema).parquet(
+                f"{self.path}/{rel}"
+            )
+            if touched is None:
+                touched = [
+                    tuple(r)
+                    for r in back.select(*pcols).distinct().collect()
+                ]
+                check_touched(touched)
+            if constraints or derived:
+                # one combined probe for both write contracts (r13)
+                _enforce_write_contracts(
+                    back, constraints, derived, context
+                )
+            # stats are keyed by partition VALUE, so the optimistic
+            # publish's rename does not invalidate them
+            stypes = {f.name: f.dataType for f in staged.schema.fields}
+            scols, _ = self._resolve_stats_cols(man, stypes, pcols)
+            bcols = self._resolve_bloom_cols(man, stypes, pcols)
+            stats_by_key = self._collect_entry_stats(
+                back, dup, scols, bcols
             )
         except BaseException:
-            self.abort_staged(staged)
+            _best_effort_delete(self.spark, f"{self.path}/{rel}")
             raise
+        return {
+            "rel": rel,
+            "base_version": base,
+            "touched": touched,
+            "pcols": pcols,
+            "dup": dup,
+            "staged_schema": staged.schema,
+            "schema_json": schema_json,
+            "stats": stats_by_key,
+            "carry_files": carry_files,
+        }
 
     def stage_commit(
         self,
@@ -3551,31 +3670,26 @@ class ManifestTable:
         read_partitions: list[tuple] | str = "touched",
         carry_files: dict[str, dict] | None = None,
     ) -> dict:
-        """Phase 1 of an optimistic commit: evaluate and write ``df``
-        into a GC-invisible staging generation WITHOUT holding the
-        write lease — the expensive part (the shuffle, the parquet
-        write, the stats aggregation) runs fully concurrent with any
-        other writer, the Delta/Iceberg optimistic-concurrency model.
-        Returns a staging token for :meth:`commit_staged` /
-        :meth:`abort_staged`.
+        """Phase 1 of an optimistic commit: :meth:`_stage` ``df`` into
+        a GC-invisible staging generation WITHOUT holding the write
+        lease — the expensive part (the shuffle, the parquet write,
+        the contract probes, the stats aggregation) runs fully
+        concurrent with any other writer, the Delta/Iceberg
+        optimistic-concurrency model. Returns a staging token for
+        :meth:`commit_staged` / :meth:`abort_staged`. A CRASHED
+        stager leaves a husk that ``vacuum(staging_ttl_seconds=...)``
+        sweeps by age (a concurrent winner's GC never touches it).
 
-        The staging directory is dot-prefixed under ``_data/`` —
-        invisible to readers (reads only follow manifest-named dirs)
-        and to the GC (which sweeps only ``gNNNNNNNN`` generation
-        names) — so a concurrent winner's commit+GC can never delete
-        an in-flight staging. A CRASHED stager leaves a husk that
-        ``vacuum(staging_ttl_seconds=...)`` sweeps by age.
-
-        ``df`` must carry the base version's schema (a concurrent
-        rebase refuses schema divergence — evolution and optimistic
-        concurrency don't compose; use the locked path to evolve).
-        Like every commit, ``touched=None`` derives the partition set
-        from what actually landed (exactly-once df evaluation).
-        ``base_version`` pins the version ``df`` was COMPUTED against
-        when that read happened earlier than the staging (the
-        optimistic merge does this) — the rebase check must cover
-        every commit since the data was read, not since it was
-        staged.
+        ``df`` must carry the base version's schema: a concurrent
+        rebase refuses schema divergence, because evolution and
+        optimistic concurrency don't compose — evolve through a
+        commit made under the lease. Like every commit,
+        ``touched=None`` derives the partition set from what actually
+        landed (exactly-once df evaluation). ``base_version`` pins
+        the version ``df`` was COMPUTED against when that read
+        happened earlier than the staging (the optimistic merge does
+        this) — the rebase check must cover every commit since the
+        data was read, not since it was staged.
 
         ``read_partitions`` declares df's READ set — the partitions
         whose contents the staged rows were derived from — because
@@ -3601,88 +3715,6 @@ class ManifestTable:
         retained (the existing optimistic-writer requirement) keeps
         the carried generations alive until publish re-references
         them."""
-        base = (
-            self.current_version() if base_version is None else base_version
-        )
-        if base is None:
-            raise ValueError(f"manifest table does not exist: {self.path}")
-        man = self.manifest(base)
-        pcols = list(man["partition_cols"])
-        missing = [c for c in pcols if c not in df.columns]
-        if missing:
-            raise ValueError(f"partition column(s) {missing} not in df")
-        dup = [f"_p_{c}" for c in pcols]
-        clash = set(dup) & set(df.columns)
-        if clash:
-            raise ValueError(
-                f"column name(s) {sorted(clash)} are reserved by the "
-                "manifest layout; rename them"
-            )
-        from .scale import _reject_empty_string_partitions
-
-        if touched is not None:
-            _reject_empty_string_partitions(touched, pcols)
-        rel = f"{_DATA_DIR}/.stage-{uuid.uuid4().hex}"
-        staged = df
-        for c, d in zip(pcols, dup):
-            staged = staged.withColumn(d, F.col(c))
-        staged.write.partitionBy(*dup).parquet(
-            f"{self.path}/{rel}", mode="overwrite"
-        )
-        back = self.spark.read.schema(staged.schema).parquet(
-            f"{self.path}/{rel}"
-        )
-        if touched is None:
-            touched = [
-                tuple(r) for r in back.select(*pcols).distinct().collect()
-            ]
-            _reject_empty_string_partitions(touched, pcols)
-        if carry_files:
-            # the documented soundness argument REQUIRES every
-            # carrying partition to be in touched — _finalize_
-            # generation only consults carry for touched partitions,
-            # so an outside entry would be silently dropped (its
-            # survivors unpublished: row loss). Loud up front, while
-            # the table is unchanged (advisor r16).
-            stray = sorted(
-                set(carry_files) - {_partition_key(t) for t in touched}
-            )
-            if stray:
-                _best_effort_delete(self.spark, f"{self.path}/{rel}")
-                raise ValueError(
-                    f"carry_files key(s) {stray} are not in the"
-                    " touched partition set — every carrying"
-                    " partition must be touched (its entry is"
-                    " rebuilt from carry + written files); include"
-                    " it in touched or drop the carry entry"
-                )
-        # CHECK constraints validate HERE, outside the lease — the
-        # locked publish phase must stay metadata-sized, so it skips
-        # the back-read this probe needs. A violation deletes the
-        # staging before raising (no TTL-vacuum husk for a refusal).
-        constraints = man.get("check_constraints") or {}
-        derived = man.get("derived_partitions") or {}
-        if constraints or derived:
-            try:
-                _enforce_write_contracts(
-                    back,
-                    constraints,
-                    derived,
-                    f"staged commit for {self.path}",
-                )
-            except CheckConstraintViolation:
-                _best_effort_delete(self.spark, f"{self.path}/{rel}")
-                raise
-        # stats run here, against the STAGING dir, outside the lease
-        # (values are keyed by partition VALUE, so the later rename
-        # does not invalidate them); only the metadata walk + publish
-        # remain for the locked phase
-        stypes = {f.name: f.dataType for f in staged.schema.fields}
-        scols, _ = self._resolve_stats_cols(man, stypes, pcols)
-        bcols = self._resolve_bloom_cols(man, stypes, pcols)
-        stats_by_key = self._collect_entry_stats(
-            back, dup, scols, bcols
-        )
         if read_partitions == "touched":
             read_scope, read_keys = "keys", []
         elif read_partitions == "all":
@@ -3695,19 +3727,11 @@ class ManifestTable:
                 "read_partitions must be 'touched', 'all', or a list "
                 "of partition value tuples"
             )
-        return {
-            "rel": rel,
-            "base_version": base,
-            "touched": touched,
-            "pcols": pcols,
-            "dup": dup,
-            "staged_schema": staged.schema,
-            "schema_json": json.loads(df.schema.json()),
-            "stats": stats_by_key,
-            "read_scope": read_scope,
-            "read_keys": read_keys,
-            "carry_files": carry_files,
-        }
+        base = (
+            self.current_version() if base_version is None else base_version
+        )
+        staged = self._stage(df, touched, base, True, carry_files)
+        return {**staged, "read_scope": read_scope, "read_keys": read_keys}
 
     def commit_staged(
         self,
@@ -3718,11 +3742,12 @@ class ManifestTable:
         lock_stale_after_seconds: float | None = None,
         op_info: dict | None = None,
     ) -> int:
-        """Phase 2: publish a :meth:`stage_commit` token as the next
-        version. Only the cheap part runs under the lease — one
-        directory rename (staging → generation), the O(written dirs)
-        metadata walk, and the manifest publish; lease hold time is
-        metadata-sized regardless of data size.
+        """Phase 2: take the write lease and :meth:`_publish_staged` a
+        :meth:`stage_commit` token as the next version. Only the cheap
+        part runs under the lease — one directory rename (staging →
+        generation), the O(written dirs) metadata walk, and the
+        manifest publish; lease hold time is metadata-sized
+        regardless of data size.
 
         If the table moved past the staged base version,
         ``on_conflict="rebase_disjoint"`` re-reads the pointer and
@@ -3749,79 +3774,7 @@ class ManifestTable:
             raise ValueError(
                 "on_conflict must be 'rebase_disjoint' or 'fail'"
             )
-        if op_info is not None:
-            try:
-                json.dumps(op_info)
-            except TypeError as exc:
-                raise ValueError(
-                    "op_info must be JSON-serializable"
-                ) from exc
-
-        def _do() -> int:
-            cur = self.current_version()
-            if cur is None:
-                raise ValueError(
-                    f"manifest table does not exist: {self.path}"
-                )
-            if cur != staged["base_version"]:
-                if on_conflict == "fail" or staged.get("read_scope") == "all":
-                    raise ConcurrentWriterError(
-                        f"table {self.path} moved from "
-                        f"v{staged['base_version']} to v{cur} since the "
-                        "commit was staged"
-                        + (
-                            " and the staged df was derived from the "
-                            "WHOLE table (read_partitions='all'), so "
-                            "any intervening commit invalidates it"
-                            if staged.get("read_scope") == "all"
-                            else ""
-                        )
-                        + "; recompute against the current version"
-                    )
-                # conflict-check the READ set as well as the write
-                # set: rebasing must not publish data derived from
-                # partitions a winner changed (external review r11)
-                self._assert_rebase_safe(
-                    staged["base_version"],
-                    cur,
-                    {_partition_key(t) for t in staged["touched"]}
-                    | set(staged.get("read_keys", [])),
-                )
-            version = cur + 1
-            retain = (
-                retain_versions
-                if retain_versions is not None
-                # resolved HERE, under the lock, so the window is
-                # right even after a rebase over winners
-                else self._keep_current_retain(version)
-            )
-            gen_rel = f"{_DATA_DIR}/g{version:08d}"
-            # replaces the husk of a crashed prior commit, if any
-            replace_dir(
-                self.spark,
-                f"{self.path}/{staged['rel']}",
-                f"{self.path}/{gen_rel}",
-            )
-            self._finalize_generation(
-                gen_rel,
-                staged["staged_schema"],
-                staged["schema_json"],
-                staged["touched"],
-                version,
-                retain,
-                staged["pcols"],
-                staged["dup"],
-                stats_by_key=staged["stats"],
-                carry_files=staged.get("carry_files"),
-                op_info=op_info
-                or {
-                    "name": "staged_commit",
-                    "base_version": staged["base_version"],
-                    "n_partitions": len(staged["touched"]),
-                },
-            )
-            return version
-
+        _require_json_op_info(op_info)
         with table_write_lock(
             self.spark,
             self.path,
@@ -3829,7 +3782,76 @@ class ManifestTable:
             wait_seconds=lock_wait_seconds,
             stale_after_seconds=lock_stale_after_seconds,
         ):
-            return _do()
+            return self._publish_staged(
+                staged,
+                retain_versions,
+                op_info
+                or {
+                    "name": "staged_commit",
+                    "base_version": staged["base_version"],
+                    "n_partitions": len(staged["touched"]),
+                },
+                on_conflict=on_conflict,
+            )
+
+    def _publish_staged(
+        self,
+        staged: dict,
+        retain_versions: int | None,
+        op_info: dict,
+        on_conflict: str = "fail",
+    ) -> int:
+        """Publish a :meth:`_stage` token as the next version; the
+        caller holds the write lease. If the table moved past the
+        stage's base — only an optimistic stage can find that, a
+        locked one staged at the current version under this lease —
+        ``on_conflict`` decides between refusing and the rebase check.
+        ``retain_versions=None`` resolves HERE to keep every currently
+        retained version, so the window is right even after a rebase
+        over winners. An optimistic staging is renamed in as
+        ``g{version}``; then :meth:`_finalize_generation` builds and
+        publishes the manifest. Returns the new version."""
+        cur = self.current_version()
+        base = staged["base_version"]
+        if cur is None and base is not None:
+            raise ValueError(f"manifest table does not exist: {self.path}")
+        if cur != base:
+            read_all = staged.get("read_scope") == "all"
+            if on_conflict == "fail" or read_all:
+                raise ConcurrentWriterError(
+                    f"table {self.path} moved from v{base} to v{cur}"
+                    " since the commit was staged"
+                    + (
+                        " and the staged df was derived from the "
+                        "WHOLE table (read_partitions='all'), so "
+                        "any intervening commit invalidates it"
+                        if read_all
+                        else ""
+                    )
+                    + "; recompute against the current version"
+                )
+            # conflict-check the READ set as well as the write set:
+            # rebasing must not publish data derived from partitions a
+            # winner changed (external review r11)
+            self._assert_rebase_safe(
+                base,
+                cur,
+                {_partition_key(t) for t in staged["touched"]}
+                | set(staged.get("read_keys", [])),
+            )
+        version = (cur or 0) + 1
+        if retain_versions is None:
+            retain_versions = self._keep_current_retain(version)
+        gen_rel = f"{_DATA_DIR}/g{version:08d}"
+        if staged["rel"] != gen_rel:
+            # replaces the husk of a crashed prior commit, if any
+            replace_dir(
+                self.spark,
+                f"{self.path}/{staged['rel']}",
+                f"{self.path}/{gen_rel}",
+            )
+        self._finalize_generation(staged, version, retain_versions, op_info)
+        return version
 
     def abort_staged(self, staged: dict) -> None:
         """Drop an un-committed staging generation (the loser's
@@ -3867,8 +3889,8 @@ class ManifestTable:
         # a concurrent WRITE-CONTRACT change (CHECK constraint or
         # derived-partition spec) is as rebase-hostile as a schema
         # change: the staged rows were validated against the BASE's
-        # contracts at stage time, and the publish path deliberately
-        # skips the probe (back is None under the lease) — rebasing
+        # contracts at stage time, and the publish never re-reads the
+        # data (it stays metadata-sized under the lease) — rebasing
         # would publish rows the new contract never saw (r13 review;
         # the window pre-existed for merge/compact and became
         # acute with arbitrary-value optimistic UPDATEs)
@@ -4543,30 +4565,23 @@ class ManifestTable:
             df = self.read(manifest_dict=man).repartition(
                 *[F.col(c) for c in new_partition_cols]
             )
-            retain = (
-                retain_versions
-                if retain_versions is not None
-                else self._keep_current_retain(cur + 1)
-            )
             with _max_records_per_file(
                 self.spark, target_records_per_file
             ):
-                # the shared commit recipe (touched=None derives the
-                # new keyspace from what landed; full_replace drops
-                # every old-keyspace entry)
-                self._commit(
+                # the one commit recipe: touched=None derives the new
+                # keyspace from what landed, and the changed partition
+                # columns drop every old-keyspace entry
+                return self._data_commit(
                     df,
                     None,
-                    version=cur + 1,
-                    retain_versions=retain,
-                    pcols=list(new_partition_cols),
-                    full_replace=True,
-                    op_info={
+                    cur,
+                    {
                         "name": "repartition_table",
                         "new_partition_cols": list(new_partition_cols),
                     },
-                )
-            return cur + 1
+                    retain_versions,
+                    pcols=list(new_partition_cols),
+                )[0]
 
         with table_write_lock(
             self.spark, self.path, holder="repartition"
@@ -4992,35 +5007,23 @@ class ManifestTable:
             }
             if fg_touched:
                 op["file_scoped"] = len(fg_touched)
-            if optimistic:
-                # stage the rewrite OUTSIDE the lease; the publish
-                # rebases over partition-disjoint winners exactly like
-                # an optimistic merge/compact. Serialization is at
-                # PARTITION granularity: rows a disjoint concurrent
-                # writer lands are untouched by this statement even
-                # when they match the predicate — run the locked path
-                # for predicate-serializable DML.
-                op["optimistic"] = True
-                newv = self._stage_and_publish(
-                    df,
-                    touched,
-                    ver,
-                    op_info=op,
-                    carry_files=fg_carry or None,
-                    retain_versions=retain_versions,
-                    lock_stale_after_seconds=lock_stale_after_seconds,
-                )
-            else:
-                retain = (
-                    retain_versions
-                    if retain_versions is not None
-                    else self._keep_current_retain(ver + 1)
-                )
-                self._checked_commit(
-                    df, touched, ver, ver, retain, op_info=op,
-                    carry_files=fg_carry or None,
-                )
-                newv = ver + 1
+            # optimistic: the rewrite stages OUTSIDE the lease and the
+            # publish rebases over partition-disjoint winners exactly
+            # like an optimistic merge/compact. Serialization is at
+            # PARTITION granularity: rows a disjoint concurrent writer
+            # lands are untouched by this statement even when they
+            # match the predicate — run the locked path for
+            # predicate-serializable DML.
+            newv, _ = self._data_commit(
+                df,
+                touched,
+                ver,
+                op,
+                retain_versions,
+                optimistic=optimistic,
+                carry_files=fg_carry or None,
+                lock_stale_after_seconds=lock_stale_after_seconds,
+            )
             if set_cols is None:
                 if meta_delete:
                     tkeys = {_partition_key(t) for t in touched}
@@ -5045,16 +5048,17 @@ class ManifestTable:
                 counts["rows_updated"] = matched
             return counts
 
-        if optimistic:
-            # the whole evaluation runs lock-free; only
-            # commit_staged's publish contends
-            with scoped_conf(self.spark, ENGINE_SQL_CONF):
-                return _do(self.current_version())
-        with scoped_conf(self.spark, ENGINE_SQL_CONF), table_write_lock(
-            self.spark,
-            self.path,
-            holder="dml",
-            stale_after_seconds=lock_stale_after_seconds,
+        # optimistic: the whole evaluation runs lock-free; only the
+        # publish contends
+        with scoped_conf(self.spark, ENGINE_SQL_CONF), (
+            nullcontext()
+            if optimistic
+            else table_write_lock(
+                self.spark,
+                self.path,
+                holder="dml",
+                stale_after_seconds=lock_stale_after_seconds,
+            )
         ):
             return _do(self.current_version())
 
@@ -5562,80 +5566,6 @@ class ManifestTable:
             _do()
         return None
 
-    def _checked_commit(
-        self,
-        df,
-        touched,
-        ver,
-        expected_version,
-        retain_versions,
-        op_info: dict | None = None,
-        carry_files: dict[str, dict] | None = None,
-    ) -> int:
-        if expected_version is not None and ver != expected_version:
-            raise ConcurrentWriterError(
-                f"table {self.path} moved from v{expected_version} to "
-                f"v{ver} since the caller read it; recompute the merge "
-                "against the current version"
-            )
-        return self._commit(
-            df,
-            touched,
-            version=(ver or 0) + 1,
-            retain_versions=retain_versions,
-            op_info=op_info,
-            carry_files=carry_files,
-        )
-
-    def _commit(
-        self,
-        df: DataFrame,
-        touched: list[tuple] | None,
-        version: int,
-        retain_versions: int = 2,
-        pcols: list[str] | None = None,
-        full_replace: bool = False,
-        op_info: dict | None = None,
-        carry_files: dict[str, dict] | None = None,
-    ) -> int:
-        """Write generation ``version``, publish its manifest, GC.
-        ``pcols`` comes from the caller at create (version 1), from
-        the previous manifest afterwards, and from the caller again
-        on a ``repartition_table`` full replace."""
-        if pcols is None:
-            pcols = list(self.manifest(version - 1)["partition_cols"])
-        dup = [f"_p_{c}" for c in pcols]
-        clash = set(dup) & set(df.columns)
-        if clash:
-            raise ValueError(
-                f"column name(s) {sorted(clash)} are reserved by the "
-                "manifest layout; rename them"
-            )
-        from .scale import _reject_empty_string_partitions
-
-        if touched is not None:
-            _reject_empty_string_partitions(touched, pcols)
-        gen_rel = f"{_DATA_DIR}/g{version:08d}"
-        staged = df
-        for c, d in zip(pcols, dup):
-            staged = staged.withColumn(d, F.col(c))
-        staged.write.partitionBy(*dup).parquet(
-            f"{self.path}/{gen_rel}", mode="overwrite"
-        )
-        return self._finalize_generation(
-            gen_rel,
-            staged.schema,
-            json.loads(df.schema.json()),
-            touched,
-            version,
-            retain_versions,
-            pcols,
-            dup,
-            full_replace=full_replace,
-            op_info=op_info,
-            carry_files=carry_files,
-        )
-
     def _resolve_stats_cols(
         self,
         prev_man: dict | None,
@@ -5957,63 +5887,65 @@ class ManifestTable:
                 }
         return out
 
-    def _finalize_generation(
-        self,
-        gen_rel: str,
-        staged_schema: T.StructType,
-        schema_json: dict,
-        touched: list[tuple] | None,
-        version: int,
-        retain_versions: int,
-        pcols: list[str],
-        dup: list[str],
-        stats_by_key: dict[str, dict] | None = None,
-        full_replace: bool = False,
-        op_info: dict | None = None,
-        carry_files: dict[str, dict] | None = None,
-    ) -> int:
-        """Turn a fully written generation directory into a published
-        manifest version — the shared back half of `_commit` and the
-        optimistic `commit_staged` path (which stages the generation
-        OUTSIDE the write lease and only runs this part under it).
-        ``full_replace`` (r13, the ``repartition_table`` path) drops
-        every previous entry instead of carrying untouched ones
-        forward — the new generation IS the whole table, and the old
-        entries live in a different partition-column keyspace."""
-        from .scale import _reject_empty_string_partitions
-
-        # the back-read builds a file index of the whole generation —
-        # only pay it when something below actually scans it (the
-        # commit_staged path passes both touched and stats, and must
-        # stay metadata-sized under the lease; external review r11)
-        back = None
-        if touched is None or stats_by_key is None:
-            back = self.spark.read.schema(staged_schema).parquet(
-                f"{self.path}/{gen_rel}"
+    def _derived_spec(
+        self, man: dict | None, pcols: list[str], schema_json: dict
+    ) -> dict:
+        """The derived-partition spec (r13 hidden partitioning) a data
+        commit on top of ``man`` enforces and persists. The spec is a
+        CREATE-time property like stats_cols: the first commit
+        validates this instance's; every later one takes the table's
+        own and refuses a different one on this instance — silently
+        ignoring it would leave the user believing enforcement +
+        projection are active (r13 review). A ``repartition_table``
+        full replace may retire the derived key (spec dropped with
+        it, documented); the source column is protected by the
+        drop_columns guard."""
+        if man is not None:
+            derived = man.get("derived_partitions") or {}
+            if (
+                self.derived_partitions
+                and dict(self.derived_partitions) != derived
+            ):
+                raise ValueError(
+                    "derived_partitions is set at create() and"
+                    f" cannot change; table has {derived!r}"
+                )
+        elif self.derived_partitions:
+            derived = _validate_derived_partitions(
+                self.derived_partitions, pcols, schema_json
             )
-        if touched is None:
-            # derive touched from the WRITTEN generation, never from a
-            # second evaluation of df: a nondeterministic df (sampling,
-            # rand) evaluated once for distinct() and again for the
-            # write could land partition directories absent from
-            # touched — rows on disk with no manifest entry, silently
-            # invisible (external review r10). The original pcols stay
-            # PHYSICAL in the data files, so this is a column-pruned
-            # parquet read of what actually landed — no directory name
-            # is parsed back to a value. Empty-string rejection moves
-            # after the write but before manifest publish, so a refusal
-            # leaves only an unreferenced (invisible, GC-able) husk.
-            touched = [
-                tuple(r) for r in back.select(*pcols).distinct().collect()
-            ]
-            _reject_empty_string_partitions(touched, pcols)
-        # map each touched partition to its freshly written directory
-        # by VALUE (the escaped-dir-name walk shared with the plain
-        # merge path); no directory name is ever parsed back to a value
+        else:
+            return {}
+        names = {f["name"] for f in schema_json.get("fields", [])}
+        return {
+            p: s
+            for p, s in derived.items()
+            if p in pcols and s["source"] in names
+        }
+
+    def _finalize_generation(
+        self, staged: dict, version: int, retain_versions: int, op_info: dict
+    ) -> None:
+        """Turn a staged generation, in place as ``g{version}``, into
+        the published manifest version — the metadata-only tail of
+        :meth:`_publish_staged`, run under the write lease: the
+        tombstone and derived-spec refusals, the entry building (one
+        entry per touched partition, carried files merged in,
+        untouched entries carried forward) and
+        :meth:`_publish_entries`. A stage whose partition columns
+        differ from the current version's (the ``repartition_table``
+        full replace) drops every previous entry instead of carrying
+        untouched ones forward — the new generation IS the whole
+        table, and the old entries live in a different
+        partition-column keyspace."""
+        pcols, touched = staged["pcols"], staged["touched"]
+        schema_json = staged["schema_json"]
+        stats_by_key = staged["stats"]
+        carry_files = staged["carry_files"]
         prev_man = self.manifest(version - 1) if version > 1 else None
         prev_entries = (
             {e["key"]: e for e in prev_man["entries"]}
-            if prev_man is not None and not full_replace
+            if prev_man is not None and prev_man["partition_cols"] == pcols
             else {}
         )
         # the table properties PERSIST: later commits (including
@@ -6038,65 +5970,18 @@ class ManifestTable:
                 " Pick a fresh name, or rewrite the table"
                 " (create from read()) to clear the tombstones"
             )
-        # CHECK constraints (r13): every generation-writing commit
-        # validates the rows it back-reads here, O(written data) —
-        # the optimistic path validates at stage_commit time instead
-        # (back is None under the lease by design). A refusal leaves
-        # the written generation as an unreferenced, GC-able husk.
-        constraints = props["check_constraints"] or {}
-        # derived partitions (r13 hidden partitioning): the spec
-        # persists from create like stats_cols; every later commit
-        # re-reads the table's own and enforces pcol ==
-        # transform(source) on what it wrote — scan-time projection
-        # pruning is only sound if no committed row ever disagrees
-        if prev_man is not None:
-            derived = props["derived_partitions"] or {}
-            if (
-                self.derived_partitions
-                and dict(self.derived_partitions) != derived
-            ):
-                # the spec is a CREATE-time property (like
-                # stats_cols); silently ignoring a different spec on
-                # an existing table would leave the user believing
-                # enforcement + projection are active (r13 review)
-                raise ValueError(
-                    "derived_partitions is set at create() and"
-                    f" cannot change; table has {derived!r}"
-                )
-        elif self.derived_partitions:
-            derived = _validate_derived_partitions(
-                self.derived_partitions, pcols, schema_json
-            )
-        else:
-            derived = {}
-        if derived:
-            # a repartition_table full replace may retire the derived
-            # key (spec dropped with it, documented); the source
-            # column is protected by the drop_columns guard
-            names = {f["name"] for f in schema_json.get("fields", [])}
-            derived = {
-                p: s
-                for p, s in derived.items()
-                if p in pcols and s["source"] in names
-            }
-        if back is not None and (constraints or derived):
-            # one combined probe for both write contracts (r13 review)
-            _enforce_write_contracts(
-                back,
-                constraints,
-                derived,
-                f"commit v{version} of {self.path}",
-            )
-        coltypes = {f.name: f.dataType for f in staged_schema.fields}
-        scols, stats_cfg = self._resolve_stats_cols(
-            prev_man, coltypes, pcols
-        )
+        derived = self._derived_spec(prev_man, pcols, schema_json)
+        coltypes = {
+            f.name: f.dataType for f in staged["staged_schema"].fields
+        }
+        _, stats_cfg = self._resolve_stats_cols(prev_man, coltypes, pcols)
         bcols = self._resolve_bloom_cols(prev_man, coltypes, pcols)
-        if stats_by_key is None:
-            stats_by_key = self._collect_entry_stats(
-                back, dup, scols, bcols
-            )
-        dirs_by_key = self._map_partition_dirs(gen_rel, dup, touched)
+        # map each touched partition to its freshly written directory
+        # by VALUE (the escaped-dir-name walk shared with the plain
+        # merge path); no directory name is ever parsed back to a value
+        dirs_by_key = self._map_partition_dirs(
+            f"{_DATA_DIR}/g{version:08d}", staged["dup"], touched
+        )
         for t in touched:
             key = _partition_key(t)
             rel = dirs_by_key.get(key)
@@ -6171,7 +6056,6 @@ class ManifestTable:
             },
             op_info,
         )
-        return len(touched)
 
     def _publish_entries(
         self,

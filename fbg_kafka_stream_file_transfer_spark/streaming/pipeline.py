@@ -174,12 +174,15 @@ def _retry_partition_cols(df: DataFrame) -> DataFrame:
     # backoff rows the probe must not touch. NULL-safe: a row with no
     # next_attempt_time lands in bucket -1 (never pruned IN, matching
     # the row-level filter which also never admits it).
-    return _partition_col(df).withColumn(
-        "nab",
-        F.coalesce(
-            F.floor(F.unix_timestamp(F.col("next_attempt_time")) / F.lit(3600)),
-            F.lit(-1),
-        ),
+    return _partition_col(df).withColumn("nab", _retry_bucket())
+
+
+def _retry_bucket():
+    """The retry buffer's ``nab`` partition value: the next-attempt hour
+    bucket, -1 when there is no next attempt."""
+    return F.coalesce(
+        F.floor(F.unix_timestamp(F.col("next_attempt_time")) / F.lit(3600)),
+        F.lit(-1),
     )
 
 
@@ -195,6 +198,20 @@ def _write_leg(df: DataFrame, path: str, epoch_id: int | None) -> None:
             .partitionBy("batch_id", "dt")
             .parquet(path)
         )
+
+
+def _write_route_legs(
+    result: PipelineResult, out_dir: str, epoch_id: int | None
+) -> None:
+    """incoming/, processed/ and failed/ for one route call. The DLQ leg
+    is best-effort like the reference (E5, dlq-handler.yaml:116-124): a
+    failure there is logged and must not lose the batch."""
+    _write_leg(result.incoming, f"{out_dir}/incoming", epoch_id)
+    _write_leg(result.processed, f"{out_dir}/processed", epoch_id)
+    try:
+        _write_leg(result.dlq, f"{out_dir}/failed", epoch_id)
+    except Exception:  # E5: swallow DLQ-sink errors, keep the batch
+        log.warning("DLQ sink write failed (best-effort, E5)", exc_info=True)
 
 
 def write_batch_sinks(
@@ -216,21 +233,14 @@ def write_batch_sinks(
     DLQ writes are best-effort like the reference (E5,
     dlq-handler.yaml:116-124): a failure there must not lose the batch.
     """
-
-    write = lambda df, leg: _write_leg(df, f"{out_dir}/{leg}", epoch_id)  # noqa: E731
-
-    write(result.incoming, "incoming")
-    write(result.processed, "processed")
+    _write_route_legs(result, out_dir, epoch_id)
     # the retry buffer stays OUTSIDE the batch_id scheme: the drain
     # rebuilds it ((nab, dt) layout) and a replayed batch's duplicate
-    # retry rows collapse at drain time via the correlation_id dedup
+    # retry rows collapse at drain time via the correlation_id dedup.
+    # Appended last: a failing incoming/processed leg raises first.
     _retry_partition_cols(result.retry_buffer).write.mode("append").partitionBy(
         "nab", "dt"
     ).parquet(f"{out_dir}/retry")
-    try:
-        write(result.dlq, "failed")
-    except Exception:  # E5: swallow DLQ-sink errors, keep the batch
-        log.warning("DLQ sink write failed (best-effort, E5)", exc_info=True)
 
 
 def _swap_buffer(
@@ -541,12 +551,7 @@ def replay_due_retries(
     # letting a later drain reuse — and dynamic-overwrite — a committed
     # drain's epoch
     publish_file(spark, seq_path, str(drain_seq + 1))
-    _write_leg(result.incoming, inc_path, epoch)
-    _write_leg(result.processed, f"{out_dir}/processed", epoch)
-    try:
-        _write_leg(result.dlq, f"{out_dir}/failed", epoch)
-    except Exception:  # E5
-        log.warning("DLQ sink write failed (best-effort, E5)", exc_info=True)
+    _write_route_legs(result, out_dir, epoch)
 
     # rebuild the buffer: survivors + this replay's rescheduled rows.
     # Reschedules are re-anchored at DRAIN time (now + backoff) — the
@@ -571,13 +576,7 @@ def replay_due_retries(
     # __HIVE_DEFAULT_PARTITION__, where the next drain's bucket filter
     # (NULL <= h → NULL) excludes them from `due` while `remaining`
     # drops them once elapsed — silently lost, never retried or DLQ'd
-    new_buf = new_buf.withColumn(
-        "nab",
-        F.coalesce(
-            F.floor(F.unix_timestamp(F.col("next_attempt_time")) / F.lit(3600)),
-            F.lit(-1),
-        ),
-    )
+    new_buf = new_buf.withColumn("nab", _retry_bucket())
     new_buf = new_buf.persist()
     _swap_buffer(
         spark, buf_path, new_buf if new_buf.count() else None, ("nab", "dt")

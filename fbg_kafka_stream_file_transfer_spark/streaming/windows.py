@@ -11,6 +11,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..operators.monitoring import error_rate, p95_processing_time
+
 
 def streaming_error_rate(
     events: DataFrame,
@@ -27,20 +29,9 @@ def streaming_error_rate(
     streaming equivalent of Prometheus evaluating rate() every 30 s
     (alerts.yaml:16).
     """
-    w = F.window(F.col(time_col), window, slide)
-    return (
-        events.withWatermark(time_col, watermark)
-        .groupBy(w.alias("w"))
-        .agg(
-            F.count("*").alias("total"),
-            F.sum(F.when(F.col(status_col) == failed_value, 1).otherwise(0)).alias("failed"),
-        )
-        .select(
-            F.col("w.start").alias("window_start"),
-            "total",
-            "failed",
-            (F.col("failed") / F.col("total")).alias("error_rate"),
-        )
+    return error_rate(
+        events.withWatermark(time_col, watermark),
+        time_col, status_col, failed_value, window, slide,
     )
 
 
@@ -79,15 +70,9 @@ def streaming_p95(
     exactly like Prometheus merges histogram buckets
     (alerts.yaml:51-60,76-85). Pass ``group_cols=["path"]`` for A4's
     per-path dimension. State is evicted once the watermark passes."""
-    dims = list(group_cols or [])
-    return (
-        events.withWatermark(time_col, watermark)
-        .groupBy(F.window(F.col(time_col), window).alias("w"), *dims)
-        .agg(
-            F.percentile_approx(F.col(duration_col), 0.95, 10000).alias("p95_seconds"),
-            F.count("*").alias("n"),
-        )
-        .select(F.col("w.start").alias("window_start"), *dims, "p95_seconds", "n")
+    return p95_processing_time(
+        events.withWatermark(time_col, watermark),
+        time_col, duration_col, window, exact=False, group_cols=group_cols,
     )
 
 

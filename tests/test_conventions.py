@@ -281,8 +281,9 @@ def _table_call_sites(name: str) -> list[str]:
 
 def test_metadata_commits_publish_through_one_path():
     """Manifests are built in ``_publish_entries``, called from the
-    data-commit tail (_finalize_generation), the one metadata-only
-    commit path (_metadata_commit) and clone_to. A fourth call site is
+    publish half of the one data commit (_finalize_generation, under
+    _publish_staged), the one metadata-only commit path
+    (_metadata_commit) and clone_to. A fourth call site is
     a metadata-only commit copying the persisted table properties by
     hand again, the copy that once had to be kept in step in eight
     places."""
@@ -299,3 +300,23 @@ def test_metadata_answers_are_planned_once():
     rule."""
     sites = _table_call_sites("_pcol_clause_exact")
     assert len(sites) <= 2, f"_pcol_clause_exact call sites: {sites}"
+
+
+def test_data_commits_publish_through_one_path():
+    """Every manifest data commit, locked or optimistic, is one stage
+    (ManifestTable._stage) followed by one publish (_publish_staged,
+    whose tail is _finalize_generation). A second
+    ``_finalize_generation(`` call site is a second commit path again:
+    the locked and optimistic pair whose back-read, contract checks
+    and touched derivation once branched inside it."""
+    sites = _table_call_sites("_finalize_generation")
+    assert len(sites) == 1, f"_finalize_generation call sites: {sites}"
+
+
+def test_generations_are_written_in_one_place():
+    """``_stage`` is the only place a manifest table writes a
+    generation. A second ``.write.partitionBy(`` in table.py is a
+    second copy of the write prologue (reserved ``_p_*`` names, ``''``
+    partition values), the copy the locked path once kept."""
+    writes = _table_call_sites(r"\.write\.partitionBy")
+    assert len(writes) <= 1, f".write.partitionBy( sites: {writes}"

@@ -390,7 +390,12 @@ def test_feed_stale_replay_swap_survives_a_fault_at_every_step(
 # --- manifest commit --------------------------------------------------------
 
 
-def test_manifest_publish_survives_a_fault_at_every_step(spark, tmp_path, faults):
+@pytest.mark.parametrize("optimistic", [False, True])
+def test_manifest_publish_survives_a_fault_at_every_step(
+    spark, tmp_path, faults, optimistic
+):
+    """The locked commit publishes a generation it staged in place; the
+    optimistic one also renames its staging in, so both are faulted."""
     upd = spark.createDataFrame(
         [(1, "a", "X1", "U"), (3, "b", "x3", "U")],
         "id int, pt string, v string, op string",
@@ -406,7 +411,9 @@ def test_manifest_publish_survives_a_fault_at_every_step(spark, tmp_path, faults
         )
 
     def merge(path):
-        merge_into_partitioned(spark, path, upd, ["id"], ["pt"], op_col="op")
+        merge_into_partitioned(
+            spark, path, upd, ["id"], ["pt"], op_col="op", optimistic=optimistic
+        )
 
     table(str(tmp_path / "clean"))
     merge(str(tmp_path / "clean"))

@@ -2260,8 +2260,15 @@ class TestR13ReviewFindings2:
             },
         )
         delta = df.limit(2).withColumn("v", F.lit(9.0))
+        touched = [
+            tuple(r) for r in delta.select("ts_day").distinct().collect()
+        ]
         with pytest.raises(ValueError, match="cannot change"):
-            alien._commit(delta, [], version=2)
+            alien.overwrite_partitions(delta, touched)
+        # the optimistic form of the same commit refuses too
+        with pytest.raises(ValueError, match="cannot change"):
+            alien.commit_staged(alien.stage_commit(delta, touched))
+        assert mt.current_version() == 1
         # a MATCHING spec on a fresh instance is fine (harmless)
         ok = ManifestTable(
             spark,
