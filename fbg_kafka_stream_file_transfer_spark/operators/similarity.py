@@ -25,7 +25,9 @@ def _rank_topk(scored: DataFrame, k: int) -> DataFrame:
     """Shared ranking tail of every top-k variant: rank on the cosine
     rounded to 9 dp with neighbor id as tie-break, emit it rounded to
     6 dp. This rounding contract is load-bearing for oracle parity
-    (queries/base.py) — one definition, used by all six search paths.
+    (queries/base.py) — one definition, called from two places: the
+    Catalyst core (:func:`_topk`, behind all seven Catalyst search
+    paths) and the numpy twin ``brute_force_topk_arrow``.
     Input: (query_id, neighbor_id, _cos)."""
     scored = scored.select(
         "query_id",
@@ -87,6 +89,116 @@ def lsh_bucketize(df: DataFrame, id_col: str, vec_col: str, planes: int = 4) -> 
     )
 
 
+def _vectors(
+    df: DataFrame,
+    id_col: str,
+    vec_col: str,
+    label_col: str | None = None,
+    planes: int | None = None,
+) -> DataFrame:
+    """The one vector projection of the search paths: ``(vid[, lbl], v
+    [, bucket], nrm)`` — ``lbl`` when ``label_col`` is given, the LSH
+    ``bucket`` when ``planes`` is. Norms are projected here, below any
+    join, so they're computed once per VECTOR, not once per candidate
+    pair."""
+    cols = [F.col(id_col).alias("vid")]
+    if label_col is not None:
+        cols.append(F.col(label_col).alias("lbl"))
+    vecs = df.select(*cols, as_double_array(F.col(vec_col)).alias("v"))
+    if planes is not None:
+        vecs = vecs.withColumn("bucket", lsh_bucket(F.col("v"), planes))
+    return vecs.withColumn("nrm", norm(F.col("v")))
+
+
+def _topk(
+    queries: DataFrame,
+    corpus: DataFrame,
+    k: int,
+    on: str | None = None,
+    exclude: str = "vid",
+    dedup: bool = False,
+) -> DataFrame:
+    """The one Catalyst cosine top-k: broadcast ``queries`` against
+    ``corpus`` (both ``_vectors``-shaped: ``vid``, ``v``, ``nrm``),
+    optionally equi-joined on the block key ``on`` (LSH bucket, IVF
+    cell), never pairing rows equal on ``exclude`` (``vid``: self;
+    ``lbl``: same label), and rank through :func:`_rank_topk`.
+    ``dedup`` drops repeated (query, neighbor) pairs — a query probing
+    several cells can meet one neighbor in more than one of them.
+
+    The exclusion sits INSIDE the join predicate, so no post-filter can
+    silently shrink k; the cosine is a single zip_with fold per pair,
+    aliased once so both roundings read it."""
+    q, c = F.broadcast(queries.alias("q")), corpus.alias("c")
+    cond = F.col(f"q.{exclude}") != F.col(f"c.{exclude}")
+    if on is not None:
+        cond = (F.col(f"q.{on}") == F.col(f"c.{on}")) & cond
+    cos = dot(F.col("q.v"), F.col("c.v")) / (F.col("q.nrm") * F.col("c.nrm"))
+    scored = c.join(q, cond).select(
+        F.col("q.vid").alias("query_id"),
+        F.col("c.vid").alias("neighbor_id"),
+        cos.alias("_cos"),
+    )
+    if dedup:
+        scored = scored.dropDuplicates(["query_id", "neighbor_id"])
+    return _rank_topk(scored, k)
+
+
+def _vector_topk(
+    df: DataFrame,
+    id_col: str,
+    vec_col: str,
+    query_filter: Column,
+    k: int,
+    label_col: str | None = None,
+    planes: int | None = None,
+) -> DataFrame:
+    """The four in-frame search paths: rows matching ``query_filter``
+    (over the ``_vectors`` columns) rank against the whole frame,
+    excluding same-label rows when ``label_col`` is given (else self)
+    and blocked by LSH bucket when ``planes`` is given."""
+    if planes is not None:
+        from ..sources.tables import ensure_parallelism
+
+        # bucket hashing, norms and the per-candidate dot products are
+        # CPU-bound map work; spread a few-split scan (no-op at scale)
+        df = ensure_parallelism(df)
+    vecs = _vectors(df, id_col, vec_col, label_col, planes)
+    return _topk(
+        vecs.filter(query_filter),
+        vecs,
+        k,
+        on=None if planes is None else "bucket",
+        exclude="vid" if label_col is None else "lbl",
+    )
+
+
+def _lowest_id_centroids(vecs: DataFrame, n_centroids: int) -> DataFrame:
+    """The deterministic, training-free IVF quantizer over ``_vectors``
+    rows: the ``n_centroids`` lowest-id vectors as a (cid, cv, cnrm)
+    table — the shape ``train_kmeans_centroids`` returns, and the rule
+    the oracle replicates."""
+    return vecs.orderBy("vid").limit(n_centroids).select(
+        F.col("vid").alias("cid"), F.col("v").alias("cv"), F.col("nrm").alias("cnrm")
+    )
+
+
+def _with_corpus_centroid(df: DataFrame, vec_col: str) -> DataFrame:
+    """``df`` plus the corpus centroid as a ``_centroid`` array column:
+    one ``posexplode`` + per-dimension partial aggregation (map-side
+    combine, O(dim) groups — a shuffle of dim rows per partition, NOT
+    of the corpus), re-assembled in dimension order and BROADCAST back
+    through a cross join."""
+    dims = df.select(F.posexplode(as_double_array(F.col(vec_col))).alias("pos", "v"))
+    cent = dims.groupBy("pos").agg(F.avg("v").alias("c"))
+    cent_arr = cent.agg(
+        F.transform(
+            F.array_sort(F.collect_list(F.struct("pos", "c"))), lambda s: s["c"]
+        ).alias("_centroid")
+    )
+    return df.crossJoin(F.broadcast(cent_arr))
+
+
 def brute_force_topk(
     df: DataFrame,
     id_col: str,
@@ -110,18 +222,7 @@ def brute_force_topk(
     VECTOR, not once per candidate pair; the cosine itself is a single
     zip_with fold per pair, aliased once so both roundings read it.
     """
-    vecs = df.select(
-        F.col(id_col).alias("vid"), as_double_array(F.col(vec_col)).alias("v")
-    ).withColumn("nrm", norm(F.col("v")))
-    queries = vecs.filter(query_filter)
-    q, c = F.broadcast(queries.alias("q")), vecs.alias("c")
-    cos = dot(F.col("q.v"), F.col("c.v")) / (F.col("q.nrm") * F.col("c.nrm"))
-    scored = c.join(q, F.col("q.vid") != F.col("c.vid")).select(
-        F.col("q.vid").alias("query_id"),
-        F.col("c.vid").alias("neighbor_id"),
-        cos.alias("_cos"),
-    )
-    return _rank_topk(scored, k)
+    return _vector_topk(df, id_col, vec_col, query_filter, k)
 
 
 def hard_negative_topk(
@@ -144,20 +245,7 @@ def hard_negative_topk(
     mining at corpus scale, run per LSH/IVF block first (the ANN paths)
     and apply the label filter inside the block join the same way.
     """
-    vecs = df.select(
-        F.col(id_col).alias("vid"),
-        F.col(label_col).alias("lbl"),
-        as_double_array(F.col(vec_col)).alias("v"),
-    ).withColumn("nrm", norm(F.col("v")))
-    queries = vecs.filter(query_filter)
-    q, c = F.broadcast(queries.alias("q")), vecs.alias("c")
-    cos = dot(F.col("q.v"), F.col("c.v")) / (F.col("q.nrm") * F.col("c.nrm"))
-    scored = c.join(q, F.col("q.lbl") != F.col("c.lbl")).select(
-        F.col("q.vid").alias("query_id"),
-        F.col("c.vid").alias("neighbor_id"),
-        cos.alias("_cos"),
-    )
-    return _rank_topk(scored, k)
+    return _vector_topk(df, id_col, vec_col, query_filter, k, label_col=label_col)
 
 
 def ann_lsh_topk(
@@ -174,29 +262,7 @@ def ann_lsh_topk(
     bucket — shuffle on a low-cardinality key; raise ``planes`` to keep
     buckets balanced as the corpus grows (expected bucket size n/2^planes).
     """
-    from ..sources.tables import ensure_parallelism
-
-    # bucket hashing, norms and the per-candidate dot products are
-    # CPU-bound map work; spread a few-split scan (no-op at scale)
-    vecs = (
-        ensure_parallelism(df).select(
-            F.col(id_col).alias("vid"),
-            as_double_array(F.col(vec_col)).alias("v"),
-        )
-        .withColumn("bucket", lsh_bucket(F.col("v"), planes))
-        .withColumn("nrm", norm(F.col("v")))
-    )
-    queries = vecs.filter(query_filter)
-    q, c = F.broadcast(queries.alias("q")), vecs.alias("c")
-    cos = dot(F.col("q.v"), F.col("c.v")) / (F.col("q.nrm") * F.col("c.nrm"))
-    scored = c.join(
-        q, (F.col("q.bucket") == F.col("c.bucket")) & (F.col("q.vid") != F.col("c.vid"))
-    ).select(
-        F.col("q.vid").alias("query_id"),
-        F.col("c.vid").alias("neighbor_id"),
-        cos.alias("_cos"),
-    )
-    return _rank_topk(scored, k)
+    return _vector_topk(df, id_col, vec_col, query_filter, k, planes=planes)
 
 
 def ann_hard_negative_topk(
@@ -216,30 +282,9 @@ def ann_hard_negative_topk(
     trade is ANN recall: a hard negative hashing to another bucket is
     missed, amplifiable with multi-table `plane_offset` families exactly
     like the dedup path."""
-    from ..sources.tables import ensure_parallelism
-
-    vecs = (
-        ensure_parallelism(df).select(
-            F.col(id_col).alias("vid"),
-            F.col(label_col).alias("lbl"),
-            as_double_array(F.col(vec_col)).alias("v"),
-        )
-        .withColumn("bucket", lsh_bucket(F.col("v"), planes))
-        .withColumn("nrm", norm(F.col("v")))
+    return _vector_topk(
+        df, id_col, vec_col, query_filter, k, label_col=label_col, planes=planes
     )
-    queries = vecs.filter(query_filter)
-    q, c = F.broadcast(queries.alias("q")), vecs.alias("c")
-    cos = dot(F.col("q.v"), F.col("c.v")) / (F.col("q.nrm") * F.col("c.nrm"))
-    scored = c.join(
-        q,
-        (F.col("q.bucket") == F.col("c.bucket"))
-        & (F.col("q.lbl") != F.col("c.lbl")),
-    ).select(
-        F.col("q.vid").alias("query_id"),
-        F.col("c.vid").alias("neighbor_id"),
-        cos.alias("_cos"),
-    )
-    return _rank_topk(scored, k)
 
 
 def train_kmeans_centroids(
@@ -330,15 +375,9 @@ def ivf_assign_cells(
     a tiny build side + a per-vector top-n_probe window keyed by vid —
     no all-pairs shuffle.
     """
-    vecs = df.select(
-        F.col(id_col).alias("vid"), as_double_array(F.col(vec_col)).alias("v")
-    ).withColumn("nrm", norm(F.col("v")))
+    vecs = _vectors(df, id_col, vec_col)
     cent = F.broadcast(
-        centroids
-        if centroids is not None
-        else vecs.orderBy("vid").limit(n_centroids).select(
-            F.col("vid").alias("cid"), F.col("v").alias("cv"), F.col("nrm").alias("cnrm")
-        )
+        centroids if centroids is not None else _lowest_id_centroids(vecs, n_centroids)
     )
     aff = dot(F.col("v"), F.col("cv")) / (F.col("nrm") * F.col("cnrm"))
     w = Window.partitionBy("vid").orderBy(F.col("_aff").desc(), F.col("cid"))
@@ -373,22 +412,7 @@ def ivf_topk(
                               centroids=centroids)
     probes = ivf_assign_cells(df, id_col, vec_col, n_centroids, n_probe=n_probe,
                               centroids=centroids)
-    queries = F.broadcast(
-        probes.filter(query_filter).select(
-            F.col("vid").alias("qid"), F.col("v").alias("qv"),
-            F.col("nrm").alias("qnrm"), "cid",
-        )
-    )
-    cos = dot(F.col("qv"), F.col("v")) / (F.col("qnrm") * F.col("nrm"))
-    scored = (
-        corpus.join(queries, "cid")
-        .filter(F.col("qid") != F.col("vid"))
-        .select(F.col("qid").alias("query_id"), F.col("vid").alias("neighbor_id"),
-                cos.alias("_cos"))
-        # a (query, neighbor) pair can surface via several probed cells
-        .dropDuplicates(["query_id", "neighbor_id"])
-    )
-    return _rank_topk(scored, k)
+    return _topk(probes.filter(query_filter), corpus, k, on="cid", dedup=True)
 
 
 def brute_force_topk_arrow(
@@ -487,12 +511,7 @@ def build_ivf_index(
     else:  # the deterministic lowest-id quantizer, materialized so the
         # SAME table is both stored and used for partitioning (never
         # re-derived separately — the index invariant)
-        vecs = df.select(
-            F.col(id_col).alias("vid"), as_double_array(F.col(vec_col)).alias("v")
-        ).withColumn("nrm", norm(F.col("v")))
-        cents = vecs.orderBy("vid").limit(n_centroids).select(
-            F.col("vid").alias("cid"), F.col("v").alias("cv"), F.col("nrm").alias("cnrm")
-        )
+        cents = _lowest_id_centroids(_vectors(df, id_col, vec_col), n_centroids)
     cents.write.mode("overwrite").parquet(f"{index_dir}/centroids")
     cents = df.sparkSession.read.parquet(f"{index_dir}/centroids")
     assigned = ivf_assign_cells(df, id_col, vec_col, n_centroids, n_probe=1,
@@ -522,37 +541,32 @@ def query_ivf_index(
     # contract): the collected rows feed both the static cell filter
     # and the broadcast join side — without this the centroid
     # crossJoin + window would run twice
-    assign = ivf_assign_cells(
-        queries_df, id_col, vec_col, n_probe=n_probe, centroids=cents
-    ).select(F.col("vid").alias("qid"), F.col("v").alias("qv"),
-             F.col("nrm").alias("qnrm"), "cid")
+    assign = ivf_assign_cells(queries_df, id_col, vec_col, n_probe=n_probe, centroids=cents)
     probe_rows = assign.collect()
     probes = spark.createDataFrame(probe_rows, assign.schema)
     cells = sorted({r.cid for r in probe_rows})
     idx = spark.read.parquet(f"{index_dir}/vectors").filter(F.col("cid").isin(cells))
-    cos = dot(F.col("qv"), F.col("v")) / (F.col("qnrm") * F.col("nrm"))
-    scored = (
-        F.broadcast(probes).join(idx, "cid")
-        .filter(F.col("qid") != F.col("vid"))
-        .select(F.col("qid").alias("query_id"), F.col("vid").alias("neighbor_id"),
-                cos.alias("_cos"))
-        # a (query, neighbor) pair can surface via several probed cells
-        .dropDuplicates(["query_id", "neighbor_id"])
-    )
-    return _rank_topk(scored, k)
+    return _topk(probes, idx, k, on="cid", dedup=True)
+
+
+#: The small file beside an ANN index's data that records the LSH
+#: ``planes`` it was bucketed with (underscore-named: Spark's parquet
+#: listing skips it).
+_ANN_PLANES_FILE = "_lsh_planes"
 
 
 def build_ann_index(df: DataFrame, id_col: str, vec_col: str, index_dir: str,
                     planes: int = 8) -> None:
     """Persist an LSH-bucketed vector index: (bucket, vid, v, nrm) parquet
     partitioned by bucket — queries read only their probed buckets
-    (partition pruning does the cell selection)."""
-    vecs = (
-        df.select(F.col(id_col).alias("vid"), as_double_array(F.col(vec_col)).alias("v"))
-        .withColumn("bucket", lsh_bucket(F.col("v"), planes))
-        .withColumn("nrm", norm(F.col("v")))
-    )
+    (partition pruning does the cell selection). ``planes`` is recorded
+    beside the data, written after it, so ``query_ann_index`` buckets
+    its queries with the same hyperplanes."""
+    from .publish import publish_file
+
+    vecs = _vectors(df, id_col, vec_col, planes=planes)
     vecs.write.mode("overwrite").partitionBy("bucket").parquet(index_dir)
+    publish_file(df.sparkSession, f"{index_dir}/{_ANN_PLANES_FILE}", str(planes))
 
 
 def query_ann_index(
@@ -561,34 +575,28 @@ def query_ann_index(
     id_col: str,
     vec_col: str,
     k: int = 3,
-    planes: int = 8,
 ) -> DataFrame:
     """Top-k neighbors of each query vector against a persisted index.
 
-    The query side computes its own bucket and equi-joins the index on
-    it; with the index partitioned by bucket, scans prune to the probed
-    cells. Incremental twin of ``ann_lsh_topk`` — the corpus lives on
-    disk, queries arrive in batches.
+    The query side computes its own bucket, with the ``planes`` the
+    index was built with (read from the index), and equi-joins the
+    index on it; with the index partitioned by bucket, scans prune to
+    the probed cells. Incremental twin of ``ann_lsh_topk`` — the corpus
+    lives on disk, queries arrive in batches. An index without its
+    recorded planes is refused: bucketing queries with other
+    hyperplanes than the corpus silently returns nothing.
     """
+    from .table import _read_small_file
+
     spark = queries_df.sparkSession
-    idx = spark.read.parquet(index_dir)
-    q = (
-        queries_df.select(
-            F.col(id_col).alias("qid"), as_double_array(F.col(vec_col)).alias("qv")
+    planes = _read_small_file(spark, f"{index_dir}/{_ANN_PLANES_FILE}")
+    if planes is None:
+        raise ValueError(
+            f"{index_dir} does not record the LSH planes it was built with"
+            f" ({_ANN_PLANES_FILE}); rebuild it with build_ann_index"
         )
-        .withColumn("bucket", lsh_bucket(F.col("qv"), planes))
-        .withColumn("qnrm", norm(F.col("qv")))
-    )
-    cos = dot(F.col("qv"), F.col("v")) / (F.col("qnrm") * F.col("nrm"))
-    scored = (
-        F.broadcast(q).join(idx, "bucket")
-        .filter(F.col("qid") != F.col("vid"))
-        .select(
-            F.col("qid").alias("query_id"), F.col("vid").alias("neighbor_id"),
-            cos.alias("_cos"),
-        )
-    )
-    return _rank_topk(scored, k)
+    queries = _vectors(queries_df, id_col, vec_col, planes=int(planes))
+    return _topk(queries, spark.read.parquet(index_dir), k, on="bucket")
 
 
 def centroid_outliers(
@@ -616,18 +624,11 @@ def centroid_outliers(
     yields IEEE ``-0.0``, which some engines/format paths render as
     "-0" and others as "0" — adding positive zero canonicalizes both
     to ``+0.0`` (the mirrored oracle SQL does the same)."""
-    dims = df.select(F.posexplode(as_double_array(F.col(vec_col))).alias("pos", "v"))
-    cent = dims.groupBy("pos").agg(F.avg("v").alias("c"))
-    cent_arr = cent.agg(
-        F.transform(
-            F.array_sort(F.collect_list(F.struct("pos", "c"))), lambda s: s["c"]
-        ).alias("centroid")
-    )
-    out = df.crossJoin(F.broadcast(cent_arr))
+    out = _with_corpus_centroid(df, vec_col)
     v = as_double_array(F.col(vec_col))
     cos = (
         F.round(
-            dot(v, F.col("centroid")) / (norm(v) * norm(F.col("centroid"))), round_dp
+            dot(v, F.col("_centroid")) / (norm(v) * norm(F.col("_centroid"))), round_dp
         )
         + F.lit(0.0)  # -0.0 → +0.0 (see docstring)
     )
@@ -662,9 +663,7 @@ def semantic_contamination(
 
     Returns ``(id_col, nearest_eval_id, max_cos, contaminated)``.
     """
-    vecs = df.select(
-        F.col(id_col).alias("vid"), as_double_array(F.col(vec_col)).alias("v")
-    ).withColumn("nrm", norm(F.col("v")))
+    vecs = _vectors(df, id_col, vec_col)
     ev = F.broadcast(
         vecs.filter(eval_filter).select(
             F.col("vid").alias("eid"),
@@ -812,14 +811,7 @@ def center_vectors(
     # inherits the scan's partitioning (the broadcast cross join adds
     # no exchange), so a 1-task source would run it on one core
     df = ensure_parallelism(df.filter(F.col(vec_col).isNotNull()))
-    dims = df.select(F.posexplode(as_double_array(F.col(vec_col))).alias("pos", "v"))
-    cent = dims.groupBy("pos").agg(F.avg("v").alias("c"))
-    cent_arr = cent.agg(
-        F.transform(
-            F.array_sort(F.collect_list(F.struct("pos", "c"))), lambda s: s["c"]
-        ).alias("_centroid")
-    )
-    out = df.crossJoin(F.broadcast(cent_arr))
+    out = _with_corpus_centroid(df, vec_col)
     v = as_double_array(F.col(vec_col))
     # STAGED evaluation: inlining `diff`/`dnorm` re-evaluates the O(dim)
     # diff inside norm() AND inside the per-component transform lambda

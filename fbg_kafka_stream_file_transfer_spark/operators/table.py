@@ -55,6 +55,7 @@ from __future__ import annotations
 import datetime as _pydatetime
 import decimal as _pydecimal
 import json
+import logging
 import math as _pymath
 import re
 import uuid
@@ -68,6 +69,8 @@ from ..session import ENGINE_SQL_CONF, scoped_conf
 from .publish import _best_effort_delete, _hadoop_fs, discard, publish_file
 from .publish import _write_small_file, replace_dir  # noqa: F401 (re-export)
 from .scale import _partition_value_matches
+
+log = logging.getLogger(__name__)
 
 _MANIFEST_DIR = "_manifests"
 _POINTER = "_latest"
@@ -270,7 +273,7 @@ def _delete_lock_if_token(spark, fs, lock_path: str, jlock, token: str) -> None:
         if current is not None and json.loads(current).get("token") == token:
             fs.delete(jlock, False)
     except Exception:  # noqa: BLE001 — best-effort by contract
-        pass
+        log.warning("best-effort release of lock %s failed", lock_path, exc_info=True)
 
 
 def force_unlock(spark: SparkSession, path: str) -> bool:
@@ -6405,6 +6408,12 @@ class ManifestTable:
                             if "/" in n and not _is_abs_dir(n):
                                 referenced.add(n.split("/")[1])
             except Exception:  # noqa: BLE001 — GC never fails a commit
+                log.warning(
+                    "GC of %s declined: manifest v%d is unreadable",
+                    self.path,
+                    v,
+                    exc_info=True,
+                )
                 return None
         plan = {
             "expired_versions": [
@@ -6438,6 +6447,11 @@ class ManifestTable:
                     if re.match(r"^g\d{8}$", name) and name not in referenced:
                         plan["unreferenced_generations"].append(name)
         except Exception:  # noqa: BLE001 — same decline contract
+            log.warning(
+                "GC of %s declined: listing its files failed",
+                self.path,
+                exc_info=True,
+            )
             return None
         plan["orphan_shards"].sort()
         plan["unreferenced_generations"].sort()
@@ -6484,4 +6498,9 @@ class ManifestTable:
                 fs.delete(jg, True)
         except Exception:  # noqa: BLE001 — orphans are invisible via
             # the manifest; the next commit's GC retries
-            pass
+            log.warning(
+                "GC sweep of %s failed after version %d committed",
+                self.path,
+                version,
+                exc_info=True,
+            )

@@ -30,9 +30,13 @@ contract).
 
 from __future__ import annotations
 
+import logging
+
 from pyspark.sql import DataFrame, SparkSession
 
 from ..operators.scale import merge_into_partitioned
+
+log = logging.getLogger(__name__)
 
 
 def start_changelog_merge_sink(
@@ -261,6 +265,69 @@ def start_changelog_merge_sink(
             return "foreign"
         return "absent"  # only commit markers: a torn bootstrap
 
+    def _sweep(what: str, every: int, batch_id: int, run) -> None:
+        """One post-merge maintenance sweep, armed on every
+        ``every``-th batch. An existing hive table keeps its layout
+        regardless of the ``layout`` arg, so the sweep refuses it
+        LOUDLY rather than silently never sweeping. Past that the
+        sweep is best-effort, like Delta's post-commit auto optimize:
+        the batch's MERGE already committed, so a transient failure
+        (lock contention with an external maintenance op, a mid-sweep
+        GC race) must not kill the streaming query — it logs, and a
+        later armed batch retries (retention and compaction are
+        eventual)."""
+        if (batch_id + 1) % every:
+            return
+        from ..operators.table import is_manifest_table
+
+        if not is_manifest_table(spark, path):
+            raise ValueError(
+                f"{what} requires a manifest table, but {path} is hive-layout"
+            )
+        try:
+            run()
+        except Exception:  # noqa: BLE001 — best-effort contract
+            log.warning(
+                "%s sweep failed after batch %s of %s (merge already"
+                " committed; next armed batch retries)",
+                what,
+                batch_id,
+                path,
+                exc_info=True,
+            )
+
+    def _ttl_delete() -> None:
+        from ..operators.table import ManifestTable
+
+        mt = ManifestTable(spark, path)
+        ext = mt.stats_extent(ts_col)
+        if ext is not None and ext[1] is not None:
+            import datetime as _dt
+
+            hi = ext[1]
+            if isinstance(hi, _dt.datetime):
+                cutoff = hi - _dt.timedelta(seconds=ttl_keep)
+            else:
+                cutoff = hi - ttl_keep
+            mt.delete_where(
+                [(ts_col, "<", cutoff)],
+                lock_stale_after_seconds=lock_stale_after_seconds,
+            )
+
+    def _compact() -> None:
+        from ..operators.table import ManifestTable
+
+        # the sink's lease config threads through so a crashed external
+        # holder's stale lock cannot wedge the sweep while merges break
+        # it (external review r13)
+        ManifestTable(spark, path).compact(
+            min_files=compact_min_files,
+            min_carried=compact_min_carried,
+            target_records_per_file=compact_target_records_per_file,
+            cluster_by=compact_cluster_by,
+            lock_stale_after_seconds=lock_stale_after_seconds,
+        )
+
     def apply(batch_df: DataFrame, batch_id: int) -> None:
         state = _table_state()
         if state == "foreign":
@@ -352,90 +419,10 @@ def start_changelog_merge_sink(
             retain_versions=retain_versions,
             schema_evolution=schema_evolution,
         )
-        if ttl_keep is not None and (batch_id + 1) % ttl_delete_every == 0:
-            from ..operators.table import ManifestTable, is_manifest_table
-
-            if not is_manifest_table(spark, path):
-                # same loud-misconfiguration contract as auto-compaction
-                raise ValueError(
-                    f"ttl_keep requires a manifest table, but"
-                    f" {path} is hive-layout"
-                )
-            # best-effort like auto-compaction: the merge already
-            # committed; a transient sweep failure logs and a later
-            # armed batch retries (retention is eventual)
-            try:
-                mt = ManifestTable(spark, path)
-                ext = mt.stats_extent(ts_col)
-                if ext is not None and ext[1] is not None:
-                    import datetime as _dt
-
-                    hi = ext[1]
-                    if isinstance(hi, _dt.datetime):
-                        cutoff = hi - _dt.timedelta(seconds=ttl_keep)
-                    else:
-                        cutoff = hi - ttl_keep
-                    mt.delete_where(
-                        [(ts_col, "<", cutoff)],
-                        lock_stale_after_seconds=(
-                            lock_stale_after_seconds
-                        ),
-                    )
-            except Exception:  # noqa: BLE001 — best-effort contract
-                import logging
-
-                logging.getLogger(__name__).warning(
-                    "TTL delete sweep failed after batch %s of %s"
-                    " (merge already committed; next armed batch"
-                    " retries)",
-                    batch_id,
-                    path,
-                    exc_info=True,
-                )
-        if (
-            compact_min_files is not None
-            or compact_min_carried is not None
-        ) and (batch_id + 1) % compact_every == 0:
-            from ..operators.table import ManifestTable, is_manifest_table
-
-            if not is_manifest_table(spark, path):
-                # an existing hive table keeps its layout regardless
-                # of the `layout` arg — auto-compaction must fail
-                # LOUDLY, not silently never sweep
-                raise ValueError(
-                    f"auto-compaction requires a manifest table, but"
-                    f" {path} is hive-layout"
-                )
-            # best-effort, like Delta's post-commit auto optimize: the
-            # batch's MERGE already committed, so a transient sweep
-            # failure (lock contention with an external maintenance
-            # op, a mid-sweep GC race) must not kill the streaming
-            # query — log and let a later batch's sweep retry. Only
-            # the misconfiguration above stays loud. The sink's lease
-            # config threads through so a crashed external holder's
-            # stale lock cannot wedge the sweep while merges break it
-            # (external review r13).
-            try:
-                ManifestTable(spark, path).compact(
-                    min_files=compact_min_files,
-                    min_carried=compact_min_carried,
-                    target_records_per_file=(
-                        compact_target_records_per_file
-                    ),
-                    cluster_by=compact_cluster_by,
-                    lock_stale_after_seconds=lock_stale_after_seconds,
-                )
-            except Exception:  # noqa: BLE001 — best-effort contract
-                import logging
-
-                logging.getLogger(__name__).warning(
-                    "auto-compaction sweep failed after batch %s of"
-                    " %s (merge already committed; next armed batch"
-                    " retries)",
-                    batch_id,
-                    path,
-                    exc_info=True,
-                )
+        if ttl_keep is not None:
+            _sweep("ttl_keep", ttl_delete_every, batch_id, _ttl_delete)
+        if compact_min_files is not None or compact_min_carried is not None:
+            _sweep("auto-compaction", compact_every, batch_id, _compact)
 
     return (
         stream.writeStream.foreachBatch(apply)

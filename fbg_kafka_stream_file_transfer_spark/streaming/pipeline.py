@@ -64,8 +64,8 @@ class PipelineResult:
         for df in self._cached:
             try:
                 df.unpersist()
-            except Exception:
-                pass
+            except Exception:  # noqa: BLE001 — best-effort by contract
+                log.warning("unpersist of a cached route frame failed", exc_info=True)
 
 
 def process_envelope_batch(

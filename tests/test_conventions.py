@@ -320,3 +320,28 @@ def test_generations_are_written_in_one_place():
     partition values), the copy the locked path once kept."""
     writes = _table_call_sites(r"\.write\.partitionBy")
     assert len(writes) <= 1, f".write.partitionBy( sites: {writes}"
+
+
+def test_vector_search_ranks_in_one_place():
+    """Every Catalyst cosine top-k in operators/similarity.py runs
+    through one core: one vector projection (``_vectors``, the only
+    ``(vid, v, nrm)`` builder) and one scoring tail (``_topk``, the
+    only Catalyst caller of ``_rank_topk``; the numpy twin
+    ``brute_force_topk_arrow`` is the other). A third ``_rank_topk(``
+    call or a second ``.withColumn("nrm", norm(`` is a search path
+    rebuilding the projection, broadcast side, cosine and exclusion
+    join by hand again — the seven copies a per-partition top-k would
+    otherwise have to be written into."""
+    import re
+    from pathlib import Path
+
+    src = (
+        Path(__file__).resolve().parent.parent
+        / "fbg_kafka_stream_file_transfer_spark"
+        / "operators"
+        / "similarity.py"
+    ).read_text()
+    ranks = re.findall(r"(?<!def )\b_rank_topk\(", src)
+    norms = src.count('.withColumn("nrm", norm(')
+    assert len(ranks) <= 2, f"_rank_topk( call sites: {len(ranks)}"
+    assert norms <= 2, f'.withColumn("nrm", norm( sites: {norms}'

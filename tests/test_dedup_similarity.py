@@ -326,13 +326,52 @@ def test_persisted_ann_index(spark, tmp_path):
     queries = emb.filter(F.col("vec_id") < 6)
     got = {
         tuple(r)
-        for r in query_ann_index(queries, idx, "vec_id", "embedding", k=3, planes=4).collect()
+        for r in query_ann_index(queries, idx, "vec_id", "embedding", k=3).collect()
     }
     inline = {
         tuple(r)
         for r in ann_lsh_topk(emb, "vec_id", "embedding", F.col("vid") < 6, k=3, planes=4).collect()
     }
     assert got == inline
+
+
+def test_ann_index_queries_with_the_planes_it_was_built_with(spark, tmp_path, sf_dir):
+    """An index built with non-default ``planes`` and queried without
+    naming them buckets its queries with the index's own hyperplanes:
+    the result equals the inline LSH ANN at those planes (it was empty
+    when the query side assumed the default). An index that does not
+    record its planes is refused with a rebuild instruction."""
+    import os
+
+    import pytest
+
+    from fbg_kafka_stream_file_transfer_spark.operators.similarity import (
+        ann_lsh_topk,
+        build_ann_index,
+        query_ann_index,
+    )
+    from fbg_kafka_stream_file_transfer_spark.sources.tables import load_table
+
+    emb = load_table(spark, sf_dir, "embeddings")
+    idx = str(tmp_path / "ann_idx")
+    build_ann_index(emb, "vec_id", "embedding", idx, planes=4)
+
+    got = sorted(
+        tuple(r)
+        for r in query_ann_index(emb.filter(F.col("vec_id") < 6), idx, "vec_id", "embedding")
+        .collect()
+    )
+    inline = sorted(
+        tuple(r)
+        for r in ann_lsh_topk(emb, "vec_id", "embedding", F.col("vid") < 6, planes=4).collect()
+    )
+    assert got == inline and len(got) == 18
+
+    for name in os.listdir(idx):
+        if "lsh_planes" in name:
+            os.remove(os.path.join(idx, name))
+    with pytest.raises(ValueError, match="rebuild it with build_ann_index"):
+        query_ann_index(emb, idx, "vec_id", "embedding")
 
 
 def test_ngram_decontaminate_flags_only_overlapping_docs(spark):

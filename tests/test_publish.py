@@ -469,3 +469,51 @@ def test_failing_dlq_leg_logs_and_other_legs_land(spark, tmp_path, caplog, monke
     for leg_dir, n in (("incoming", 1), ("processed", 1), ("retry", 1)):
         assert spark.read.parquet(f"{out}/{leg_dir}").count() == n, leg_dir
     assert not os.path.exists(f"{out}/failed")
+
+
+def test_failing_gc_sweep_logs_and_the_commit_stands(spark, tmp_path, caplog, monkeypatch):
+    """A manifest commit's GC is best-effort: a filesystem delete that
+    raises inside ``_gc`` must not fail the commit, and must leave a
+    WARNING carrying the exception instead of vanishing."""
+    from fbg_kafka_stream_file_transfer_spark.operators import table
+
+    path = str(tmp_path / "t")
+    mt = ManifestTable(spark, path)
+    mt.create(spark.createDataFrame([(1, 1), (2, 2)], "id long, p int"), ["p"])
+
+    real_fs, real_gc = table._hadoop_fs, ManifestTable._gc
+
+    class _NoDelete:
+        def __init__(self, fs):
+            self._fs = fs
+
+        def __getattr__(self, name):
+            if name == "delete":
+                def delete(*args):
+                    raise IOError("injected delete failure")
+
+                return delete
+            return getattr(self._fs, name)
+
+    def no_delete_fs(spark_, p):
+        fs, jpath = real_fs(spark_, p)
+        return _NoDelete(fs), jpath
+
+    def gc_with_failing_deletes(self, *args):
+        with monkeypatch.context() as m:
+            m.setattr(table, "_hadoop_fs", no_delete_fs)
+            real_gc(self, *args)
+
+    monkeypatch.setattr(ManifestTable, "_gc", gc_with_failing_deletes)
+    with caplog.at_level(logging.WARNING, logger=table.__name__):
+        mt.overwrite_partitions(
+            spark.createDataFrame([(3, 1)], "id long, p int"), [(1,)], retain_versions=1
+        )
+
+    assert mt.current_version() == 2
+    assert _rows(mt.read(), "id", "p") == [(2, 2), (3, 1)]
+    assert os.path.exists(f"{path}/_manifests/v00000001.json")  # the sweep failed
+    recs = [r for r in caplog.records if r.levelno == logging.WARNING and r.exc_info]
+    assert any("injected delete failure" in str(r.exc_info[1]) for r in recs), [
+        r.getMessage() for r in caplog.records
+    ]
